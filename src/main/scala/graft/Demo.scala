@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Messages
 import graft.sources.Enrichment
-import graft.streaming.Ingest
+import graft.streaming.{ConsistentState, GraftApp}
 import graft.views.BmpViews
 
 /** End-to-end walkthrough of the reference user's workflow on this
@@ -45,20 +45,23 @@ object Demo {
         "2024-01-01 00:00:02.000000").mkString("\t")
     ).toDF("line"))
 
-    val state = s"$dir/rib"; val log = s"$dir/rib_log"
+    val conf = GraftApp.Conf(s"$dir/state"); val log = s"${conf.root}/ip_rib_log"
     def prefixLine(hash: String, pfx: String, len: Int, ts: String, wd: Boolean) =
       s"$hash\tp1\ta1\t1\t3356\t$pfx\t$len\t$ts\t$wd\t0\t\t1\t1"
-    // advertise 2 prefixes, then withdraw one — two micro-batches
-    Ingest.replayUnicastPrefix(spark, Seq(
+    def prefixBatch(lines: String*) = lines.toDF("line")
+      .select(lit(GraftApp.TopicPrefix + "unicast_prefix").as("topic"), col("line"))
+    // advertise 2 prefixes, then withdraw one — two micro-batches through
+    // the deployed write path
+    GraftApp.processBatch(prefixBatch(
       prefixLine("h1", "198.51.100.0", 24, "2024-01-01 00:00:03.000000", wd = false),
-      prefixLine("h2", "203.0.113.0", 24, "2024-01-01 00:00:03.500000", wd = false))
-      .toDF("line"), state, log)
-    Ingest.replayUnicastPrefix(spark, Seq(
-      prefixLine("h2", "203.0.113.0", 24, "2024-01-01 00:05:00.000000", wd = true))
-      .toDF("line"), state, log)
+      prefixLine("h2", "203.0.113.0", 24, "2024-01-01 00:00:03.500000", wd = false)),
+      0L, conf)
+    GraftApp.processBatch(prefixBatch(
+      prefixLine("h2", "203.0.113.0", 24, "2024-01-01 00:05:00.000000", wd = true)),
+      1L, conf)
 
     // -- 2. register the reporting surface ------------------------------
-    val rib = Ingest.readState(spark, state).get
+    val rib = ConsistentState.readConsistent(spark, conf.root, Seq("ip_rib"))("ip_rib")
     val infoAsn = Seq((65010L, "Transit A Inc")).toDF("asn", "as_name")
     BmpViews.registerAll(rib, peers, attrs, routers, infoAsn,
       ribLog = Some(spark.read.parquet(log)))

@@ -3,65 +3,18 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Bucketed state-table layout — the storage side of the 100 TB merge
-  * design.
+/** Changed-bucket state-table layout — the storage side of the 100 TB
+  * merge design.
   *
-  * The reference leans on btree PKs for its upserts; the columnar
-  * equivalent is hash-bucketing the snapshot by the merge key so that
-  * (a) the nightly/continuous merge joins state⋈updates shuffle ONLY
-  * the update side — the big snapshot is read pre-partitioned — and
-  * (b) repeated merges reuse the same layout. Spark bucketing
-  * (`bucketBy` + `saveAsTable`) records the hash partitioning in the
-  * catalog; Catalyst then elides the Exchange on the bucketed side(s)
-  * of joins/aggregations over the bucket keys.
+  * The reference's `ON CONFLICT` upserts touch only conflicting rows.
+  * The columnar equivalent: the snapshot is directory-partitioned by a
+  * hash bucket of the merge key, updates are hashed with the same
+  * function, and a merge (a) reads ONLY the partitions holding updated
+  * keys (partition pruning at the scan) and (b) swaps ONLY those
+  * directories. Untouched bucket files are never opened or rewritten —
+  * write volume is ∝ (touched buckets) ≈ update spread, not state size.
   */
 object StateTables {
-
-  /** Write `df` as a bucketed catalog table (overwrite). */
-  def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-                    numBuckets: Int): Unit =
-    df.write
-      .mode("overwrite")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*) // managed table under spark.sql.warehouse.dir
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Merge updates into a bucketed state table in place: because the
-    * state side is bucketed on the keys, the full-outer merge join reads
-    * it without an Exchange; only `updates` shuffles. The result is
-    * written back bucketed for the next merge.
-    */
-  def mergeIntoBucketed(spark: SparkSession, table: String, updates: DataFrame,
-                        policy: MergeOps.MergePolicy, numBuckets: Int): Unit = {
-    val current = spark.table(table)
-    val latest  = MergeOps.dedupToLatest(updates, policy.keys, policy.orderBy)
-    val next    = MergeOps.upsert(current, latest, policy)
-    val tmp     = table + "_next"
-    writeBucketed(next, tmp, policy.keys, numBuckets)
-    // swap via rename-aside: catalog renames are not atomic as a pair,
-    // so between the two RENAMEs the well-known name briefly does not
-    // exist and a reader (or a crash) in that window sees a missing
-    // table. State is always recoverable — the full pre-merge snapshot
-    // survives as `<table>_old` and the merged one as `<table>_next`;
-    // recovery = rename whichever exists back to `table`.
-    val old = table + "_old"
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-    spark.sql(s"ALTER TABLE $table RENAME TO $old")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    spark.sql(s"DROP TABLE IF EXISTS $old")
-  }
-
-  // ---- changed-bucket-only merge --------------------------------------
-  // The catalog-bucketed path above still REWRITES the whole snapshot
-  // per merge — O(state) write amplification per batch, the reference's
-  // `ON CONFLICT` touches only conflicting rows. The layout below gets
-  // the columnar equivalent: the snapshot is directory-partitioned by a
-  // hash bucket of the merge key, updates are hashed with the same
-  // function, and a merge (a) reads ONLY the partitions holding updated
-  // keys (partition pruning at the scan) and (b) swaps ONLY those
-  // directories. Untouched bucket files are never opened or rewritten —
-  // write volume is ∝ (touched buckets) ≈ update spread, not state size.
 
   /** The bucket partition function: pmod(hash(keys), numBuckets) —
     * identical on the state and update sides by construction.
@@ -79,9 +32,10 @@ object StateTables {
     df.withColumn("__bucket", bucketId(keys, numBuckets))
       .write.mode("overwrite").partitionBy("__bucket").parquet(path)
     // after the data write: mode-overwrite deletes the whole root first
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    writeNumBucketsMarker(fs, path, numBuckets)
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val marker = new org.apache.hadoop.fs.Path(path, "_NUM_BUCKETS")
+    replacePointerFile(marker.getFileSystem(conf), conf, marker,
+      numBuckets.toString.getBytes)
   }
 
   /** Atomically replace the tiny pointer/manifest file at `dst` so a
@@ -143,16 +97,6 @@ object StateTables {
     * merge; a legacy layout without the marker is grandfathered by
     * writing the caller's value (trusting it once).
     */
-  private def writeNumBucketsMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                    path: String, numBuckets: Int): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(path, "_NUM_BUCKETS.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(numBuckets.toString.getBytes) finally out.close()
-    val marker = new org.apache.hadoop.fs.Path(path, "_NUM_BUCKETS")
-    fs.delete(marker, false)
-    if (!fs.rename(tmp, marker)) sys.error(s"failed to commit $marker")
-  }
-
   private def checkNumBuckets(fs: org.apache.hadoop.fs.FileSystem,
                               path: String, numBuckets: Int): Unit = {
     val marker = new org.apache.hadoop.fs.Path(path, "_NUM_BUCKETS")
@@ -163,7 +107,8 @@ object StateTables {
         s"bucket layout at $path was written with numBuckets=$recorded but this " +
           s"merge was called with $numBuckets — merging would duplicate every " +
           "updated key; re-bucket the snapshot (writeBucketPartitioned) to change the count")
-    } else writeNumBucketsMarker(fs, path, numBuckets) // grandfather pre-marker layouts
+    } else // grandfather pre-marker layouts
+      replacePointerFile(fs, fs.getConf, marker, numBuckets.toString.getBytes)
   }
 
   /** Merge updates into a bucket-partitioned snapshot rewriting ONLY
@@ -181,8 +126,8 @@ object StateTables {
     * the NEXT merge restores any bucket a crash left parked — combined
     * with the idempotent merge, a replayed batch converges with no row
     * loss. Cross-bucket atomicity (a reader seeing half-swapped state)
-    * still needs a commit pointer like
-    * [[graft.streaming.Ingest.mergeBatch]]'s versioned `_CURRENT`.
+    * still needs a commit pointer like the versioned tables'
+    * [[graft.streaming.ConsistentState]] manifest.
     *
     * With `logPath`, the CDC rows of the merge ([[MergeOps.upsertWithLog]])
     * are written before the swap — batchId-keyed partitions make a
@@ -196,7 +141,7 @@ object StateTables {
     * a CRASHED run of this same merge — two concurrent merges on one
     * path would overwrite each other's stage and interleave park/move
     * renames, corrupting buckets. This matches the deployment shape:
-    * [[graft.streaming.Ingest.startBucketed]] calls this from
+    * [[graft.streaming.GraftApp.processBatch]] calls this from
     * `foreachBatch`, which Structured Streaming serializes per query
     * (one driver, one batch at a time). Running two streaming queries
     * (or a manual job beside one) against the same state path needs
@@ -262,7 +207,9 @@ object StateTables {
     // dst or parked — recoverSwap restores parked ones on the
     // next merge, and the replayed (idempotent) batch converges.
     swapStagedDirs(fs, stage, path, touched.map(b => s"__bucket=$b"))
-    if (!hasState) writeNumBucketsMarker(fs, path, numBuckets) // bootstrap fixes the layout's identity
+    if (!hasState) // bootstrap fixes the layout's identity
+      replacePointerFile(fs, conf, new HPath(path, "_NUM_BUCKETS"),
+        numBuckets.toString.getBytes)
     touched
   }
 

@@ -27,9 +27,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * construction: either the reader resolved before the swap (all tables
   * at N) or after (all at N+1).
   *
-  * Crash model (same discipline as [[Ingest.mergeBatch]]):
-  * staging re-runs overwrite their own `v` directory (idempotent merge
-  * ⇒ identical content), the pointer swap is atomic, and pruning runs
+  * Crash model ([[GraftApp.processBatch]] replays a crashed micro-batch
+  * under its original batch id): staging re-runs overwrite their own
+  * `v` directory (idempotent merge ⇒ identical content), the pointer
+  * swap is atomic, and pruning runs
   * only after commit, keeping `keepVersions` per table so in-flight
   * readers of recent snapshots survive. A crash between stage and
   * commit leaves `_CURRENT` untouched — the replayed batch stages over

@@ -34,7 +34,7 @@ import graft.views.BmpViews
   * versioned snapshots for everything (atomic cross-table reads; write
   * amplification O(state) per batch — the reference-scale default), or
   * changed-bucket layout ([[StateTables.mergeChangedBuckets]]) for the
-  * four RIB-scale tables (write ∝ update spread — the 100 TB regime;
+  * five RIB-scale tables (write ∝ update spread — the 100 TB regime;
   * inventory tables stay versioned+consistent, and the rib trades the
   * cross-table manifest for bounded writes, converging a batch behind).
   *
@@ -229,8 +229,8 @@ object GraftApp {
       // -- the ONE commit point ----------------------------------------
       txn.commit(conf.keepVersions)
 
-      // bucketed-regime housekeeping, serialized inside the batch like
-      // Ingest.startBucketed's hook (single-writer contract)
+      // bucketed-regime housekeeping, serialized inside the batch so it
+      // never races the merge's _stage/_old dirs (see Ingest.maintain)
       if (conf.bucketedRib.isDefined && conf.maintenanceEvery > 0 &&
           batchId > 0 && batchId % conf.maintenanceEvery == 0)
         VersionedRib.foreach { t =>

@@ -2,18 +2,14 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.model.Messages
 import graft.operators.MergeOps
 import graft.operators.MergeOps.MergePolicy
 
-/** Streaming ingest — the Spark-native shape of the reference's
-  * Kafka-consumer write path (SURVEY.md §3.1):
-  *
-  * `readStream(kafka, subscribePattern) → per-topic TSV parse →
-  *  repartition(peer key) → dedup-to-latest → keyed merge w/ CDC →
-  *  snapshot + append-log sinks` inside `foreachBatch`.
+/** The per-table pieces of the reference's Kafka-consumer write path
+  * (SURVEY.md §3.1) that [[GraftApp.processBatch]] composes into one
+  * micro-batch: the Kafka decode seam, the per-table merge policies,
+  * the trigger cascades, and CDC log maintenance.
   *
   * The reference's thread/batching machinery maps onto micro-batches:
   * `batch_time_millis`=300ms → `Trigger.ProcessingTime`; the writer's
@@ -129,140 +125,6 @@ object Ingest {
       col("value").cast("string").as("line"),
       col("timestamp").as("kafka_ts"))
 
-  // ---- versioned snapshot state ---------------------------------------
-  // Each merge writes the next snapshot to <statePath>_v<N> and then
-  // atomically swaps a tiny _CURRENT pointer file — one snapshot write
-  // per batch (never a write + copy-back), readers always see a complete
-  // version, and the previous version remains for time travel until
-  // pruned. This is the snapshot/commit-pointer pattern of table formats
-  // (Delta/Iceberg) reduced to its essentials.
-
-  private def stateFs(spark: SparkSession, statePath: String) =
-    new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Current committed version, if any. The pointer lives on the SAME
-    * filesystem as the snapshot (Hadoop FS API, not java.nio) — a
-    * remote statePath (hdfs://, s3a://) must not silently resolve to a
-    * nonexistent LOCAL path, bootstrap over live remote state, and only
-    * then fail on the pointer write.
-    */
-  def currentVersion(spark: SparkSession, statePath: String): Option[Int] = {
-    val fs = stateFs(spark, statePath)
-    val p  = new org.apache.hadoop.fs.Path(statePath, "_CURRENT")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes()).trim.toInt) finally in.close()
-    }
-  }
-
-  /** Read the committed state snapshot (empty-schema fallback handled by
-    * callers that know the update schema).
-    */
-  def readState(spark: SparkSession, statePath: String): Option[DataFrame] =
-    currentVersion(spark, statePath).map(v => spark.read.parquet(s"$statePath/v$v"))
-
-  /** One micro-batch of updates merged into the versioned snapshot,
-    * emitting CDC rows to the log directory. At cluster scale the
-    * snapshot is bucketed by hash (see [[graft.operators.StateTables]])
-    * so only the update side shuffles.
-    */
-  def mergeBatch(spark: SparkSession, updates: DataFrame, statePath: String,
-                 logPath: String, policy: MergePolicy,
-                 batchId: Option[Long] = None): Unit = {
-    val latest = MergeOps.dedupToLatest(
-      updates.repartition(policy.keys.map(col): _*), policy.keys, policy.orderBy)
-    val ver = currentVersion(spark, statePath)
-    val current = ver match {
-      // evolveState: an update stream that grew a column merges cleanly
-      // (existing rows backfill the policy default); a type change
-      // refuses loudly
-      case Some(v) => MergeOps.evolveState(
-        spark.read.parquet(s"$statePath/v$v"), latest, policy)
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], latest.schema)
-    }
-    val (next, log) = MergeOps.upsertWithLog(current, latest, policy)
-    val nextVer = ver.getOrElse(-1) + 1
-    next.write.mode("overwrite").parquet(s"$statePath/v$nextVer")
-    // CDC log: idempotent per batchId; a fully-written partition from a
-    // crashed attempt is authoritative (see StateTables.writeCdcBatch)
-    graft.operators.StateTables.writeCdcBatch(spark, log, logPath, batchId)
-    // atomic pointer swap (old-or-new, never missing — see
-    // StateTables.replacePointerFile), then prune older versions
-    val fs  = stateFs(spark, statePath)
-    val ptr = new org.apache.hadoop.fs.Path(statePath, "_CURRENT")
-    graft.operators.StateTables.replacePointerFile(fs,
-      spark.sessionState.newHadoopConf(), ptr, nextVer.toString.getBytes)
-    if (nextVer >= 2)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath, s"v${nextVer - 2}"), true)
-  }
-
-  /** Wire a parsed update stream into the merge sink. The checkpoint
-    * (default: alongside the state) makes restarts resume from the last
-    * committed offsets instead of replaying the topic from earliest;
-    * the snapshot converges either way (idempotent merge) but the CDC
-    * log would otherwise re-append history.
-    */
-  def start(parsed: DataFrame, statePath: String, logPath: String,
-            policy: MergePolicy, triggerMs: Long = 300,
-            checkpoint: Option[String] = None): StreamingQuery =
-    parsed.writeStream
-      .option("checkpointLocation", checkpoint.getOrElse(s"$statePath/_checkpoint"))
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch.sparkSession, batch, statePath, logPath, policy, Some(batchId))
-      }
-      .start()
-
-  /** Streaming variant of [[start]] over the changed-bucket snapshot
-    * layout ([[graft.operators.StateTables.mergeChangedBuckets]]): per
-    * micro-batch, ONLY buckets containing updated keys are read and
-    * rewritten — write amplification ∝ update spread, not O(state).
-    * The versioned-pointer path of [[start]] remains for small state
-    * (atomic whole-snapshot commit); this is the 100 TB state regime.
-    */
-  /** Housekeeping knobs for the in-stream maintenance hook of
-    * [[startBucketed]] — see [[maintain]] for what each step does.
-    * `retentionUs` is an AGE (cutoff = wall clock − retentionUs at each
-    * maintenance firing), matching the reference's rolling policies.
-    */
-  final case class Maintenance(
-      compactedPath: String,
-      every: Int = 100, // micro-batches between maintenance passes
-      retentionUs: Option[Long] = None,
-      keepRawBatches: Int = 2,
-      maxFilesPerBucket: Int = 8,
-      tsUsCol: String = "ts_us")
-
-  def startBucketed(parsed: DataFrame, statePath: String, logPath: String,
-                    policy: MergePolicy, numBuckets: Int, triggerMs: Long = 300,
-                    checkpoint: Option[String] = None,
-                    maintenance: Option[Maintenance] = None): StreamingQuery =
-    parsed.writeStream
-      .option("checkpointLocation", checkpoint.getOrElse(s"$statePath/_checkpoint"))
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.StateTables.mergeChangedBuckets(
-          batch.sparkSession, s"$statePath/snapshot", batch, policy, numBuckets,
-          logPath = Some(logPath), batchId = Some(batchId))
-        // maintenance runs INSIDE foreachBatch so Structured Streaming
-        // serializes it against the merge — a parallel timer would race
-        // the shared _stage/_old dirs and violate the single-writer
-        // contract (see [[maintain]])
-        maintenance.foreach { m =>
-          if (m.every > 0 && batchId % m.every == 0 && batchId > 0)
-            maintain(batch.sparkSession, statePath, logPath, m.compactedPath,
-              retentionCutoffUs =
-                m.retentionUs.map(r => System.currentTimeMillis() * 1000L - r),
-              keepRawBatches = m.keepRawBatches,
-              maxFilesPerBucket = m.maxFilesPerBucket, tsUsCol = m.tsUsCol)
-        }
-        ()
-      }
-      .start()
-
   /** One maintenance pass over a bucketed-ingest deployment — the
     * engine's equivalent of the reference's cron-side housekeeping
     * (retention policies `1_base.sql:236,369`, autovacuum).
@@ -270,10 +132,10 @@ object Ingest {
     * MUST NOT run concurrently with the stream's merge: both sides use
     * the snapshot's fixed `_stage`/`_old` siblings, so a parallel timer
     * would corrupt buckets (stage overwrite, recovery misjudging a
-    * parked dir). Either pass [[Maintenance]] to [[startBucketed]] —
-    * which calls this from WITHIN `foreachBatch`, where Structured
-    * Streaming serializes it against the merge — or run it while no
-    * stream is active.
+    * parked dir). [[GraftApp.processBatch]] calls this from WITHIN the
+    * micro-batch (every `Conf.maintenanceEvery` batches), where
+    * Structured Streaming serializes it against the merge; otherwise run
+    * it while no stream is active.
     *
     * Order matters and is chosen so every step only destroys data the
     * previous step made redundant:
@@ -287,8 +149,9 @@ object Ingest {
     *  4. compact snapshot buckets whose file count outgrew
     *     `maxFilesPerBucket` (the per-merge file accumulation).
     *
-    * Single-writer contract: same as [[startBucketed]]'s merge — one
-    * maintenance run at a time, on the same driver as the stream.
+    * Single-writer contract: same as the bucketed merge in
+    * [[GraftApp.processBatch]] — one maintenance run at a time, on the
+    * same driver as the stream.
     *
     * @return (hours folded, raw batches dropped, aged hours dropped,
     *         buckets compacted)
@@ -313,21 +176,6 @@ object Ingest {
     (folded, droppedBatches, droppedHours, compacted)
   }
 
-  /** Batch replay of TSV fixture lines through the same parse+merge path
-    * (used by tests and bootstrap — SURVEY §3.1's inventory-first phase).
-    */
-  def replayUnicastPrefix(spark: SparkSession, lines: DataFrame,
-                          statePath: String, logPath: String): Unit = {
-    val parsed = Messages.unicastPrefixFromTsv(lines)
-    mergeBatch(spark, parsed, statePath, logPath, ipRibPolicy)
-  }
-
-  /** Log compaction (SURVEY §4 "autovacuum → compaction job instead"):
-    * micro-batching accumulates one small parquet dir per batch under
-    * the CDC log; periodically rewrite closed time ranges into few large
-    * files partitioned by hour — the read-side layout the stats jobs
-    * prune on. Returns the compacted frame writer's target path.
-    */
   /** UTC `yyyy-MM-dd-HH` label from epoch micros — pure integer
     * day/hour decomposition plus a DATE-typed format, so the label is
     * UTC regardless of `spark.sql.session.timeZone` (a session-TZ
@@ -348,6 +196,12 @@ object Ingest {
     when(tsUs.isNotNull && tsUs >= 0, label).otherwise(lit("unknown"))
   }
 
+  /** Log compaction (SURVEY §4 "autovacuum → compaction job instead"):
+    * micro-batching accumulates one small parquet dir per batch under
+    * the CDC log; periodically rewrite closed time ranges into few large
+    * files partitioned by hour — the read-side layout the stats jobs
+    * prune on.
+    */
   def compactLog(spark: SparkSession, logPath: String, compactedPath: String,
                  tsUsCol: String = "ts_us",
                  retentionCutoffUs: Option[Long] = None): Unit = {
@@ -366,6 +220,21 @@ object Ingest {
       .write.mode("overwrite")
       .partitionBy("date_hour")
       .parquet(compactedPath)
+  }
+
+  /** Highest raw batch id folded into `compactedPath` (None before the
+    * first incremental compaction) — the watermark below which raw
+    * `batch=` dirs are safe to drop.
+    */
+  def compactedThrough(spark: SparkSession, compactedPath: String): Option[Long] = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val fs = new HPath(compactedPath).getFileSystem(spark.sessionState.newHadoopConf())
+    val marker = new HPath(compactedPath, "_COMPACTED_THROUGH")
+    if (!fs.exists(marker)) None
+    else {
+      val in = fs.open(marker)
+      try Some(new String(in.readAllBytes()).trim.toLong) finally in.close()
+    }
   }
 
   /** Incremental log compaction — the 100 TB form of [[compactLog]].
@@ -404,21 +273,6 @@ object Ingest {
     *
     * @return the `date_hour=` partition names rewritten
     */
-  /** Highest raw batch id folded into `compactedPath` (None before the
-    * first incremental compaction) — the watermark below which raw
-    * `batch=` dirs are safe to drop.
-    */
-  def compactedThrough(spark: SparkSession, compactedPath: String): Option[Long] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val fs = new HPath(compactedPath).getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new HPath(compactedPath, "_COMPACTED_THROUGH")
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      try Some(new String(in.readAllBytes()).trim.toLong) finally in.close()
-    }
-  }
-
   def compactLogIncremental(spark: SparkSession, logPath: String,
                             compactedPath: String,
                             tsUsCol: String = "ts_us"): Seq[String] = {

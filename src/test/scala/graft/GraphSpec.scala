@@ -109,6 +109,21 @@ class GraphSpec extends SparkSpec {
     assert(tri.size === 1)
   }
 
+  test("pageRank under spark.graft.materialize.reliable: same rows, checkpoints land in the checkpoint dir") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 5L), (3L, 5L)).toDF("a", "b")
+    val key = "spark.graft.materialize.reliable"
+    val default = Graph.pageRank(edges, rounds = 3).collect().toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft_reliable_ckpt").toFile
+    val prior = spark.conf.getOption(key)
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    spark.conf.set(key, "true")
+    val reliable = try Graph.pageRank(edges, rounds = 3).collect().toSet
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(reliable === default)
+    val written = org.apache.commons.io.FileUtils.listFiles(dir, null, true)
+    assert(!written.isEmpty, s"reliable mode wrote nothing under $dir")
+  }
+
   test("hits: matches a driver-side replay of the L1-integer recurrence") {
     // star: 1→{2,3,4}, 5→{2}, 2→1 — vertex 2 is the strong authority,
     // vertex 1 the strong hub

@@ -117,32 +117,6 @@ class StateAndJobsSpec extends AnyFunSuite {
     assert(StateTables.compactBuckets(spark, dir, maxFilesPerBucket = 2).isEmpty)
   }
 
-  test("bucketed state merge: snapshot side reads without Exchange") {
-    // clean any leftover managed-table locations from aborted runs
-    for (t <- Seq("rib_state", "rib_state_next", "rib_state_old")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      org.apache.commons.io.FileUtils.deleteQuietly(loc)
-    }
-    val init = (1 to 100).map(i => (s"k$i", 1L, s"A$i", false))
-      .toDF("k", "ts", "attr", "wd")
-    StateTables.writeBucketed(init, "rib_state", Seq("k"), 8)
-
-    // the merge join over the bucketed side needs no shuffle on state
-    val updates = Seq(("k1", 2L, "A1x", false), ("k999", 2L, "N1", false))
-      .toDF("k", "ts", "attr", "wd")
-    val joined = spark.table("rib_state").join(updates, Seq("k"), "full_outer")
-    val plan = joined.queryExecution.executedPlan.toString
-    val exchanges = plan.split("\n").count(_.contains("Exchange"))
-    assert(exchanges === 1, s"expected only the update-side Exchange:\n$plan")
-
-    StateTables.mergeIntoBucketed(spark, "rib_state", updates, policy, 8)
-    val st = spark.table("rib_state")
-    assert(st.count() === 101)
-    assert(st.filter(col("k") === "k1").head().getAs[String]("attr") === "A1x")
-  }
-
   test("stats job: re-run with late data converges (idempotent buckets)") {
     def logOf(rows: (Long, Long, Boolean)*) =
       rows.toSeq.toDF("ts_us", "user_id", "wd")
@@ -303,7 +277,7 @@ class StateAndJobsSpec extends AnyFunSuite {
     val raw = Files.createTempDirectory("graft_inc").toString
     val (logDir, hourDir) = (raw + "/log", raw + "/hourly")
     // production layout: each micro-batch writes its own batch=N dir
-    // (mergeChangedBuckets/mergeBatch), so _SUCCESS lands INSIDE it —
+    // (StateTables.writeCdcBatch), so _SUCCESS lands INSIDE it —
     // the committed-batch signal compactLogIncremental keys on
     def writeBatch(id: Long, rows: Seq[(Long, Long)]): Unit =
       rows.toDF("ts_us", "v").write.mode("overwrite").parquet(s"$logDir/batch=$id")

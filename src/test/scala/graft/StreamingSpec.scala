@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.model.Messages
-import graft.streaming.Ingest
+import graft.operators.StateTables
+import graft.streaming.{ConsistentState, GraftApp, Ingest}
 
 /** Fault-injecting local filesystem (`crashy://` scheme): while armed,
   * the FIRST rename whose destination is a snapshot bucket slot throws —
@@ -28,40 +29,56 @@ class CrashyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 object CrashyRenameFs { @volatile var armed = false }
 
-/** Real Structured Streaming path: file-source readStream → TSV parse →
-  * foreachBatch keyed merge → state + CDC log, driven synchronously via
+/** Real Structured Streaming path: file-source readStream → the
+  * deployed [[GraftApp.start]] query (TSV parse → keyed merge → state +
+  * CDC log inside `foreachBatch`), driven synchronously via
   * processAllAvailable (the micro-batch shape of the Kafka pipeline).
   */
 class StreamingSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def line(hash: String, attr: String, ts: String, wd: Boolean) =
+    s"$hash\tp1\t$attr\t1\t65001\t10.0.0.0\t8\t$ts\t$wd\t0\t\t1\t1"
+
+  /** Drop one unicast_prefix file where [[GraftApp.fileSource]] picks it up. */
+  private def writePrefixes(in: String, file: String, lines: String*): Unit = {
+    val dir = java.nio.file.Paths.get(s"$in/topic=${GraftApp.TopicPrefix}unicast_prefix")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve(file), lines.mkString("\n"))
+  }
+
+  private def prefixBatch(lines: String*) = lines.toDF("line")
+    .select(lit(GraftApp.TopicPrefix + "unicast_prefix").as("topic"), col("line"))
+
+  private def bucketOf(hash: String, numBuckets: Int): Int =
+    Seq(("p1", hash)).toDF("peer_hash_id", "hash_id")
+      .select(StateTables.bucketId(Seq("peer_hash_id", "hash_id"), numBuckets)).head().getInt(0)
+  /** A second hash whose (p1, hash) key provably lands in another bucket than h1's. */
+  private def otherBucketHash(numBuckets: Int): String =
+    (2 to 40).map(i => s"h$i").find(h => bucketOf(h, numBuckets) != bucketOf("h1", numBuckets)).get
 
   test("streaming ingest merges batches and emits CDC") {
     val in  = Files.createTempDirectory("graft_stream_in").toString
     val out = Files.createTempDirectory("graft_stream_out").toString
-    val state = s"$out/state"; val log = s"$out/log"
+    val conf = GraftApp.Conf(out, triggerMs = 50, registerViews = false)
 
-    def line(hash: String, attr: String, ts: String, wd: Boolean) =
-      s"$hash\tp1\t$attr\t1\t65001\t10.0.0.0\t8\t$ts\t$wd\t0\t\t1\t1"
+    writePrefixes(in, "b1.tsv",
+      line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false),
+      line("h2", "a9", "2024-01-01 00:00:01.500000", wd = false))
+    val q = GraftApp.start(GraftApp.fileSource(spark, in), conf)
+    try {
+      q.processAllAvailable()
+      // second file lands while the stream runs → new micro-batch
+      writePrefixes(in, "b2.tsv", line("h1", "", "2024-01-01 00:00:02.000000", wd = true))
+      q.processAllAvailable()
+    } finally q.stop()
 
-    Files.writeString(java.nio.file.Paths.get(s"$in/b1.tsv"),
-      line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false) + "\n" +
-        line("h2", "a9", "2024-01-01 00:00:01.500000", wd = false))
-
-    val parsed = Messages.unicastPrefixFromTsv(
-      spark.readStream.text(in).withColumnRenamed("value", "line"))
-    val q = Ingest.start(parsed, state, log, Ingest.ipRibPolicy, triggerMs = 50)
-    q.processAllAvailable()
-
-    // second file lands while the stream runs → new micro-batch
-    Files.writeString(java.nio.file.Paths.get(s"$in/b2.tsv"),
-      line("h1", "", "2024-01-01 00:00:02.000000", wd = true))
-    q.processAllAvailable()
-    q.stop()
-
-    val st = Ingest.readState(spark, state).get
+    val st = ConsistentState.readConsistent(spark, out, Seq("ip_rib"))("ip_rib")
     assert(st.count() === 2)
     val h1 = st.filter(col("hash_id") === "h1").head()
     assert(h1.getAs[Boolean]("isWithdrawn") === true)
     assert(h1.getAs[String]("base_attr_hash_id") === "a1") // retained on withdraw
+    val log = s"$out/ip_rib_log"
     assert(spark.read.parquet(log).count() === 3)          // 2 advertises + 1 withdraw
 
     // compaction rewrites the per-batch dirs into hour-partitioned files
@@ -72,146 +89,110 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("bucketed streaming ingest rewrites only touched buckets per micro-batch") {
-    import spark.implicits._
-    import graft.operators.StateTables
     val in  = Files.createTempDirectory("graft_bstream_in").toString
     val out = Files.createTempDirectory("graft_bstream_out").toString
-    val state = s"$out/state"; val log = s"$out/log"
+    val conf = GraftApp.Conf(out, triggerMs = 50, bucketedRib = Some(16), registerViews = false)
+    val snapshot = s"$out/ip_rib/snapshot"
+    val h2 = otherBucketHash(16)
 
-    // pick a second hash that provably lands in a different bucket
-    def bucketOf(hash: String): Int = Seq(("p1", hash)).toDF("peer_hash_id", "hash_id")
-      .select(StateTables.bucketId(Seq("peer_hash_id", "hash_id"), 16)).head().getInt(0)
-    val h2 = (2 to 40).map(i => s"h$i").find(h => bucketOf(h) != bucketOf("h1")).get
-
-    def line(hash: String, attr: String, ts: String, wd: Boolean) =
-      s"$hash\tp1\t$attr\t1\t65001\t10.0.0.0\t8\t$ts\t$wd\t0\t\t1\t1"
-    Files.writeString(java.nio.file.Paths.get(s"$in/b1.tsv"),
-      line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false) + "\n" +
-        line(h2, "a9", "2024-01-01 00:00:01.500000", wd = false))
-
-    val parsed = Messages.unicastPrefixFromTsv(
-      spark.readStream.text(in).withColumnRenamed("value", "line"))
-    val q = Ingest.startBucketed(parsed, state, log, Ingest.ipRibPolicy,
-      numBuckets = 16, triggerMs = 50)
-    q.processAllAvailable()
-
+    writePrefixes(in, "b1.tsv",
+      line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false),
+      line(h2, "a9", "2024-01-01 00:00:01.500000", wd = false))
     def bucketFiles(): Map[String, Set[String]] =
-      new java.io.File(s"$state/snapshot").listFiles()
+      new java.io.File(snapshot).listFiles()
         .filter(_.getName.startsWith("__bucket="))
         .map(d => d.getName -> d.listFiles().map(_.getName)
           .filter(_.endsWith(".parquet")).toSet).toMap
-    val before = bucketFiles()
 
-    // second batch touches ONLY h1's key
-    Files.writeString(java.nio.file.Paths.get(s"$in/b2.tsv"),
-      line("h1", "", "2024-01-01 00:00:02.000000", wd = true))
-    q.processAllAvailable()
-    q.stop()
+    val q = GraftApp.start(GraftApp.fileSource(spark, in), conf)
+    val (before, after) = try {
+      q.processAllAvailable()
+      val before = bucketFiles()
+      // second batch touches ONLY h1's key
+      writePrefixes(in, "b2.tsv", line("h1", "", "2024-01-01 00:00:02.000000", wd = true))
+      q.processAllAvailable()
+      (before, bucketFiles())
+    } finally q.stop()
 
-    val after = bucketFiles()
-    val h1Bucket = s"__bucket=${bucketOf("h1")}"
+    val h1Bucket = s"__bucket=${bucketOf("h1", 16)}"
     assert(after(h1Bucket) !== before(h1Bucket))
     (before.keySet - h1Bucket).foreach(b =>
       assert(after(b) === before(b), s"bucket $b was rewritten"))
 
-    val st = spark.read.parquet(s"$state/snapshot")
+    val st = spark.read.parquet(snapshot)
     assert(st.count() === 2)
     val h1 = st.filter(col("hash_id") === "h1").head()
     assert(h1.getAs[Boolean]("isWithdrawn") === true)
     assert(h1.getAs[String]("base_attr_hash_id") === "a1") // retained on withdraw
-    assert(spark.read.parquet(log).count() === 3)          // 2 advertises + 1 withdraw
+    assert(spark.read.parquet(s"$out/ip_rib_log").count() === 3) // 2 advertises + 1 withdraw
   }
 
   test("crash between stage-write and bucket swap: restart converges, no duplicate CDC") {
-    import spark.implicits._
-    import graft.operators.StateTables
     spark.sparkContext.hadoopConfiguration
       .set("fs.crashy.impl", classOf[CrashyRenameFs].getName)
     val in  = Files.createTempDirectory("graft_crash_in").toString
     val out = Files.createTempDirectory("graft_crash_out").toString
-    val state = s"crashy://$out/state"; val log = s"crashy://$out/log"
-    val cp = s"$out/cp" // checkpoint on the healthy FS — the fault targets the swap
-
-    def bucketOf(hash: String): Int = Seq(("p1", hash)).toDF("peer_hash_id", "hash_id")
-      .select(StateTables.bucketId(Seq("peer_hash_id", "hash_id"), 16)).head().getInt(0)
-    val h2 = (2 to 40).map(i => s"h$i").find(h => bucketOf(h) != bucketOf("h1")).get
-    def line(hash: String, attr: String, ts: String, wd: Boolean) =
-      s"$hash\tp1\t$attr\t1\t65001\t10.0.0.0\t8\t$ts\t$wd\t0\t\t1\t1"
-    Files.writeString(java.nio.file.Paths.get(s"$in/b1.tsv"),
-      line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false) + "\n" +
-        line(h2, "a9", "2024-01-01 00:00:01.500000", wd = false))
-
-    def startQ() = Ingest.startBucketed(
-      Messages.unicastPrefixFromTsv(
-        spark.readStream.text(in).withColumnRenamed("value", "line")),
-      state, log, Ingest.ipRibPolicy, numBuckets = 16, triggerMs = 50,
-      checkpoint = Some(cp))
+    // the whole root, checkpoint included, on the fault-injecting FS; the
+    // fault only ever fires on a rename into a snapshot bucket slot
+    val conf = GraftApp.Conf(s"crashy://$out", triggerMs = 50, bucketedRib = Some(16),
+      registerViews = false)
+    val h1b = bucketOf("h1", 16)
+    writePrefixes(in, "b1.tsv",
+      line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false),
+      line(otherBucketHash(16), "a9", "2024-01-01 00:00:01.500000", wd = false))
+    def startQ() = GraftApp.start(GraftApp.fileSource(spark, in), conf)
 
     val q1 = startQ()
-    q1.processAllAvailable() // bootstrap batch commits cleanly
-
-    CrashyRenameFs.armed = true
-    Files.writeString(java.nio.file.Paths.get(s"$in/b2.tsv"),
-      line("h1", "", "2024-01-01 00:00:02.000000", wd = true))
-    try q1.processAllAvailable() catch { case _: Exception => () }
-    assert(q1.exception.isDefined, "injected rename failure did not fail the query")
-    q1.stop()
+    try {
+      q1.processAllAvailable() // bootstrap batch commits cleanly
+      CrashyRenameFs.armed = true
+      writePrefixes(in, "b2.tsv", line("h1", "", "2024-01-01 00:00:02.000000", wd = true))
+      try q1.processAllAvailable() catch { case _: Exception => () }
+      assert(q1.exception.isDefined, "injected rename failure did not fail the query")
+    } finally { q1.stop(); CrashyRenameFs.armed = false }
     // the crash window is real: h1's bucket slot is gone, its old copy parked
-    val snapDir = new java.io.File(s"$out/state/snapshot")
-    assert(!new java.io.File(snapDir, s"__bucket=${bucketOf("h1")}").exists())
-    assert(new java.io.File(s"$out/state/snapshot_old/__bucket=${bucketOf("h1")}").exists())
+    assert(!new java.io.File(s"$out/ip_rib/snapshot/__bucket=$h1b").exists())
+    assert(new java.io.File(s"$out/ip_rib/snapshot_old/__bucket=$h1b").exists())
 
     // restart from the same checkpoint: the uncommitted batch replays —
     // recoverSwap restores the parked bucket, the idempotent merge
-    // re-applies, the batchId-keyed CDC write overwrites its own partition
+    // re-applies, the batchId-keyed CDC write keeps its own partition
     val q2 = startQ()
-    q2.processAllAvailable()
-    q2.stop()
+    try q2.processAllAvailable() finally q2.stop()
 
-    val st = spark.read.parquet(s"$out/state/snapshot")
+    val st = spark.read.parquet(s"$out/ip_rib/snapshot")
     assert(st.count() === 2)
     val h1 = st.filter(col("hash_id") === "h1").head()
     assert(h1.getAs[Boolean]("isWithdrawn") === true)
     assert(h1.getAs[String]("base_attr_hash_id") === "a1") // retained on withdraw
-    assert(!new java.io.File(s"$out/state/snapshot_old").exists()) // recovery cleaned up
-    val cdc = spark.read.parquet(s"$out/log")
+    assert(!new java.io.File(s"$out/ip_rib/snapshot_old").exists()) // recovery cleaned up
+    val cdc = spark.read.parquet(s"$out/ip_rib_log")
     assert(cdc.count() === 3, "replay appended duplicate CDC rows")
     assert(cdc.filter(col("hash_id") === "h1").count() === 2) // advertise + withdraw
   }
 
   test("replay after state commit (lost checkpoint commit) keeps original CDC rows") {
-    import spark.implicits._
     val in  = Files.createTempDirectory("graft_rp_in").toString
     val out = Files.createTempDirectory("graft_rp_out").toString
-    val state = s"$out/state"; val log = s"$out/log"; val cp = s"$out/cp"
-    def line(hash: String, attr: String, ts: String, wd: Boolean) =
-      s"$hash\tp1\t$attr\t1\t65001\t10.0.0.0\t8\t$ts\t$wd\t0\t\t1\t1"
-    Files.writeString(java.nio.file.Paths.get(s"$in/b1.tsv"),
-      line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false))
-    def startQ() = Ingest.startBucketed(
-      Messages.unicastPrefixFromTsv(
-        spark.readStream.text(in).withColumnRenamed("value", "line")),
-      state, log, Ingest.ipRibPolicy, numBuckets = 8, triggerMs = 50,
-      checkpoint = Some(cp))
-    val q1 = startQ()
-    q1.processAllAvailable()
-    Files.writeString(java.nio.file.Paths.get(s"$in/b2.tsv"),
-      line("h1", "", "2024-01-01 00:00:02.000000", wd = true))
-    q1.processAllAvailable()
-    q1.stop()
+    val conf = GraftApp.Conf(out, triggerMs = 50, bucketedRib = Some(8), registerViews = false)
+    val log = s"$out/ip_rib_log"
+    writePrefixes(in, "b1.tsv", line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false))
+    val q1 = GraftApp.start(GraftApp.fileSource(spark, in), conf)
+    try {
+      q1.processAllAvailable()
+      writePrefixes(in, "b2.tsv", line("h1", "", "2024-01-01 00:00:02.000000", wd = true))
+      q1.processAllAvailable()
+    } finally q1.stop()
     assert(spark.read.parquet(log).count() === 2) // advertise + withdraw
 
     // crash window: merge + CDC + swap all committed, but the streaming
     // checkpoint did NOT — on restart the source re-delivers the batch
-    // and foreachBatch re-invokes the merge with the SAME batchId
+    // and foreachBatch re-invokes processBatch with the SAME batchId
     // against the already-updated state. Drive that invocation directly
     // (restarting with a doctored commit log trips Spark's concurrent-
     // query detection).
-    val replayed = Messages.unicastPrefixFromTsv(
-      Seq(line("h1", "", "2024-01-01 00:00:02.000000", wd = true)).toDF("line"))
-    graft.operators.StateTables.mergeChangedBuckets(
-      spark, s"$state/snapshot", replayed, Ingest.ipRibPolicy, 8,
-      logPath = Some(log), batchId = Some(1L))
+    GraftApp.processBatch(
+      prefixBatch(line("h1", "", "2024-01-01 00:00:02.000000", wd = true)), 1L, conf)
     // the replayed merge derives ZERO changes (state already withdrawn);
     // without the _SUCCESS guard it would overwrite batch=1 with an
     // empty frame — the withdraw row must survive
@@ -219,7 +200,7 @@ class StreamingSpec extends SparkSpec {
     assert(cdc.count() === 2, "replay destroyed committed CDC rows")
     assert(cdc.filter(col("isWithdrawn") === true).count() === 1)
     // and state is unchanged (idempotent merge)
-    val h1 = spark.read.parquet(s"$state/snapshot")
+    val h1 = spark.read.parquet(s"$out/ip_rib/snapshot")
       .filter(col("hash_id") === "h1").head()
     assert(h1.getAs[Boolean]("isWithdrawn") === true)
   }
@@ -286,14 +267,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("Kafka decode seam: wire-shaped records flow through parse + merge") {
-    import spark.implicits._
     // exactly Kafka's post-.load() schema: binary key/value, topic,
     // timestamp — decodeKafkaRecords is the seam every record crosses,
     // so this drives the full ingest path minus only the broker line
+    val topic = GraftApp.TopicPrefix + "unicast_prefix"
     val wire = Seq(
-      ("obmp.parsed.unicast_prefix", "h1".getBytes, // key = routing key
+      (topic, "h1".getBytes, // key = routing key
         "h1\tp1\ta1\t1\t65001\t10.0.0.0\t8\t2024-01-01 00:00:01.000000\tfalse\t0\t\t1\t1".getBytes),
-      ("obmp.parsed.unicast_prefix", "h2".getBytes,
+      (topic, "h2".getBytes,
         "h2\tp1\ta2\t1\t65002\t10.1.0.0\t16\t2024-01-01 00:00:02.000000\ttrue\t0\t\t1\t1".getBytes))
       .toDF("topic", "key", "value")
       .withColumn("timestamp", lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:03")))
@@ -307,14 +288,13 @@ class StreamingSpec extends SparkSpec {
     assert(rows(0).getAs[String]("hash_id") === "h1")
     assert(rows(1).getAs[Boolean]("isWithdrawn") === true)
 
-    // and on through the merge sink
+    // and on through the deployed write path
     val out = Files.createTempDirectory("graft_kafka_seam").toString
-    Ingest.mergeBatch(spark, parsed, s"$out/state", s"$out/log", Ingest.ipRibPolicy)
-    assert(Ingest.readState(spark, s"$out/state").get.count() === 2)
+    GraftApp.processBatch(decoded, 0L, GraftApp.Conf(out))
+    assert(ConsistentState.readConsistent(spark, out, Seq("ip_rib"))("ip_rib").count() === 2)
   }
 
   test("replacePointerFile: atomic on file scheme; fallback works without an AbstractFileSystem binding") {
-    import graft.operators.StateTables
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.crashy.impl", classOf[CrashyRenameFs].getName)
 

@@ -45,6 +45,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * merge): ONE writer per root. The reference gets this from Postgres
   * row locks; here [[GraftApp]] enforces it structurally — the whole
   * topology is ONE streaming query, so one `Txn` exists at a time.
+  * Inside that txn, [[Txn.stage]] may be called from several threads,
+  * one per table (GraftApp runs a batch's table pipelines
+  * concurrently); staging a table twice in one txn is refused, and
+  * [[Txn.commit]] runs once, after every stage has returned.
   * Two concurrent txns on one root would race `base`: both compute
   * "next = current + my batch" and the second pointer swap would
   * silently drop the first's rows (lost update). [[Txn.commit]] turns
@@ -98,7 +102,7 @@ object ConsistentState {
     */
   final class Txn private[ConsistentState] (spark: SparkSession, root: String) {
     private val base = readManifest(spark, root)
-    private var staged = Map.empty[String, Int]
+    private var staged = Map.empty[String, Int] // guarded by `this`
 
     /** The table's committed snapshot as of txn start (None = never
       * committed). All `current` reads inside one txn are mutually
@@ -112,15 +116,23 @@ object ConsistentState {
       * recomputing the plan); visibility waits for [[commit]]. Returns
       * the WRITTEN frame — downstream plans in the same batch should
       * build on it (truncated lineage, one compute).
+      *
+      * Thread-safe across tables. A table stages at most once per txn:
+      * a second stage would race the first over the same `v` directory.
+      * A txn whose stage threw must not commit; the replayed batch opens
+      * a new one.
       */
     def stage(table: String, next: DataFrame): DataFrame = {
       val v   = base.getOrElse(table, -1) + 1
       val dir = s"$root/$table/v$v"
+      synchronized {
+        require(!staged.contains(table), s"$table is already staged in this txn")
+        staged += table -> v
+      }
       // overwrite: a replayed batch (crash before commit/checkpoint)
       // re-stages the same version dir; the idempotent merge makes the
       // content identical
       next.write.mode("overwrite").parquet(dir)
-      staged += table -> v
       spark.read.parquet(dir)
     }
 
@@ -144,7 +156,8 @@ object ConsistentState {
             s"$base -> $now. ConsistentState is single-writer per root " +
             "(run ONE GraftApp per state root); committing would lose " +
             "the foreign writer's rows.")
-      val man = base ++ staged
+      val published = synchronized(staged)
+      val man = base ++ published
       val ptr = new org.apache.hadoop.fs.Path(root, "_CURRENT")
       // atomic overwrite (no delete-then-rename): a reader racing the
       // commit must see old-or-new, never a missing manifest — a missing
@@ -154,7 +167,7 @@ object ConsistentState {
         spark.sessionState.newHadoopConf(), ptr,
         man.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" }
           .mkString("", "\n", "\n").getBytes)
-      staged.foreach { case (t, v) =>
+      published.foreach { case (t, v) =>
         // walk DOWN from the newest prunable version and stop at the
         // first gap: previous commits already pruned below it, so the
         // steady-state cost is one delete + one existence probe per

@@ -15,11 +15,12 @@ import graft.views.BmpViews
   * One multiplexed source (Kafka `subscribePattern` over the ten
   * `openbmp.parsed.*` topics, or the file-source fallback) feeds ONE
   * streaming query whose `foreachBatch` demuxes by topic and merges
-  * every table in the reference's per-record priority order
-  * (`ConsumerRunnable.java:390-546`): collector → router → peer →
+  * every table. The reference's per-record priority order
+  * (`ConsumerRunnable.java:390-546`: collector → router → peer →
   * base_attribute → unicast_prefix → l3vpn → bmp_stat → ls_node →
-  * ls_link → ls_prefix. A single query instead of ten buys exactly what
-  * the reference gets from one consumer loop + one database:
+  * ls_link → ls_prefix) is kept wherever one table reads another's
+  * fresh state. A single query instead of ten buys exactly what the
+  * reference gets from one consumer loop + one database:
   *
   *  - cascades see fresh upstream state (a router-up in batch N downs
   *    peers in batch N, not N+1 — T6–T9 inline, like the triggers);
@@ -27,8 +28,11 @@ import graft.views.BmpViews
   *    then published by a single [[ConsistentState]] manifest swap, so
   *    `v_ip_routes` can never join rib@N against peers@N−1 (the MVCC
   *    parity the per-table queries give up);
-  *  - Structured Streaming serializes `foreachBatch`, satisfying the
-  *    single-writer contract of every storage path for free.
+  *  - one writer thread per table per batch, one commit: Structured
+  *    Streaming serializes `foreachBatch`, and inside a batch the
+  *    independent table pipelines (collectors, routers → bgp_peers,
+  *    peer_events, base_attrs, and each rib-scale, stat and link-state
+  *    table) run on their own threads, joined before the commit.
   *
   * Two state regimes, chosen per deployment by [[Conf.bucketedRib]]:
   * versioned snapshots for everything (atomic cross-table reads; write
@@ -129,6 +133,9 @@ object GraftApp {
     // the batch is demuxed ten ways below — one source compute, not ten
     val batch = batch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // fill the cache in one job before the pipelines start: concurrent
+      // first readers would each run their own caching job
+      batch.queryExecution.toRdd.count()
       def lines(t: String): DataFrame =
         batch.filter(col("topic") === TopicPrefix + t).select(col("line"))
       val root = conf.root
@@ -137,43 +144,10 @@ object GraftApp {
       def cur(table: String, like: DataFrame): DataFrame =
         txn.current(table).getOrElse(like.limit(0))
 
-      // -- inventory, in trigger order ---------------------------------
-      // M5 collectors: latest-wins overwrite
+      // the parsed frames several pipelines read; each pipeline
+      // re-parses them from the persisted batch
       val collectors = parse("collector", lines("collector"))
-      txn.stage("collectors",
-        Ingest.overwriteMerge(cur("collectors", collectors), collectors,
-          Seq("hash_id"), Seq("ts_us")))
-
-      // M4 routers: overwrite merge, then T8 — a collector transition in
-      // THIS batch downs routers whose state predates it
-      val routers = parse("router", lines("router"))
-      val routersNext = txn.stage("routers",
-        Ingest.collectorCascade(
-          Ingest.overwriteMerge(cur("routers", routers), routers,
-            Seq("hash_id"), Seq("ts_us")),
-          collectors))
-
-      // M3 peers: T6 default naming against the POST-merge routers (the
-      // BEFORE INSERT trigger reads the routers table), T7 router-up
-      // cascade downs EXISTING peer state, then latest-wins overwrite.
       val peers = parse("peer", lines("peer"))
-      txn.stage("bgp_peers",
-        Ingest.overwriteMerge(
-          Ingest.routerUpCascade(cur("bgp_peers", peers), routers),
-          Ingest.inheritPeerDefaults(peers, routersNext),
-          Seq("hash_id"), Seq("ts_us")))
-      // T4: every peer message appends an event row
-      StateTables.writeCdcBatch(spark, Ingest.peerEventLog(peers),
-        s"$root/peer_events", Some(batchId))
-
-      // M2 base_attrs: content-addressed DO NOTHING (hash_id PK,
-      // 1_base.sql:286)
-      val attrs = parse("base_attribute", lines("base_attribute"))
-      txn.stage("base_attrs",
-        MergeOps.insertIgnore(cur("base_attrs", attrs), attrs,
-          Seq("hash_id"), Seq("ts_us", "peer_hash_id")))
-
-      // -- rib-scale tables --------------------------------------------
       // T9: peers that came up in this batch purge their stale rib rows
       val peerUps = peers.filter(col("state") === "up" && col("ts_us").isNotNull)
         .select(col("hash_id"), col("ts_us"))
@@ -210,21 +184,58 @@ object GraftApp {
         }
       }
 
-      mergeRib("ip_rib", parse("unicast_prefix", lines("unicast_prefix")),
-        Ingest.ipRibPolicy, "ip_rib_log", purge = true)
-      mergeRib("l3vpn_rib", parse("l3vpn", lines("l3vpn")),
-        Ingest.l3vpnRibPolicy, "l3vpn_rib_log", purge = true)
-
-      // M10 stat_reports: append-only, batch-keyed (idempotent replay)
-      StateTables.writeCdcBatch(spark, parse("bmp_stat", lines("bmp_stat")),
-        s"$root/stat_reports", Some(batchId))
-
-      mergeRib("ls_nodes", parse("ls_node", lines("ls_node")),
-        Ingest.lsNodePolicy, "ls_nodes_log", purge = false)
-      mergeRib("ls_links", parse("ls_link", lines("ls_link")),
-        Ingest.lsLinkPolicy, "ls_links_log", purge = false)
-      mergeRib("ls_prefixes", parse("ls_prefix", lines("ls_prefix")),
-        Ingest.lsPrefixPolicy, "ls_prefixes_log", purge = false)
+      // -- the independent pipelines, run concurrently -----------------
+      // Each writes its own tables and logs; the reference's per-record
+      // priority order survives as the order inside a pipeline.
+      runPipelines(batchId, Seq(
+        // M5 collectors: latest-wins overwrite
+        "collectors" -> (() => txn.stage("collectors",
+          Ingest.overwriteMerge(cur("collectors", collectors), collectors,
+            Seq("hash_id"), Seq("ts_us")))),
+        "routers" -> { () =>
+          // M4 routers: overwrite merge, then T8 — a collector transition
+          // in THIS batch downs routers whose state predates it
+          val routers = parse("router", lines("router"))
+          val routersNext = txn.stage("routers",
+            Ingest.collectorCascade(
+              Ingest.overwriteMerge(cur("routers", routers), routers,
+                Seq("hash_id"), Seq("ts_us")),
+              collectors))
+          // M3 peers: T6 default naming against the POST-merge routers
+          // (the BEFORE INSERT trigger reads the routers table), T7
+          // router-up cascade downs EXISTING peer state, then latest-wins
+          // overwrite.
+          txn.stage("bgp_peers",
+            Ingest.overwriteMerge(
+              Ingest.routerUpCascade(cur("bgp_peers", peers), routers),
+              Ingest.inheritPeerDefaults(peers, routersNext),
+              Seq("hash_id"), Seq("ts_us")))
+        },
+        // T4: every peer message appends an event row
+        "peer_events" -> (() => StateTables.writeCdcBatch(spark,
+          Ingest.peerEventLog(peers), s"$root/peer_events", Some(batchId))),
+        "base_attrs" -> { () =>
+          // M2 base_attrs: content-addressed DO NOTHING (hash_id PK,
+          // 1_base.sql:286)
+          val attrs = parse("base_attribute", lines("base_attribute"))
+          txn.stage("base_attrs",
+            MergeOps.insertIgnore(cur("base_attrs", attrs), attrs,
+              Seq("hash_id"), Seq("ts_us", "peer_hash_id")))
+        },
+        "ip_rib" -> (() => mergeRib("ip_rib",
+          parse("unicast_prefix", lines("unicast_prefix")),
+          Ingest.ipRibPolicy, "ip_rib_log", purge = true)),
+        "l3vpn_rib" -> (() => mergeRib("l3vpn_rib", parse("l3vpn", lines("l3vpn")),
+          Ingest.l3vpnRibPolicy, "l3vpn_rib_log", purge = true)),
+        // M10 stat_reports: append-only, batch-keyed (idempotent replay)
+        "stat_reports" -> (() => StateTables.writeCdcBatch(spark,
+          parse("bmp_stat", lines("bmp_stat")), s"$root/stat_reports", Some(batchId))),
+        "ls_nodes" -> (() => mergeRib("ls_nodes", parse("ls_node", lines("ls_node")),
+          Ingest.lsNodePolicy, "ls_nodes_log", purge = false)),
+        "ls_links" -> (() => mergeRib("ls_links", parse("ls_link", lines("ls_link")),
+          Ingest.lsLinkPolicy, "ls_links_log", purge = false)),
+        "ls_prefixes" -> (() => mergeRib("ls_prefixes", parse("ls_prefix", lines("ls_prefix")),
+          Ingest.lsPrefixPolicy, "ls_prefixes_log", purge = false))))
 
       // -- the ONE commit point ----------------------------------------
       txn.commit(conf.keepVersions)
@@ -240,6 +251,44 @@ object GraftApp {
               conf.retentionUs.map(r => System.currentTimeMillis() * 1000L - r))
         }
     } finally { batch.unpersist(); () }
+  }
+
+  /** Name prefix of the threads [[processBatch]] runs its pipelines on. */
+  private[graft] val BatchThreadPrefix = "graft-batch-"
+
+  /** Runs each named pipeline of one micro-batch on its own thread and
+    * returns only once every thread has exited; then it rethrows the
+    * stream thread's interrupt (query stop) or the first pipeline
+    * failure. The caller therefore never commits, or gives up, while a
+    * pipeline is still writing a `v<N>` directory.
+    *
+    * The threads are created per batch: each inherits the calling
+    * thread's Spark local properties (job group, batch id), so query
+    * stop cancels their jobs. A long-lived pool would keep the first
+    * batch's properties.
+    */
+  private def runPipelines(batchId: Long, pipelines: Seq[(String, () => Unit)]): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = pipelines.map { case (name, body) =>
+      val t = new Thread(() => try body() catch { case e: Throwable => failures.add(e); () },
+        s"$BatchThreadPrefix$batchId-$name")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var stopped: Option[InterruptedException] = None
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch {
+          case e: InterruptedException =>
+            // query stop also cancels the job group; interrupt the
+            // pipelines' driver-side waits, then keep joining
+            if (stopped.isEmpty) { stopped = Some(e); threads.foreach(_.interrupt()) }
+        }
+    }
+    stopped.foreach(e => throw e)
+    Option(failures.peek()).foreach(e => throw e)
   }
 
   /** The T9 bucket-layout purge predicate: rows of an up-transitioned
@@ -645,14 +694,33 @@ object GraftApp {
       .start()
   }
 
-  /** `spark-submit graft.streaming.GraftApp <root> (--brokers b | --files dir) [--corpus dir]` */
-  def main(args: Array[String]): Unit = {
-    val root = args.headOption.getOrElse(sys.error("usage: GraftApp <root> [--brokers b|--files dir]"))
+  /** [[main]]'s session. On a local master whose spark-submit and
+    * spark-defaults leave `spark.sql.shuffle.partitions` unset, it is set
+    * to one partition per default-parallelism slot: at Spark's default
+    * of 200, a 2k-message batch takes about 45 s on 4 cores. A cluster
+    * keeps its submitted value or Spark's default, because
+    * `defaultParallelism` read at start counts only the cores registered
+    * so far (as few as 2 under dynamic allocation); cluster behaviour of
+    * either value is unmeasured. A new checkpoint records the value in
+    * its offset log and every restart restores it, so the count a query
+    * first starts with holds for the life of its checkpoint.
+    */
+  private[graft] def session(): SparkSession = {
     val spark = SparkSession.builder()
       .appName("graft-consumer")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
+    val sc = spark.sparkContext
+    if (sc.isLocal && !spark.sessionState.conf.contains("spark.sql.shuffle.partitions"))
+      spark.conf.set("spark.sql.shuffle.partitions", sc.defaultParallelism.toString)
+    spark
+  }
+
+  /** `spark-submit graft.streaming.GraftApp <root> (--brokers b | --files dir) [--corpus dir]` */
+  def main(args: Array[String]): Unit = {
+    val root = args.headOption.getOrElse(sys.error("usage: GraftApp <root> [--brokers b|--files dir]"))
+    val spark = session()
     val conf = Conf(root,
       bucketedRib = sys.env.get("GRAFT_NUM_BUCKETS").map(_.toInt),
       corpusDir = args.sliding(2).collectFirst { case Array("--corpus", d) => d })

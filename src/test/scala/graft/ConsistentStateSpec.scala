@@ -133,4 +133,33 @@ class ConsistentStateSpec extends SparkSpec {
     } finally { stop = true; reader.join(10000) }
     assert(torn.isEmpty, torn.getOrElse(""))
   }
+
+  test("concurrent stages of distinct tables publish in one commit; a table stages once per txn") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("cstate5").toString
+    val txn = ConsistentState.begin(spark, root)
+    val tables = (0 until 8).map(i => s"t$i")
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = tables.zipWithIndex.map { case (t, i) =>
+      new Thread(() => try { txn.stage(t, Seq(i).toDF("x")); () }
+        catch { case e: Throwable => failures.add(e); () })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(failures.isEmpty, failures.toString)
+
+    // nothing visible before the one commit; all 8 at once after it
+    assert(ConsistentState.readManifest(spark, root).isEmpty)
+    assert(txn.commit() === tables.map(_ -> 0).toMap)
+    val snap = ConsistentState.readConsistent(spark, root, tables)
+    tables.zipWithIndex.foreach { case (t, i) =>
+      assert(snap(t).as[Int].collect().toSeq === Seq(i), t)
+    }
+
+    // a second stage of one table would race the first over v<N>
+    val again = ConsistentState.begin(spark, root)
+    again.stage("t", Seq(1).toDF("x"))
+    val e = intercept[IllegalArgumentException] { again.stage("t", Seq(2).toDF("x")) }
+    assert(e.getMessage.contains("already staged"), e.getMessage)
+  }
 }

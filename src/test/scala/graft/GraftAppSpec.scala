@@ -2,9 +2,53 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{ConsistentState, GraftApp}
+
+/** Fault-injecting local filesystem (`faulty://` scheme) aimed at one
+  * table's snapshot write, in the style of [[CrashyRenameFs]]: while
+  * `failOn` names a table, the next file created under its `v<N>`
+  * directory throws (one-shot); while `stallOn` names one, creating its
+  * `_SUCCESS` marker blocks until the thread is interrupted (at most a
+  * minute). The marker is written by the job commit on the thread that
+  * runs the write, so the stall holds a batch thread, not a task.
+  */
+class FaultyWriteFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "faulty"
+  override def getUri: java.net.URI = java.net.URI.create("faulty:///")
+  private def inject(f: Path): Unit = {
+    def hits(t: Option[String]) = t.exists(n => f.toString.contains(s"/$n/v"))
+    if (hits(FaultyWriteFs.failOn)) {
+      FaultyWriteFs.failOn = None
+      throw new java.io.IOException(s"injected write failure at $f")
+    }
+    if (hits(FaultyWriteFs.stallOn) && f.getName == "_SUCCESS") {
+      FaultyWriteFs.stalled = true
+      Thread.sleep(60000)
+    }
+  }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable) = {
+    inject(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable) = {
+    inject(f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+object FaultyWriteFs {
+  @volatile var failOn: Option[String] = None
+  @volatile var stallOn: Option[String] = None
+  @volatile var stalled = false
+}
 
 /** E2e over the production entrypoint's OWN wiring (not the pieces):
   * fixture TSV streams for multiple message types flow through
@@ -440,5 +484,90 @@ class GraftAppSpec extends SparkSpec {
       val prefixes = cdc.select("prefix").collect().map(_.getString(0)).sorted.toSeq
       assert(prefixes === Seq("192.0.2.0", "198.51.100.0", "203.0.113.0"))
     } finally q.stop()
+  }
+
+  private def batchThreads: Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
+      .filter(_.startsWith(GraftApp.BatchThreadPrefix))
+
+  private def tsvBatch(lines: (String, String)*) = {
+    import spark.implicits._
+    lines.toDF("topic", "line")
+      .select(concat(lit(GraftApp.TopicPrefix), col("topic")).as("topic"), col("line"))
+  }
+
+  test("a failed table write fails the batch after every pipeline exits; the replay commits once") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyWriteFs].getName)
+    val local = Files.createTempDirectory("graftapp5_root")
+    val root  = s"faulty://$local"
+    val conf  = GraftApp.Conf(root, registerViews = false)
+    GraftApp.processBatch(tsvBatch(
+      "collector" -> collectorLine("c1", "started", ts0),
+      "router" -> routerLine("r1", "router-one", "10.0.0.1", "2024-01-01 00:00:01.000000", "init", "c1"),
+      "peer" -> peerLine("p1", "r1", "10.1.1.1", "peer-one", "10.1.1.1", 65001, "up",
+        "2024-01-01 00:00:02.000000"),
+      "base_attribute" -> attrLine("a1", "p1", 65002, "2024-01-01 00:00:03.000000"),
+      "unicast_prefix" -> prefixLine("u1", "p1", "a1", "192.0.2.0", 24,
+        "2024-01-01 00:00:04.000000", withdrawn = false)), 0L, conf)
+    val man0 = ConsistentState.readManifest(spark, root)
+    val current0 = Files.readAllBytes(local.resolve("_CURRENT"))
+
+    // batch 1: withdraw u1, advertise u2 — two CDC rows
+    val b1 = tsvBatch(
+      "unicast_prefix" -> prefixLine("u1", "p1", "", "192.0.2.0", 24,
+        "2024-01-01 00:01:00.000000", withdrawn = true),
+      "unicast_prefix" -> prefixLine("u2", "p1", "a1", "198.51.100.0", 24,
+        "2024-01-01 00:01:01.000000", withdrawn = false))
+    FaultyWriteFs.failOn = Some("ls_links")
+    try {
+      intercept[Exception](GraftApp.processBatch(b1, 1L, conf))
+      assert(FaultyWriteFs.failOn.isEmpty, "the injected fault never fired")
+      assert(batchThreads.isEmpty, s"batch threads outlived the failed batch: $batchThreads")
+      assert(Files.readAllBytes(local.resolve("_CURRENT")).sameElements(current0),
+        "a failed batch moved _CURRENT")
+    } finally FaultyWriteFs.failOn = None
+
+    // the replay under the same batch id commits once and rewrites the
+    // batch's CDC partition instead of adding to it
+    GraftApp.processBatch(b1, 1L, conf)
+    assert(ConsistentState.readManifest(spark, root) === man0.map { case (t, v) => t -> (v + 1) })
+    val cdc = spark.read.parquet(s"$root/ip_rib_log")
+    assert(cdc.filter(col("batch") === 1).count() === 2)
+    assert(cdc.count() === 3)
+  }
+
+  test("query stop during a running batch returns with no batch thread alive") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyWriteFs].getName)
+    val in    = Files.createTempDirectory("graftapp6_in").toString
+    val local = Files.createTempDirectory("graftapp6_root")
+    val conf  = GraftApp.Conf(s"faulty://$local", triggerMs = 50, registerViews = false)
+    writeTopic(in, "unicast_prefix", "b1.tsv",
+      prefixLine("u1", "p1", "a1", "192.0.2.0", 24, "2024-01-01 00:00:04.000000", withdrawn = false))
+    FaultyWriteFs.stallOn = Some("ls_links")
+    FaultyWriteFs.stalled = false
+    val q = GraftApp.start(GraftApp.fileSource(spark, in), conf)
+    try {
+      val deadline = System.currentTimeMillis() + 60000
+      while (!FaultyWriteFs.stalled && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(FaultyWriteFs.stalled, "the batch never reached the ls_links write")
+      assert(batchThreads.nonEmpty)
+      val t0 = System.currentTimeMillis()
+      q.stop()
+      assert(System.currentTimeMillis() - t0 < 30000, "stop waited out the stalled write")
+      assert(batchThreads.isEmpty, s"batch threads outlived query stop: $batchThreads")
+      assert(!Files.exists(local.resolve("_CURRENT")), "a stopped batch committed")
+    } finally { q.stop(); FaultyWriteFs.stallOn = None }
+  }
+
+  test("GraftApp.main's session: the submitted shuffle partitions, else default parallelism") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "7")
+      assert(GraftApp.session().conf.get(key) === "7")
+      spark.conf.unset(key)
+      assert(GraftApp.session().conf.get(key) ===
+        spark.sparkContext.defaultParallelism.toString)
+    } finally spark.conf.set(key, before)
   }
 }

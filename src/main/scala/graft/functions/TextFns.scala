@@ -136,11 +136,6 @@ object TextFns {
       .otherwise(size(array_distinct(toks)).cast("double") / size(toks).cast("double"))
   }
 
-  /** Punctuation character ratio. */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[\\.,;:!\\?'\"()\\[\\]{}-]", "")))
-      .cast("double") / length(text).cast("double")
-
   /** Ratio of tokens in the stopword list. */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
     val toks = tokens(text)

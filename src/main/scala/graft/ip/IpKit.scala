@@ -52,12 +52,6 @@ object IpKit {
     }
   }
 
-  def isIpv4(ip: String): Boolean =
-    !ip.contains(":") &&
-      (try com.google.common.net.InetAddresses.forString(ip.trim)
-        .isInstanceOf[Inet4Address]
-      catch { case _: IllegalArgumentException => false })
-
   /** (family, start, end) of a prefix "addr/len" (len optional → host). */
   def prefixRange(prefix: String): (Int, BigInteger, BigInteger) = {
     val (addrStr, lenOpt) = prefix.indexOf('/') match {
@@ -157,10 +151,6 @@ object IpKit {
     when(c.contains("/"), regexp_extract(c, "/(\\d+)$", 1).cast(IntegerType))
       .when(c.contains(":"), lit(128))
       .when(c.isNotNull, lit(32))
-
-  /** numeric [start,end] containment: does prefix (s1,e1) contain (s2,e2). */
-  def rangeContains(s1: Column, e1: Column, s2: Column, e2: Column): Column =
-    s1 <= s2 && e1 >= e2
 
   /** Derive (ip_start, ip_end, ip_family, ip_len) columns from a prefix
     * string column — the canonical enrichment applied at ingest so that

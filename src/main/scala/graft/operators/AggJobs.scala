@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The periodic-aggregation job runner — SURVEY §3.2's cron → plpgsql
@@ -60,15 +60,15 @@ object AggJobs {
     TimeAgg.chgStats(windowed, epochMicrosCol, bucketSec, withdrawnCond, keys)
   }
 
-  /** [[runChgStats]] against a bucket-partitioned stats store
-    * ([[StateTables.mergeChangedBuckets]] keyed (bucket ++ keys)): one
-    * cron run rewrites ONLY the key-hash bucket directories holding
-    * recomputed rows — write amplification ∝ touched buckets ≈ the
-    * horizon's group spread, not O(stats table). This is the columnar
-    * equivalent of the reference touching only conflicting rows
-    * (`2_aggregations.sql:91-130`); the snapshot-returning
-    * [[runChgStats]] rewrites the full table per run and should only be
-    * used for small stats tables or tests.
+  /** [[runChgStats]] against an n-bucket stats table
+    * ([[StateTables.mergeChangedBuckets]] keyed (bucket ++ keys)), staged
+    * in `txn` — the caller commits. One cron run rewrites ONLY the
+    * key-hash buckets holding recomputed rows — write amplification
+    * ∝ touched buckets ≈ the horizon's group spread, not O(stats table).
+    * This is the columnar equivalent of the reference touching only
+    * conflicting rows (`2_aggregations.sql:91-130`); the
+    * snapshot-returning [[runChgStats]] rewrites the full table per run
+    * and should only be used for small stats tables or tests.
     *
     * A recomputed whole bucket fully supersedes its stored row, so the
     * merge is pure last-write-wins: the `__tombstone` bookkeeping column
@@ -76,13 +76,11 @@ object AggJobs {
     * [[MergeOps.MergePolicy]] models withdraw semantics the stats path
     * never exercises.
     *
-    * Same single-writer contract as [[StateTables.mergeChangedBuckets]].
-    *
     * @return key-hash bucket ids rewritten (the run's write
     *         amplification, in buckets)
     */
-  def runChgStatsBucketed(spark: SparkSession, statsPath: String, log: DataFrame,
-                          epochMicrosCol: String, bucketSec: Long,
+  def runChgStatsBucketed(txn: graft.streaming.ConsistentState.Txn, table: String,
+                          log: DataFrame, epochMicrosCol: String, bucketSec: Long,
                           withdrawnCond: org.apache.spark.sql.Column,
                           keys: Seq[String], horizonMicros: Long, nowMicros: Long,
                           numBuckets: Int): Seq[Int] = {
@@ -94,7 +92,7 @@ object AggJobs {
       orderBy = Seq("updates"), // one row per key per run — any total order
       retainOnWithdraw = Nil,
       alwaysUpdate = Seq("withdraws", "updates"))
-    StateTables.mergeChangedBuckets(spark, statsPath,
+    StateTables.mergeChangedBuckets(txn, table,
       fresh.withColumn("__tombstone", lit(false)), policy, numBuckets)
   }
 }

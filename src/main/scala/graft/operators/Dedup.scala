@@ -473,15 +473,6 @@ object Dedup {
       .filter(col("n_shared") >= minOverlap)
   }
 
-  /** Exact Jaccard over candidate pairs carrying shingle arrays sh_a/sh_b. */
-  def verifyJaccard(pairs: DataFrame, threshold: Double): DataFrame =
-    pairs
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni").cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-
   /** Exact Jaccard for (id_a, id_b) candidate pairs against the exploded
     * shingle table: |∩| by a 3-way equi-join + count, |∪| = na+nb−|∩|.
     * Pure codegen'd joins/hash-aggs — no array payloads in any shuffle.

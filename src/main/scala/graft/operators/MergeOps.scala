@@ -236,18 +236,27 @@ object MergeOps {
     * rows of the given key whose timestamp predates the peer-up message.
     */
   def purgeStale(current: DataFrame, keyCol: String, tsCol: String, thresholds: DataFrame,
-                 thKeyCol: String, thTsCol: String): DataFrame = {
-    // latest peer-up per key: multiple up messages for one peer are
-    // legal on the bus; joining them un-deduped would DUPLICATE every
-    // surviving state row, and the newest threshold subsumes the rest
-    val th = broadcast(thresholds
-      .groupBy(col(thKeyCol).as("__pk"))
-      .agg(max(col(thTsCol)).as("__pts")))
+                 thKeyCol: String, thTsCol: String): DataFrame =
     current
-      .join(th, col(keyCol) === col("__pk"), "left")
+      .join(latestThreshold(thresholds, thKeyCol, thTsCol), col(keyCol) === col("__pk"), "left")
       .filter(col("__pts").isNull || col(tsCol) >= col("__pts"))
       .drop("__pk", "__pts")
-  }
+
+  /** The rows [[purgeStale]] drops. An inner join, so an empty
+    * threshold side plans to an empty result without scanning `current`.
+    */
+  def staleRows(current: DataFrame, keyCol: String, tsCol: String, thresholds: DataFrame,
+                thKeyCol: String, thTsCol: String): DataFrame =
+    current
+      .join(latestThreshold(thresholds, thKeyCol, thTsCol), col(keyCol) === col("__pk"))
+      .filter(!coalesce(col(tsCol) >= col("__pts"), lit(false)))
+      .drop("__pk", "__pts")
+
+  // latest peer-up per key: multiple up messages for one peer are legal
+  // on the bus; joining them un-deduped would DUPLICATE every surviving
+  // state row, and the newest threshold subsumes the rest
+  private def latestThreshold(thresholds: DataFrame, thKeyCol: String, thTsCol: String) =
+    broadcast(thresholds.groupBy(col(thKeyCol).as("__pk")).agg(max(col(thTsCol)).as("__pts")))
 
   /** SCD Type-2 intervalization of an update log: one validity
     * interval per accepted update — `valid_from` = the update's

@@ -593,42 +593,14 @@ object Similarity {
   def cosineNearDup(df: DataFrame, idCol: String, vecCol: String,
                     threshold: Double, dim: Int, planes: Int = 8,
                     tables: Int = 1, maxBucket: Int = Int.MaxValue): DataFrame = {
-    val (out, _) = cosineNearDupPlans(df, idCol, vecCol, threshold, dim, planes,
-      tables, maxBucket, cacheBase = false)
-    out
-  }
-
-  /** [[cosineNearDup]] with the base `(id, v)` frame PERSISTED across its
-    * tables+2 uses (per-table signatures + both verification joins).
-    * Worth it when the source is expensive to rescan AND fits the cache;
-    * at full corpus scale prefer the uncached variant — rescanning a
-    * column-pruned parquet beats spilling a corpus-sized cache. Call the
-    * returned release() after the final action on the result.
-    */
-  def cosineNearDupCached(df: DataFrame, idCol: String, vecCol: String,
-                          threshold: Double, dim: Int, planes: Int = 8,
-                          tables: Int = 1,
-                          maxBucket: Int = Int.MaxValue): (DataFrame, () => Unit) =
-    cosineNearDupPlans(df, idCol, vecCol, threshold, dim, planes, tables, maxBucket,
-      cacheBase = true)
-
-  private def cosineNearDupPlans(df: DataFrame, idCol: String, vecCol: String,
-                                 threshold: Double, dim: Int, planes: Int,
-                                 tables: Int, maxBucket: Int,
-                                 cacheBase: Boolean): (DataFrame, () => Unit) = {
     require(tables >= 1, s"tables ($tables) must be >= 1")
-    val base0 = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val base =
-      if (cacheBase) base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base0
-    val release: () => Unit = () => { if (cacheBase) { base.unpersist(); () } }
-    val out = cosineCandidates(base, dim, planes, tables, maxBucket)
+    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
+    cosineCandidates(base, dim, planes, tables, maxBucket)
       .join(base.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
       .join(base.select(col("id").as("id_b"), col("v").as("vb")), Seq("id_b"))
       .withColumn("cos", cosine(col("va"), col("vb")))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
-    (out, release)
   }
 
   /** SemDeDup-style semantic outlier scoring: cosine of every vector to

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Cross-table consistent snapshots — the engine's answer to the
   * reference getting multi-table read consistency for free from
@@ -11,40 +13,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per table), a reader can observe rib@batch N joined against
   * peers@batch N−1 — a torn view the reference cannot produce. This
   * module restores the invariant with a single commit point fanned over
-  * every table:
+  * every table. A table is a set of `n` key-hash buckets; `n` = 1 for
+  * the small tables, `n` > 1 for the RIB-scale ones:
   *
   * {{{
-  *   <root>/<table>/v<N>/   immutable parquet snapshot versions
-  *   <root>/_CURRENT        the ONE manifest: "<table>=<version>" lines
+  *   <root>/<table>/v<N>/                       1 bucket: the whole table at version N
+  *   <root>/<table>/v<N>/__bucket=<i>/          n buckets: bucket i as rewritten at N
+  *   <root>/<table>/v<N>/_BUCKETS               n buckets: bucket → version map of N
+  *   <root>/_CURRENT                            the ONE manifest: "<table>=<version>" lines
   * }}}
   *
   * A batch stages each table's next version to a NEW directory (never
-  * in place), then swaps `_CURRENT` once (tmp + atomic rename). Readers
-  * resolve the manifest ONCE ([[readConsistent]]) and pin every table's
-  * plan to the versions it names — a merge committing concurrently
-  * writes v(N+1) dirs and swaps the pointer, but never touches the vN
-  * files a pinned plan lists. Torn reads are impossible by
-  * construction: either the reader resolved before the swap (all tables
-  * at N) or after (all at N+1).
+  * in place): a 1-bucket table writes all its rows, an n-bucket table
+  * only the buckets the batch touched, plus an immutable map naming the
+  * version that holds each of its buckets (unchanged buckets keep
+  * pointing at older versions). Then `_CURRENT` is swapped once (tmp +
+  * atomic rename) — the only rename in the protocol. Readers resolve
+  * the manifest ONCE ([[readConsistent]]) and pin every table's plan to
+  * the versions it names, listing exactly the bucket directories the
+  * map names — a merge committing concurrently writes v(N+1) dirs and
+  * swaps the pointer, but never touches the files a pinned plan lists.
+  * Torn reads are impossible by construction: either the reader
+  * resolved before the swap (all tables at N) or after (all at N+1).
   *
   * Crash model ([[GraftApp.processBatch]] replays a crashed micro-batch
-  * under its original batch id): staging re-runs overwrite their own
-  * `v` directory (idempotent merge ⇒ identical content), the pointer
-  * swap is atomic, and pruning runs
-  * only after commit, keeping `keepVersions` per table so in-flight
-  * readers of recent snapshots survive. A crash between stage and
-  * commit leaves `_CURRENT` untouched — the replayed batch stages over
-  * the orphan dirs and commits once.
+  * under its original batch id): a crash anywhere before the pointer
+  * swap leaves `_CURRENT` untouched, so readers see the old state; the
+  * replayed batch opens a new txn on that state, overwrites its own
+  * orphan `v` directories (idempotent merge ⇒ identical content) and
+  * commits once. A crash after the swap leaves the new state published;
+  * the replay merges idempotently on top of it. Pruning runs only
+  * after the swap and deletes only what no retained version names.
   *
   * Version retention is the reader contract: a plan pinned at version N
   * stays valid for the next `keepVersions − 1` commits. Size it to the
   * longest query you run against live state (Iceberg/Delta snapshot
-  * retention, reduced to its essentials).
+  * retention, reduced to its essentials). A bucket directory is deleted
+  * once no map of the last `keepVersions` versions names it.
   *
-  * WRITER contract (same as [[graft.operators.StateTables]]'s bucket
-  * merge): ONE writer per root. The reference gets this from Postgres
-  * row locks; here [[GraftApp]] enforces it structurally — the whole
-  * topology is ONE streaming query, so one `Txn` exists at a time.
+  * WRITER contract: ONE writer per root. The reference gets this from
+  * Postgres row locks; here [[GraftApp]] enforces it structurally — the
+  * whole topology is ONE streaming query, so one `Txn` exists at a time.
   * Inside that txn, [[Txn.stage]] may be called from several threads,
   * one per table (GraftApp runs a batch's table pipelines
   * concurrently); staging a table twice in one txn is refused, and
@@ -67,12 +76,69 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object ConsistentState {
 
   private def fsOf(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The directory column an n-bucket table's rows are partitioned by. */
+  private[graft] val BucketCol = "__bucket"
+  private val MapFile = "_BUCKETS"
+
+  private def mapPath(root: String, table: String, version: Int) =
+    new Path(s"$root/$table/v$version", MapFile)
+
+  /** An n-bucket table version's map: the bucket function (`numBuckets`
+    * over `keys`), the union schema of every bucket it names (buckets
+    * not rewritten since a column was added null-fill it — `ALTER TABLE
+    * … ADD COLUMN` read semantics), and bucket → the version whose
+    * directory holds it. A bucket absent from the map is empty.
+    */
+  private[graft] final case class BucketMap(numBuckets: Int, keys: Seq[String],
+                                            schema: StructType, versions: Map[Int, Int]) {
+    def dir(root: String, table: String, bucket: Int): Path =
+      new Path(s"$root/$table/v${versions(bucket)}/$BucketCol=$bucket")
+
+    def render: String =
+      (Seq(s"buckets=$numBuckets", s"keys=${keys.mkString(",")}", s"schema=${schema.json}") ++
+        versions.toSeq.sorted.map { case (b, v) => s"$b=$v" }).mkString("", "\n", "\n")
+  }
+
+  /** The map of `table` at `version`; None for a 1-bucket table. */
+  private[graft] def bucketMap(spark: SparkSession, root: String, table: String,
+                               version: Int): Option[BucketMap] = {
+    val p  = mapPath(root, table, version)
+    val fs = fsOf(spark, root)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val lines = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val kv = lines.linesIterator.filter(_.nonEmpty).map { ln =>
+        val i = ln.indexOf('='); ln.take(i) -> ln.drop(i + 1)
+      }.toSeq
+      val m = kv.toMap
+      Some(BucketMap(m("buckets").toInt, m("keys").split(',').toSeq,
+        DataType.fromJson(m("schema")).asInstanceOf[StructType],
+        kv.collect { case (b, v) if b.forall(_.isDigit) => b.toInt -> v.toInt }.toMap))
+    }
+  }
+
+  /** `table` at `version` — with `buckets`, only those buckets of an
+    * n-bucket table (a 1-bucket table is always read whole).
+    */
+  private[graft] def readVersion(spark: SparkSession, root: String, table: String,
+                                 version: Int, buckets: Option[Seq[Int]] = None): DataFrame =
+    bucketMap(spark, root, table, version) match {
+      case None => spark.read.parquet(s"$root/$table/v$version")
+      case Some(m) =>
+        val dirs = m.versions.keys.toSeq.sorted
+          .filter(b => buckets.forall(_.contains(b))).map(m.dir(root, table, _).toString)
+        if (dirs.isEmpty)
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
+        else spark.read.schema(m.schema).parquet(dirs: _*)
+    }
 
   /** The committed manifest: table → version (empty before first commit). */
   def readManifest(spark: SparkSession, root: String): Map[String, Int] = {
     val fs = fsOf(spark, root)
-    val p  = new org.apache.hadoop.fs.Path(root, "_CURRENT")
+    val p  = new Path(root, "_CURRENT")
     if (!fs.exists(p)) Map.empty
     else {
       val in = fs.open(p)
@@ -93,29 +159,46 @@ object ConsistentState {
   def readConsistent(spark: SparkSession, root: String,
                      tables: Seq[String]): Map[String, DataFrame] = {
     val man = readManifest(spark, root)
-    tables.flatMap(t => man.get(t).map(v =>
-      t -> spark.read.parquet(s"$root/$t/v$v"))).toMap
+    tables.flatMap(t => man.get(t).map(v => t -> readVersion(spark, root, t, v))).toMap
   }
 
   /** An in-flight multi-table commit. Stage every table, then [[commit]]
     * exactly once — nothing is visible to [[readConsistent]] until then.
     */
-  final class Txn private[ConsistentState] (spark: SparkSession, root: String) {
+  final class Txn private[ConsistentState] (private[graft] val spark: SparkSession,
+                                            private[graft] val root: String) {
     private val base = readManifest(spark, root)
     private var staged = Map.empty[String, Int] // guarded by `this`
 
+    /** The table's committed version as of txn start (None = never committed). */
+    private[graft] def version(table: String): Option[Int] = base.get(table)
+
+    /** The table's committed bucket map as of txn start (None = 1 bucket or never committed). */
+    private[graft] def bucketMap(table: String): Option[BucketMap] =
+      base.get(table).flatMap(ConsistentState.bucketMap(spark, root, table, _))
+
     /** The table's committed snapshot as of txn start (None = never
-      * committed). All `current` reads inside one txn are mutually
+      * committed); with `buckets`, only those buckets of an n-bucket
+      * table. All `current` reads inside one txn are mutually
       * consistent — the manifest was resolved once at txn open.
       */
-    def current(table: String): Option[DataFrame] =
-      base.get(table).map(v => spark.read.parquet(s"$root/$table/v$v"))
+    def current(table: String, buckets: Option[Seq[Int]] = None): Option[DataFrame] =
+      base.get(table).map(readVersion(spark, root, table, _, buckets))
 
-    /** Compute-and-stage the table's next version. The write runs NOW
-      * (so later stages can read this table's fresh state without
-      * recomputing the plan); visibility waits for [[commit]]. Returns
-      * the WRITTEN frame — downstream plans in the same batch should
-      * build on it (truncated lineage, one compute).
+    private def claim(table: String): Int = {
+      val v = base.getOrElse(table, -1) + 1
+      synchronized {
+        require(!staged.contains(table), s"$table is already staged in this txn")
+        staged += table -> v
+      }
+      v
+    }
+
+    /** Compute-and-stage the 1-bucket table's next version. The write
+      * runs NOW (so later stages can read this table's fresh state
+      * without recomputing the plan); visibility waits for [[commit]].
+      * Returns the WRITTEN frame — downstream plans in the same batch
+      * should build on it (truncated lineage, one compute).
       *
       * Thread-safe across tables. A table stages at most once per txn:
       * a second stage would race the first over the same `v` directory.
@@ -123,12 +206,7 @@ object ConsistentState {
       * a new one.
       */
     def stage(table: String, next: DataFrame): DataFrame = {
-      val v   = base.getOrElse(table, -1) + 1
-      val dir = s"$root/$table/v$v"
-      synchronized {
-        require(!staged.contains(table), s"$table is already staged in this txn")
-        staged += table -> v
-      }
+      val dir = s"$root/$table/v${claim(table)}"
       // overwrite: a replayed batch (crash before commit/checkpoint)
       // re-stages the same version dir; the idempotent merge makes the
       // content identical
@@ -136,8 +214,33 @@ object ConsistentState {
       spark.read.parquet(dir)
     }
 
+    /** Stage the n-bucket table's next version: `rows` (partitioned by
+      * [[BucketCol]]) are every row of the `touched` buckets, which are
+      * written under the new version dir; the other buckets keep the
+      * versions the committed map names. A touched bucket left with no
+      * rows drops out of the map. Same threading and replay rules as
+      * [[stage]].
+      */
+    private[graft] def stageBuckets(table: String, numBuckets: Int, keys: Seq[String],
+                                    touched: Seq[Int], rows: DataFrame): Unit = {
+      val v   = claim(table)
+      val dir = new Path(s"$root/$table/v$v")
+      rows.write.mode("overwrite").partitionBy(BucketCol).parquet(dir.toString)
+      val fs = fsOf(spark, root)
+      val written = fs.listStatus(dir).map(_.getPath.getName)
+        .filter(_.startsWith(s"$BucketCol=")).map(_.stripPrefix(s"$BucketCol=").toInt).toSet
+      require(written.subsetOf(touched.toSet),
+        s"$table v$v wrote buckets ${written.diff(touched.toSet)} outside the touched set")
+      val before = bucketMap(table).map(_.versions).getOrElse(Map.empty[Int, Int])
+      val map = BucketMap(numBuckets, keys, rows.drop(BucketCol).schema,
+        before -- touched ++ written.map(_ -> v))
+      val out = fs.create(new Path(dir, MapFile), true)
+      try out.write(map.render.getBytes("UTF-8")) finally out.close()
+    }
+
     /** Atomically publish every staged table (one pointer swap), then
-      * prune versions older than `keepVersions` per staged table.
+      * prune what the last `keepVersions` versions of each staged table
+      * no longer name.
       *
       * Refuses (`ConcurrentModificationException`) if `_CURRENT` moved
       * since this txn opened: a foreign writer committed, this txn's
@@ -158,30 +261,64 @@ object ConsistentState {
             "the foreign writer's rows.")
       val published = synchronized(staged)
       val man = base ++ published
-      val ptr = new org.apache.hadoop.fs.Path(root, "_CURRENT")
       // atomic overwrite (no delete-then-rename): a reader racing the
       // commit must see old-or-new, never a missing manifest — a missing
       // one reads as "nothing ever committed" and un-publishes every
       // table at once
       graft.operators.StateTables.replacePointerFile(fs,
-        spark.sessionState.newHadoopConf(), ptr,
+        spark.sessionState.newHadoopConf(), new Path(root, "_CURRENT"),
         man.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" }
           .mkString("", "\n", "\n").getBytes)
       published.foreach { case (t, v) =>
-        // walk DOWN from the newest prunable version and stop at the
-        // first gap: previous commits already pruned below it, so the
-        // steady-state cost is one delete + one existence probe per
-        // table per commit, not O(all versions ever)
-        var old = v - keepVersions
-        var hit = true
-        while (old >= 0 && hit) {
-          val dir = new org.apache.hadoop.fs.Path(s"$root/$t/v$old")
-          hit = fs.exists(dir)
-          if (hit) fs.delete(dir, true)
-          old -= 1
+        if (fs.exists(mapPath(root, t, v))) pruneBuckets(fs, t, v, keepVersions)
+        else {
+          // walk DOWN from the newest prunable version and stop at the
+          // first gap: previous commits already pruned below it, so the
+          // steady-state cost is one delete + one existence probe per
+          // table per commit, not O(all versions ever)
+          var old = v - keepVersions
+          var hit = true
+          while (old >= 0 && hit) {
+            val dir = new Path(s"$root/$t/v$old")
+            hit = fs.exists(dir)
+            if (hit) fs.delete(dir, true)
+            old -= 1
+          }
         }
       }
       man
+    }
+
+    /** Walk down from the newest version that left the window, while its
+      * map still exists: delete each bucket dir it names that no map in
+      * the window names, then the map itself (a crash in between redoes
+      * the same deletes next commit), then version dirs left with
+      * neither buckets nor a map.
+      */
+    private def pruneBuckets(fs: org.apache.hadoop.fs.FileSystem, t: String, v: Int,
+                             keepVersions: Int): Unit = {
+      val live = (math.max(0, v - keepVersions + 1) to v)
+        .flatMap(w => ConsistentState.bucketMap(spark, root, t, w)).flatMap(_.versions).toSet
+      val emptied = scala.collection.mutable.Set.empty[Int]
+      var old = v - keepVersions
+      while (old >= 0 && fs.exists(mapPath(root, t, old))) {
+        val m = ConsistentState.bucketMap(spark, root, t, old).get
+        m.versions.filterNot(live).foreach { case (b, w) =>
+          fs.delete(m.dir(root, t, b), true)
+          emptied += w
+        }
+        fs.delete(mapPath(root, t, old), false)
+        emptied += old
+        old -= 1
+      }
+      emptied.foreach { w =>
+        val dir = new Path(s"$root/$t/v$w")
+        if (fs.exists(dir) && !fs.listStatus(dir).exists { st =>
+              val n = st.getPath.getName
+              n.startsWith(s"$BucketCol=") || n == MapFile
+            })
+          fs.delete(dir, true)
+      }
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -24,7 +24,7 @@ import graft.views.BmpViews
   *
   *  - cascades see fresh upstream state (a router-up in batch N downs
   *    peers in batch N, not N+1 — T6–T9 inline, like the triggers);
-  *  - ONE commit point per micro-batch: every versioned table is staged
+  *  - ONE commit point per micro-batch: every state table is staged
   *    then published by a single [[ConsistentState]] manifest swap, so
   *    `v_ip_routes` can never join rib@N against peers@N−1 (the MVCC
   *    parity the per-table queries give up);
@@ -34,13 +34,14 @@ import graft.views.BmpViews
   *    peer_events, base_attrs, and each rib-scale, stat and link-state
   *    table) run on their own threads, joined before the commit.
   *
-  * Two state regimes, chosen per deployment by [[Conf.bucketedRib]]:
-  * versioned snapshots for everything (atomic cross-table reads; write
-  * amplification O(state) per batch — the reference-scale default), or
-  * changed-bucket layout ([[StateTables.mergeChangedBuckets]]) for the
-  * five RIB-scale tables (write ∝ update spread — the 100 TB regime;
-  * inventory tables stay versioned+consistent, and the rib trades the
-  * cross-table manifest for bounded writes, converging a batch behind).
+  * Every table is a set of key-hash buckets merged by
+  * [[StateTables.mergeChangedBuckets]]. The inventory tables have one
+  * bucket, rewritten whole each batch. The five RIB-scale tables have
+  * [[Conf.ribBuckets]]: 1 by default (write amplification O(state) per
+  * batch — the reference-scale setting), or `n` for the 100 TB regime,
+  * where a batch rewrites only the buckets its updates and T9 purges
+  * touch (write ∝ update spread). Either way the batch commits through
+  * the one manifest.
   *
   * The reference's staged topic subscribe (`ConsumerRunnable.java:
   * 1054-1084` — inventory topics first, so prefixes never arrive before
@@ -61,8 +62,8 @@ object GraftApp {
 
   /** Deployment knobs. `root` holds every table, log, and checkpoint:
     * {{{
-    *   <root>/<table>/v<N>, <root>/_CURRENT      versioned + manifest
-    *   <root>/<table>/snapshot/__bucket=<i>      bucketed regime
+    *   <root>/<table>/v<N>, <root>/_CURRENT      table versions + the manifest
+    *                                             (see ConsistentState)
     *   <root>/<table>_log/batch=<id>             CDC / append logs
     *   <root>/_checkpoint                        the ONE query's offsets
     * }}}
@@ -70,19 +71,18 @@ object GraftApp {
   final case class Conf(
       root: String,
       triggerMs: Long = 300, // reference batch_time_millis (Config.java:70)
-      bucketedRib: Option[Int] = None, // Some(numBuckets) → 100 TB rib regime
+      ribBuckets: Int = 1, // key-hash buckets per RIB-scale table; n > 1 → 100 TB rib regime
       keepVersions: Int = 2,
       registerViews: Boolean = true,
-      maintenanceEvery: Int = 0, // bucketed regime: micro-batches between maintenance passes (0 = off)
+      maintenanceEvery: Int = 0, // micro-batches between maintenance passes (0 = off)
       retentionUs: Option[Long] = None,
       corpusDir: Option[String] = None) // LLM-corpus parquet dir → curation views
 
-  /** Tables that live under the consistent versioned manifest. In
-    * bucketed mode the rib-scale tables move to the bucket layout and
-    * drop out of this set.
+  /** The RIB-scale tables (`Conf.ribBuckets` buckets, each with a
+    * `<table>_log` CDC log) and the 1-bucket inventory tables.
     */
-  private val VersionedRib = Seq("ip_rib", "l3vpn_rib", "ls_nodes", "ls_links", "ls_prefixes")
-  private val Inventory    = Seq("collectors", "routers", "bgp_peers", "base_attrs")
+  private val RibTables = Seq("ip_rib", "l3vpn_rib", "ls_nodes", "ls_links", "ls_prefixes")
+  private val Inventory = Seq("collectors", "routers", "bgp_peers", "base_attrs")
 
   // ---- sources ---------------------------------------------------------
 
@@ -153,36 +153,9 @@ object GraftApp {
         .select(col("hash_id"), col("ts_us"))
 
       def mergeRib(table: String, parsed: DataFrame, policy: MergeOps.MergePolicy,
-                   logName: String, purge: Boolean): Unit = {
-        val latest = MergeOps.dedupToLatest(
-          parsed.repartition(policy.keys.map(col): _*), policy.keys, policy.orderBy)
-        conf.bucketedRib match {
-          case Some(nb) =>
-            // 100 TB regime: in-place changed-bucket merge, CDC keyed by
-            // batch id; T9 purge via predicate delete on the same layout
-            if (purge)
-              purgePredicate(peerUps).foreach(p =>
-                StateTables.deleteMatching(spark, s"$root/$table/snapshot", p))
-            StateTables.mergeChangedBuckets(spark, s"$root/$table/snapshot",
-              latest, policy, nb, logPath = Some(s"$root/$logName"),
-              batchId = Some(batchId))
-            ()
-          case None =>
-            val base = cur(table, latest)
-            val purged =
-              if (purge)
-                MergeOps.purgeStale(base, "peer_hash_id", "ts_us",
-                  peerUps, "hash_id", "ts_us")
-              else base
-            val (next, log, release) =
-              MergeOps.upsertWithLogCached(purged, latest, policy)
-            try {
-              StateTables.writeCdcBatch(spark, log, s"$root/$logName", Some(batchId))
-              txn.stage(table, next)
-            } finally release()
-            ()
-        }
-      }
+                   purge: Boolean): Unit =
+        GraftApp.mergeRib(txn, conf, batchId, table, parsed, policy,
+          if (purge) Some(peerUps) else None)
 
       // -- the independent pipelines, run concurrently -----------------
       // Each writes its own tables and logs; the reference's per-record
@@ -223,33 +196,33 @@ object GraftApp {
               Seq("hash_id"), Seq("ts_us", "peer_hash_id")))
         },
         "ip_rib" -> (() => mergeRib("ip_rib",
-          parse("unicast_prefix", lines("unicast_prefix")),
-          Ingest.ipRibPolicy, "ip_rib_log", purge = true)),
+          parse("unicast_prefix", lines("unicast_prefix")), Ingest.ipRibPolicy, purge = true)),
         "l3vpn_rib" -> (() => mergeRib("l3vpn_rib", parse("l3vpn", lines("l3vpn")),
-          Ingest.l3vpnRibPolicy, "l3vpn_rib_log", purge = true)),
+          Ingest.l3vpnRibPolicy, purge = true)),
         // M10 stat_reports: append-only, batch-keyed (idempotent replay)
         "stat_reports" -> (() => StateTables.writeCdcBatch(spark,
           parse("bmp_stat", lines("bmp_stat")), s"$root/stat_reports", Some(batchId))),
         "ls_nodes" -> (() => mergeRib("ls_nodes", parse("ls_node", lines("ls_node")),
-          Ingest.lsNodePolicy, "ls_nodes_log", purge = false)),
+          Ingest.lsNodePolicy, purge = false)),
         "ls_links" -> (() => mergeRib("ls_links", parse("ls_link", lines("ls_link")),
-          Ingest.lsLinkPolicy, "ls_links_log", purge = false)),
+          Ingest.lsLinkPolicy, purge = false)),
         "ls_prefixes" -> (() => mergeRib("ls_prefixes", parse("ls_prefix", lines("ls_prefix")),
-          Ingest.lsPrefixPolicy, "ls_prefixes_log", purge = false))))
+          Ingest.lsPrefixPolicy, purge = false))))
 
       // -- the ONE commit point ----------------------------------------
       txn.commit(conf.keepVersions)
 
-      // bucketed-regime housekeeping, serialized inside the batch so it
-      // never races the merge's _stage/_old dirs (see Ingest.maintain)
-      if (conf.bucketedRib.isDefined && conf.maintenanceEvery > 0 &&
-          batchId > 0 && batchId % conf.maintenanceEvery == 0)
-        VersionedRib.foreach { t =>
-          Ingest.maintain(spark, s"$root/$t", s"$root/${t}_log",
-            s"$root/${t}_log_compacted",
+      // housekeeping, serialized inside the batch after its commit so it
+      // never races the batch's txn (see Ingest.maintain)
+      if (conf.maintenanceEvery > 0 && batchId > 0 && batchId % conf.maintenanceEvery == 0) {
+        val housekeeping = ConsistentState.begin(spark, root)
+        val compacted = RibTables.flatMap { t =>
+          Ingest.maintain(housekeeping, t, s"$root/${t}_log", s"$root/${t}_log_compacted",
             retentionCutoffUs =
-              conf.retentionUs.map(r => System.currentTimeMillis() * 1000L - r))
+              conf.retentionUs.map(r => System.currentTimeMillis() * 1000L - r))._4
         }
+        if (compacted.nonEmpty) housekeeping.commit(conf.keepVersions)
+      }
     } finally { batch.unpersist(); () }
   }
 
@@ -291,17 +264,18 @@ object GraftApp {
     Option(failures.peek()).foreach(e => throw e)
   }
 
-  /** The T9 bucket-layout purge predicate: rows of an up-transitioned
-    * peer older than its (latest) up timestamp. Thresholds are a small
-    * driver-side list — peer-ups are rare control-plane events.
+  /** One RIB-scale table's part of batch `batchId`: merge `parsed`
+    * into `table` in `conf.ribBuckets` buckets inside `txn`, with the T9
+    * purge of `peerUps` (`hash_id`, `ts_us` of peers that came up) and
+    * the batch's CDC rows in `<root>/<table>_log`. The caller commits.
     */
-  private def purgePredicate(peerUps: DataFrame): Option[Column] = {
-    val ups = peerUps.groupBy(col("hash_id")).agg(max(col("ts_us")).as("ts_us"))
-      .collect() // bounded: peers that transitioned up in ONE micro-batch
-    if (ups.isEmpty) None
-    else Some(ups.map { r =>
-      col("peer_hash_id") === lit(r.getString(0)) && col("ts_us") < lit(r.getLong(1))
-    }.reduce(_ || _))
+  private[graft] def mergeRib(txn: ConsistentState.Txn, conf: Conf, batchId: Long,
+                              table: String, parsed: DataFrame,
+                              policy: MergeOps.MergePolicy, peerUps: Option[DataFrame]): Unit = {
+    StateTables.mergeChangedBuckets(txn, table,
+      parsed.repartition(policy.keys.map(col): _*), policy, conf.ribBuckets,
+      logPath = Some(s"${conf.root}/${table}_log"), batchId = Some(batchId), peerUps = peerUps)
+    ()
   }
 
   /** (Re-)register the full SQL surface over one consistent snapshot:
@@ -320,21 +294,7 @@ object GraftApp {
     */
   def registerViews(spark: SparkSession, conf: Conf): Unit = {
     conf.corpusDir.foreach(registerCorpus(spark, _))
-    val versioned = Inventory ++ (if (conf.bucketedRib.isEmpty) VersionedRib else Nil)
-    val snap = ConsistentState.readConsistent(spark, conf.root, versioned)
-    def bucketed(table: String): Option[DataFrame] = {
-      val p  = s"${conf.root}/$table/snapshot"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-      // bucket dirs, not bare existence: a marker-only root (crashed
-      // bootstrap) has no readable parquet schema yet
-      if (fs.exists(hp) && fs.listStatus(hp).exists(_.getPath.getName.startsWith("__bucket=")))
-        Some(StateTables.readSnapshot(spark, p)) // mergeSchema: mixed post-evolution buckets
-      else None
-    }
-    def tbl(name: String): Option[DataFrame] =
-      if (conf.bucketedRib.isDefined && VersionedRib.contains(name)) bucketed(name)
-      else snap.get(name)
+    val snap = ConsistentState.readConsistent(spark, conf.root, Inventory ++ RibTables)
     def log(name: String): Option[DataFrame] = {
       val p = s"${conf.root}/$name"
       val fs = new org.apache.hadoop.fs.Path(p)
@@ -343,7 +303,7 @@ object GraftApp {
         Some(spark.read.parquet(p)) else None
     }
 
-    (tbl("ip_rib"), snap.get("bgp_peers"), snap.get("base_attrs"), snap.get("routers")) match {
+    (snap.get("ip_rib"), snap.get("bgp_peers"), snap.get("base_attrs"), snap.get("routers")) match {
       case (Some(rib), Some(peers), Some(attrs), Some(routers)) =>
         // info_asn is cron-fed (Enrichment.loadInfoAsn); an empty frame
         // keeps v_peers total until the operator loads one
@@ -367,9 +327,9 @@ object GraftApp {
         }
         Seq("rpki_validator", "pdb_exchange_peers", "info_route")
           .foreach(t => log(t).foreach(_.createOrReplaceTempView(t)))
-        tbl("l3vpn_rib").foreach(l3 =>
+        snap.get("l3vpn_rib").foreach(l3 =>
           BmpViews.registerL3vpn(l3, peers, attrs, routers, log("l3vpn_rib_log")))
-        (tbl("ls_nodes"), tbl("ls_links"), tbl("ls_prefixes")) match {
+        (snap.get("ls_nodes"), snap.get("ls_links"), snap.get("ls_prefixes")) match {
           case (Some(n), Some(l), Some(p)) =>
             BmpViews.registerLinkState(n, l, p, peers, routers)
           case _ => ()
@@ -722,7 +682,7 @@ object GraftApp {
     val root = args.headOption.getOrElse(sys.error("usage: GraftApp <root> [--brokers b|--files dir]"))
     val spark = session()
     val conf = Conf(root,
-      bucketedRib = sys.env.get("GRAFT_NUM_BUCKETS").map(_.toInt),
+      ribBuckets = sys.env.get("GRAFT_NUM_BUCKETS").fold(1)(_.toInt),
       corpusDir = args.sliding(2).collectFirst { case Array("--corpus", d) => d })
     val source = args.sliding(2).collectFirst {
       case Array("--brokers", b) => kafkaSource(spark, b)

@@ -125,17 +125,15 @@ object Ingest {
       col("value").cast("string").as("line"),
       col("timestamp").as("kafka_ts"))
 
-  /** One maintenance pass over a bucketed-ingest deployment — the
+  /** One maintenance pass over one state table and its CDC log — the
     * engine's equivalent of the reference's cron-side housekeeping
     * (retention policies `1_base.sql:236,369`, autovacuum).
-    *
-    * MUST NOT run concurrently with the stream's merge: both sides use
-    * the snapshot's fixed `_stage`/`_old` siblings, so a parallel timer
-    * would corrupt buckets (stage overwrite, recovery misjudging a
-    * parked dir). [[GraftApp.processBatch]] calls this from WITHIN the
-    * micro-batch (every `Conf.maintenanceEvery` batches), where
-    * Structured Streaming serializes it against the merge; otherwise run
-    * it while no stream is active.
+    * [[GraftApp.processBatch]] calls this after the batch's commit (every
+    * `Conf.maintenanceEvery` batches) and commits `txn` once for all
+    * tables; otherwise run it while no stream is active — a bucket
+    * compaction staged beside the stream's txn is a foreign commit that
+    * one of the two refuses, and the CDC log compaction's
+    * `_stage`/`_old` siblings are single-writer.
     *
     * Order matters and is chosen so every step only destroys data the
     * previous step made redundant:
@@ -146,21 +144,20 @@ object Ingest {
     *     compaction hasn't folded;
     *  3. apply the retention policy as physical hour-partition drops on
     *     the compacted layout;
-    *  4. compact snapshot buckets whose file count outgrew
-    *     `maxFilesPerBucket` (the per-merge file accumulation).
-    *
-    * Single-writer contract: same as the bucketed merge in
-    * [[GraftApp.processBatch]] — one maintenance run at a time, on the
-    * same driver as the stream.
+    *  4. stage a compaction of the table's buckets whose file count
+    *     outgrew `maxFilesPerBucket` into `txn`
+    *     ([[graft.operators.StateTables.compactBuckets]]; a 1-bucket
+    *     table has none).
     *
     * @return (hours folded, raw batches dropped, aged hours dropped,
     *         buckets compacted)
     */
-  def maintain(spark: SparkSession, statePath: String, logPath: String,
+  def maintain(txn: ConsistentState.Txn, table: String, logPath: String,
                compactedPath: String, retentionCutoffUs: Option[Long] = None,
                keepRawBatches: Int = 2, maxFilesPerBucket: Int = 8,
                tsUsCol: String = "ts_us")
       : (Seq[String], Seq[String], Seq[String], Seq[Int]) = {
+    val spark = txn.spark
     val folded = compactLogIncremental(spark, logPath, compactedPath, tsUsCol)
     val droppedBatches = compactedThrough(spark, compactedPath) match {
       case Some(through) =>
@@ -171,8 +168,7 @@ object Ingest {
     val droppedHours = retentionCutoffUs
       .map(c => graft.operators.Retention.dropAgedHours(spark, compactedPath, c))
       .getOrElse(Nil)
-    val compacted = graft.operators.StateTables.compactBuckets(
-      spark, s"$statePath/snapshot", maxFilesPerBucket)
+    val compacted = graft.operators.StateTables.compactBuckets(txn, table, maxFilesPerBucket)
     (folded, droppedBatches, droppedHours, compacted)
   }
 
@@ -251,9 +247,8 @@ object Ingest {
     *    it — work ∝ new data;
     *  - the new rows are unioned with ONLY the hour partitions they
     *    touch (partition-pruned read) and swapped in per-hour via the
-    *    same park-aside machinery as the bucketed state
-    *    ([[graft.operators.StateTables.swapStagedDirs]]), so untouched
-    *    hours are never opened;
+    *    park-aside swap ([[swapStagedDirs]]), so untouched hours are never
+    *    opened;
     *  - the marker moves (atomic tmp+rename) AFTER the swap, so a crash
     *    anywhere replays the same batches. Replay is EXACTLY idempotent
     *    — not by uniqueness assumptions but by provenance: compacted
@@ -266,7 +261,7 @@ object Ingest {
     *  - once the marker covers a batch id, the raw dir is safe for
     *    [[graft.operators.Retention.dropAgedBatches]].
     *
-    * Same single-writer contract as the bucketed merge. Do not point
+    * Single writer per `compactedPath` (see [[swapStagedDirs]]). Do not point
     * this and the full-rewrite [[compactLog]] at one `compactedPath`:
     * the incremental layout carries `__src_batch` (replay provenance)
     * that the full rewrite neither writes nor preserves.
@@ -279,7 +274,7 @@ object Ingest {
     import org.apache.hadoop.fs.{Path => HPath}
     val conf = spark.sessionState.newHadoopConf()
     val fs   = new HPath(compactedPath).getFileSystem(conf)
-    graft.operators.StateTables.recoverSwap(fs, compactedPath)
+    recoverSwap(fs, compactedPath)
 
     val marker = new HPath(compactedPath, "_COMPACTED_THROUGH")
     // pre-compaction sentinel is MinValue, NOT -1: bootstrap/backfill
@@ -321,7 +316,7 @@ object Ingest {
     existing.unionByName(fresh)
       .repartition(col("date_hour")) // one task per hour → one file each
       .write.mode("overwrite").partitionBy("date_hour").parquet(stage)
-    graft.operators.StateTables.swapStagedDirs(fs, stage, compactedPath,
+    swapStagedDirs(fs, stage, compactedPath,
       touched.map(h => s"date_hour=$h"))
 
     // atomic overwrite: a reader racing the marker move must see the old
@@ -331,6 +326,60 @@ object Ingest {
       spark.sessionState.newHadoopConf(), marker,
       freshIds.max.toString.getBytes)
     touched.map(h => s"date_hour=$h")
+  }
+
+  /** [[compactLogIncremental]]'s crash-safe staged-directory swap: for
+    * each named child dir, park the current copy ASIDE under `<path>_old`
+    * (outside partition discovery), move the staged one in, drop the
+    * parked copy; delete the stage root last. Any crash leaves each dir
+    * either swapped or parked — [[recoverSwap]] restores parked ones on
+    * the next run. Single writer: the `_stage`/`_old` siblings are fixed.
+    */
+  private def swapStagedDirs(fs: org.apache.hadoop.fs.FileSystem,
+                             stage: String, path: String, names: Seq[String]): Unit = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val asideRoot = new HPath(path + "_old")
+    fs.mkdirs(new HPath(path))
+    fs.mkdirs(asideRoot)
+    names.foreach { n =>
+      val dst   = new HPath(path, n)
+      val src   = new HPath(stage, n)
+      val aside = new HPath(asideRoot, n)
+      // a name missing from the stage is corruption: compaction output
+      // always contains every touched hour, so silently deleting the
+      // parked copy here would turn an anomaly (partial stage write,
+      // external cleanup) into silent data loss — fail BEFORE parking so
+      // recoverSwap has nothing to misjudge
+      if (!fs.exists(src))
+        sys.error(s"staged swap: $src missing from stage — refusing to drop $dst")
+      fs.delete(aside, true)
+      if (fs.exists(dst) && !fs.rename(dst, aside))
+        sys.error(s"staged swap: failed to park $dst")
+      if (!fs.rename(src, dst))
+        sys.error(s"staged swap: failed to move $src into place")
+      fs.delete(aside, true)
+    }
+    fs.delete(asideRoot, true)
+    fs.delete(new HPath(stage), true)
+  }
+
+  /** Recovery pre-pass for [[swapStagedDirs]] callers: any directory
+    * still parked under `<path>_old` belongs to a swap that crashed
+    * between park and move — if its slot is empty, move it back; if the
+    * slot was filled (crash after the move), drop the parked copy.
+    */
+  private def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
+    val asideRoot = new org.apache.hadoop.fs.Path(path + "_old")
+    if (fs.exists(asideRoot)) {
+      fs.listStatus(asideRoot).foreach { st =>
+        val dst = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
+        if (!fs.exists(dst)) {
+          if (!fs.rename(st.getPath, dst))
+            sys.error(s"staged swap recovery: failed to restore ${st.getPath}")
+        } else fs.delete(st.getPath, true)
+      }
+      fs.delete(asideRoot, true)
+    }
   }
 
   /** The ONE way to read a CDC log that is being incrementally

@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.MergeOps.MergePolicy
+import graft.operators.StateTables
 import graft.streaming.ConsistentState
 
 /** The MVCC-parity property ([[ConsistentState]]): a reader that
@@ -70,6 +72,36 @@ class ConsistentStateSpec extends SparkSpec {
     t3.commit()
     val dirs = new java.io.File(s"$root/t").listFiles().map(_.getName).toSet
     assert(dirs === Set("v1", "v2"), s"unexpected versions: $dirs")
+
+    // an n-bucket table: a reader pinned at N keeps reading its rows
+    // through keepVersions − 1 later commits that rewrite its buckets
+    val keep = 3
+    val policy = MergePolicy(Seq("k"), "wd", Seq("gen"), Nil, Seq("gen"))
+    def commitB(gen: Int, keys: Seq[Int]): Unit = {
+      val txn = ConsistentState.begin(spark, root)
+      StateTables.mergeChangedBuckets(txn, "b", keys.map(k => (k, gen, false)).toDF("k", "gen", "wd"),
+        policy, 4)
+      txn.commit(keep)
+    }
+    commitB(1, 0 until 16)
+    val pinned = ConsistentState.readConsistent(spark, root, Seq("b"))("b")
+    (2 until 1 + keep).foreach(g => commitB(g, 0 until 16))
+    assert(pinned.select("k", "gen").as[(Int, Int)].collect().toSet ===
+      (0 until 16).map(_ -> 1).toSet)
+    // partial rewrites: untouched buckets stay named by newer maps, so
+    // pruning keeps exactly the bucket dirs the last `keep` maps name
+    (1 + keep until 3 + keep).foreach(g => commitB(g, Seq(0)))
+    val v = ConsistentState.readManifest(spark, root)("b")
+    val maps = (v - keep + 1 to v).map(w => ConsistentState.bucketMap(spark, root, "b", w).get)
+    val named = maps.flatMap(_.versions).map { case (b, w) => s"v$w/__bucket=$b" }.toSet
+    val onDisk = new java.io.File(s"$root/b").listFiles().toSeq.flatMap(d =>
+      d.listFiles().map(_.getName).filter(_.startsWith("__bucket=")).map(b => s"${d.getName}/$b"))
+    assert(onDisk.toSet === named)
+    assert(new java.io.File(s"$root/b").listFiles().map(_.getName).toSet ===
+      named.map(_.takeWhile(_ != '/')) ++ (v - keep + 1 to v).map(w => s"v$w"))
+    assert(ConsistentState.readConsistent(spark, root, Seq("b"))("b")
+      .select("k", "gen").as[(Int, Int)].collect().toSet ===
+      (1 until 16).map(_ -> keep).toSet + (0 -> (2 + keep)))
   }
 
   test("two concurrent txns on one root: the second commit refuses loudly") {

@@ -78,20 +78,27 @@ class EdgeCasesSpec extends SparkSpec {
   }
 
   test("changed-bucket merge with an empty micro-batch is a no-op") {
+    import graft.operators.StateTables
+    import graft.streaming.ConsistentState
     val policy = MergePolicy(Seq("k"), "wd", Seq("ts"), Seq("attr"), Seq("ts"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_cb_empty").toString + "/st"
+    val root = java.nio.file.Files.createTempDirectory("graft_cb_empty").toString
+    def merge(updates: org.apache.spark.sql.DataFrame): Seq[Int] = {
+      val txn = ConsistentState.begin(spark, root)
+      val touched = StateTables.mergeChangedBuckets(txn, "st", updates, policy, 4)
+      txn.commit()
+      touched
+    }
     val init = Seq(("a", 1L, "A", false), ("b", 1L, "B", false))
       .toDF("k", "ts", "attr", "wd")
-    graft.operators.StateTables.writeBucketPartitioned(init, dir, Seq("k"), 4)
-    val touched = graft.operators.StateTables.mergeChangedBuckets(
-      spark, dir, init.limit(0), policy, 4)
-    assert(touched.isEmpty)
-    assert(spark.read.parquet(dir).count() === 2) // state untouched
 
-    // empty FIRST batch against a not-yet-existing path is also safe
-    val fresh = java.nio.file.Files.createTempDirectory("graft_cb_boot").toString + "/st"
-    assert(graft.operators.StateTables.mergeChangedBuckets(
-      spark, fresh, init.limit(0), policy, 4).isEmpty)
+    // empty FIRST batch: nothing touched, the table is published empty
+    assert(merge(init.limit(0)).isEmpty)
+    assert(ConsistentState.readConsistent(spark, root, Seq("st"))("st").count() === 0)
+    merge(init)
+    val man = ConsistentState.readManifest(spark, root)
+    assert(merge(init.limit(0)).isEmpty)
+    assert(ConsistentState.readManifest(spark, root) === man) // nothing staged
+    assert(ConsistentState.readConsistent(spark, root, Seq("st"))("st").count() === 2)
   }
 
   test("round-7 ops on empty/degenerate inputs") {

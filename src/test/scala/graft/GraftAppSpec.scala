@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.{ConsistentState, GraftApp}
 
 /** Fault-injecting local filesystem (`faulty://` scheme) aimed at one
-  * table's snapshot write, in the style of [[CrashyRenameFs]]: while
+  * table's snapshot write, in the style of [[CrashingFs]]: while
   * `failOn` names a table, the next file created under its `v<N>`
   * directory throws (one-shot); while `stallOn` names one, creating its
   * `_SUCCESS` marker blocks until the thread is interrupted (at most a
@@ -412,10 +412,10 @@ class GraftAppSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("GraftApp bucketed regime: rib in changed-bucket layout, T9 purge via deleteMatching") {
+  test("GraftApp bucketed regime: rib buckets and T9 purge commit through _CURRENT") {
     val in   = Files.createTempDirectory("graftapp3_in").toString
     val root = Files.createTempDirectory("graftapp3_root").toString
-    val conf = GraftApp.Conf(root, triggerMs = 50, bucketedRib = Some(8))
+    val conf = GraftApp.Conf(root, triggerMs = 50, ribBuckets = 8)
 
     writeTopic(in, "collector", "b1.tsv", collectorLine("c1", "started", ts0))
     writeTopic(in, "router", "b1.tsv",
@@ -429,14 +429,29 @@ class GraftAppSpec extends SparkSpec {
       prefixLine("u1", "p1", "a1", "192.0.2.0", 24, "2024-01-01 00:00:03.000000", withdrawn = false),
       prefixLine("u2", "p1", "a1", "198.51.100.0", 24, "2024-01-01 00:00:04.000000", withdrawn = false))
 
+    // every file v_ip_routes reads belongs to a version one manifest names:
+    // rib buckets through that manifest's map, the other tables' v<N>
+    def readsOneManifest(): Unit = {
+      val man = ConsistentState.readManifest(spark, root)
+      val rib = ConsistentState.bucketMap(spark, root, "ip_rib", man("ip_rib")).get
+      val allowed = rib.versions.keys.map(b => rib.dir(root, "ip_rib", b).toUri.getPath).toSeq ++
+        Seq("bgp_peers", "base_attrs", "routers").map(t => s"$root/$t/v${man(t)}")
+      val files = spark.table("v_ip_routes").inputFiles.map(f => new Path(f).toUri.getPath)
+      assert(files.exists(_.contains("/ip_rib/")) && files.exists(_.contains("/bgp_peers/")))
+      files.foreach(f => assert(allowed.exists(d => f.startsWith(d + "/")),
+        s"$f is outside manifest $man"))
+    }
+
     val q = GraftApp.start(GraftApp.fileSource(spark, in), conf)
     try {
       q.processAllAvailable()
-      // rib landed in the bucket layout, not the versioned fan
-      assert(new java.io.File(s"$root/ip_rib/snapshot").listFiles()
+      // _CURRENT names every state table; rib rows live in bucket dirs
+      assert(ConsistentState.readManifest(spark, root).keySet === Set("collectors", "routers",
+        "bgp_peers", "base_attrs", "ip_rib", "l3vpn_rib", "ls_nodes", "ls_links", "ls_prefixes"))
+      assert(new java.io.File(s"$root/ip_rib/v0").listFiles()
         .exists(_.getName.startsWith("__bucket=")))
-      assert(!ConsistentState.readManifest(spark, root).contains("ip_rib"))
       assert(spark.sql("SELECT * FROM v_ip_routes").count() === 2)
+      readsOneManifest()
 
       // peer-up between the two rib timestamps purges only the older row
       writeTopic(in, "peer", "b2.tsv",
@@ -445,45 +460,53 @@ class GraftAppSpec extends SparkSpec {
       q.processAllAvailable()
       val left = spark.sql("SELECT prefix FROM ip_rib").collect().map(_.getString(0)).toSeq
       assert(left === Seq("198.51.100.0"))
+      assert(ConsistentState.readManifest(spark, root)("ip_rib") === 1)
+      readsOneManifest()
     } finally q.stop()
   }
 
   test("GraftApp integrated maintenance: CDC folds to hours mid-stream, reads stay exact") {
-    val in   = Files.createTempDirectory("graftapp4_in").toString
-    val root = Files.createTempDirectory("graftapp4_root").toString
-    val conf = GraftApp.Conf(root, triggerMs = 50, bucketedRib = Some(8),
-      maintenanceEvery = 1) // fold after every micro-batch
+    // the n-bucket rib regime and the 1-bucket default both run it
+    for (ribBuckets <- Seq(8, 1)) {
+      val in   = Files.createTempDirectory("graftapp4_in").toString
+      val root = Files.createTempDirectory("graftapp4_root").toString
+      val conf = GraftApp.Conf(root, triggerMs = 50, ribBuckets = ribBuckets,
+        maintenanceEvery = 1) // fold after every micro-batch
 
-    writeTopic(in, "peer", "b1.tsv",
-      peerLine("p1", "r1", "10.1.1.1", "peer-one", "10.1.1.1", 65001, "up",
-        "2024-01-01 00:00:02.000000"))
-    writeTopic(in, "unicast_prefix", "b1.tsv",
-      prefixLine("u1", "p1", "a1", "192.0.2.0", 24, "2024-01-01 00:00:03.000000", withdrawn = false))
+      writeTopic(in, "peer", "b1.tsv",
+        peerLine("p1", "r1", "10.1.1.1", "peer-one", "10.1.1.1", 65001, "up",
+          "2024-01-01 00:00:02.000000"))
+      writeTopic(in, "unicast_prefix", "b1.tsv",
+        prefixLine("u1", "p1", "a1", "192.0.2.0", 24, "2024-01-01 00:00:03.000000", withdrawn = false))
 
-    val q = GraftApp.start(GraftApp.fileSource(spark, in), conf)
-    try {
-      q.processAllAvailable()
-      // two more micro-batches, one hour apart — batchIds 1, 2 both
-      // trigger the inline maintenance pass (maintenanceEvery = 1)
-      writeTopic(in, "unicast_prefix", "b2.tsv",
-        prefixLine("u2", "p1", "a1", "198.51.100.0", 24, "2024-01-01 01:00:03.000000", withdrawn = false))
-      q.processAllAvailable()
-      writeTopic(in, "unicast_prefix", "b3.tsv",
-        prefixLine("u3", "p1", "a1", "203.0.113.0", 24, "2024-01-01 02:00:03.000000", withdrawn = false))
-      q.processAllAvailable()
+      val q = GraftApp.start(GraftApp.fileSource(spark, in), conf)
+      try {
+        q.processAllAvailable()
+        // two more micro-batches, one hour apart — batchIds 1, 2 both
+        // trigger the inline maintenance pass (maintenanceEvery = 1)
+        writeTopic(in, "unicast_prefix", "b2.tsv",
+          prefixLine("u2", "p1", "a1", "198.51.100.0", 24, "2024-01-01 01:00:03.000000", withdrawn = false))
+        q.processAllAvailable()
+        writeTopic(in, "unicast_prefix", "b3.tsv",
+          prefixLine("u3", "p1", "a1", "203.0.113.0", 24, "2024-01-01 02:00:03.000000", withdrawn = false))
+        q.processAllAvailable()
 
-      val compacted = new java.io.File(s"$root/ip_rib_log_compacted")
-      assert(compacted.isDirectory &&
-        compacted.listFiles().exists(_.getName.startsWith("date_hour=")),
-        "maintenance never folded the CDC log to the hourly layout")
-      assert(new java.io.File(compacted, "_COMPACTED_THROUGH").isFile)
-      // the unified reader must see every change exactly once across the
-      // compacted hours ∪ surviving raw batches seam, mid-maintenance
-      val cdc = graft.streaming.Ingest.readCdcLog(spark,
-        s"$root/ip_rib_log", s"$root/ip_rib_log_compacted")
-      val prefixes = cdc.select("prefix").collect().map(_.getString(0)).sorted.toSeq
-      assert(prefixes === Seq("192.0.2.0", "198.51.100.0", "203.0.113.0"))
-    } finally q.stop()
+        val compacted = new java.io.File(s"$root/ip_rib_log_compacted")
+        assert(compacted.isDirectory &&
+          compacted.listFiles().exists(_.getName.startsWith("date_hour=")),
+          s"maintenance never folded the CDC log to the hourly layout ($ribBuckets buckets)")
+        assert(new java.io.File(compacted, "_COMPACTED_THROUGH").isFile)
+        // the unified reader must see every change exactly once across the
+        // compacted hours ∪ surviving raw batches seam, mid-maintenance
+        val cdc = graft.streaming.Ingest.readCdcLog(spark,
+          s"$root/ip_rib_log", s"$root/ip_rib_log_compacted")
+        val prefixes = cdc.select("prefix").collect().map(_.getString(0)).sorted.toSeq
+        assert(prefixes === Seq("192.0.2.0", "198.51.100.0", "203.0.113.0"))
+        // a 1-bucket table is rewritten whole every batch: maintenance
+        // stages no second rewrite, so the rib moved one version per batch
+        if (ribBuckets == 1) assert(ConsistentState.readManifest(spark, root)("ip_rib") === 2)
+      } finally q.stop()
+    }
   }
 
   private def batchThreads: Seq[String] =

@@ -55,24 +55,28 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("changed-bucket state read prunes partitions at the scan") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prune").toString + "/st"
-    val df = (1 to 64).map(i => (s"k$i", i.toLong)).toDF("k", "v")
-    graft.operators.StateTables.writeBucketPartitioned(df, tmp, Seq("k"), 8)
-    val pruned = spark.read.parquet(tmp).filter(col("__bucket").isin(1, 2))
-    val scan = pruned.queryExecution.executedPlan.toString
-    // the isin lands in PartitionFilters, so only 2 of 8 directories are
-    // listed/read — the mechanism mergeChangedBuckets' current-read uses
-    assert(scan.contains("PartitionFilters") && scan.contains("__bucket"),
-      s"no partition filter on the bucket scan:\n$scan")
-    pruned.count() // execute so the scan metrics fill in
-    val scanned = pruned.queryExecution.executedPlan.collect {
+    import graft.operators.{MergeOps, StateTables}
+    import graft.streaming.ConsistentState
+    val root = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val df = (1 to 64).map(i => (s"k$i", i.toLong, false)).toDF("k", "v", "wd")
+    val boot = ConsistentState.begin(spark, root)
+    StateTables.mergeChangedBuckets(boot, "st", df,
+      MergeOps.MergePolicy(Seq("k"), "wd", Seq("v"), Nil, Seq("v")), 8)
+    boot.commit()
+    // the touched-bucket read mergeChangedBuckets uses lists only the
+    // named bucket directories, so only 2 of 8 are listed and read
+    val txn = ConsistentState.begin(spark, root)
+    val pruned = txn.current("st", Some(Seq(1, 2))).get
+    pruned.collect() // execute this plan so its scan metrics fill in
+    val scan = pruned.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head.metrics("numFiles").value
-    val total = spark.read.parquet(tmp).inputFiles.length
-    assert(scanned < total,
-      s"partition pruning did not reduce the file set ($scanned of $total)")
+    }.head
+    assert(scan.relation.location.rootPaths.map(_.getName).toSet ===
+      Set("__bucket=1", "__bucket=2"))
+    val total = txn.current("st").get.inputFiles.length
+    assert(scan.metrics("numFiles").value < total,
+      s"the bucket read did not reduce the file set (${scan.metrics("numFiles").value} of $total)")
   }
 
   test("q74 covering expansion is an equi-join (the NLJ it replaced can't come back)") {

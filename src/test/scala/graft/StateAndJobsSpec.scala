@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AggJobs, MergeOps, StateTables}
+import graft.streaming.ConsistentState
 import graft.operators.MergeOps.MergePolicy
 
 /** Bucketed state tables (Exchange elision on the snapshot side) and
@@ -34,34 +35,53 @@ class StateAndJobsSpec extends AnyFunSuite {
     keys = Seq("k"), withdrawnCol = "wd", orderBy = Seq("ts"),
     retainOnWithdraw = Seq("attr"), alwaysUpdate = Seq("ts"))
 
+  /** One committed merge of `updates` into table "t" under `root`. */
+  private def merge(root: String, updates: org.apache.spark.sql.DataFrame, numBuckets: Int,
+                    table: String = "t"): Seq[Int] = {
+    val txn = ConsistentState.begin(spark, root)
+    val touched = StateTables.mergeChangedBuckets(txn, table, updates, policy, numBuckets)
+    txn.commit()
+    touched
+  }
+  private def read(root: String, table: String = "t") =
+    ConsistentState.readConsistent(spark, root, Seq(table))(table)
+  private def committedMap(root: String, table: String) =
+    ConsistentState.bucketMap(spark, root, table,
+      ConsistentState.readManifest(spark, root)(table)).get
+  /** Parquet file names per bucket of the committed map (a rewrite
+    * generates fresh UUID part names, so equal sets mean "not rewritten").
+    */
+  private def bucketFiles(root: String, table: String = "t"): Map[Int, Set[String]] = {
+    val m = committedMap(root, table)
+    m.versions.keys.map(b => b -> new java.io.File(m.dir(root, table, b).toString).listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet")).toSet).toMap
+  }
+
   test("changed-bucket merge rewrites only buckets containing updated keys") {
-    val dir = Files.createTempDirectory("graft_cb").toString + "/state"
+    val root = Files.createTempDirectory("graft_cb").toString
     val init = (1 to 200).map(i => (s"k$i", 1L, s"A$i", false))
       .toDF("k", "ts", "attr", "wd")
-    StateTables.writeBucketPartitioned(init, dir, Seq("k"), 16)
-
-    def bucketFiles(): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("__bucket="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filter(_.endsWith(".parquet")).toSet).toMap
-    val before = bucketFiles()
+    merge(root, init, 16)
+    val before = bucketFiles(root)
     assert(before.size === 16)
 
     // updates: one changed key, one brand-new key
     val updates = Seq(("k1", 2L, "A1x", false), ("k999", 2L, "NEW", false))
       .toDF("k", "ts", "attr", "wd")
-    val touched = StateTables.mergeChangedBuckets(spark, dir, updates, policy, 16)
+    val touched = merge(root, updates, 16)
     assert(touched.size <= 2) // ≤ one bucket per distinct key
 
-    // untouched bucket dirs keep their exact file sets (parquet writes
-    // generate fresh UUID part names, so a rewrite would change them)
-    val after = bucketFiles()
-    before.keySet.filterNot(b => touched.map(t => s"__bucket=$t").contains(b))
+    // untouched buckets keep their exact file sets; the new version dir
+    // holds only the touched buckets
+    val after = bucketFiles(root)
+    before.keySet.diff(touched.toSet)
       .foreach(b => assert(after(b) === before(b), s"bucket $b was rewritten"))
-    touched.foreach(t => assert(after(s"__bucket=$t") !== before(s"__bucket=$t")))
+    touched.foreach(t => assert(after(t) !== before(t)))
+    assert(new java.io.File(s"$root/t/v1").listFiles().map(_.getName)
+      .filter(_.startsWith("__bucket=")).toSet === touched.map(t => s"__bucket=$t").toSet)
 
     // merged contents equal the reference full upsert
-    val got = spark.read.parquet(dir).drop("__bucket")
+    val got = read(root)
     val want = MergeOps.upsert(init, updates, policy)
     assert(got.count() === 201)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
@@ -70,51 +90,61 @@ class StateAndJobsSpec extends AnyFunSuite {
   }
 
   test("merge refuses a numBuckets different from the layout's recorded count") {
-    val dir = Files.createTempDirectory("graft_nb").toString + "/state"
+    val root = Files.createTempDirectory("graft_nb").toString
     val init = (1 to 50).map(i => (s"k$i", 1L, s"A$i", false))
       .toDF("k", "ts", "attr", "wd")
-    StateTables.writeBucketPartitioned(init, dir, Seq("k"), 16)
+    merge(root, init, 16)
     val upd = Seq(("k1", 2L, "A1x", false)).toDF("k", "ts", "attr", "wd")
-    val e = intercept[IllegalArgumentException] {
-      StateTables.mergeChangedBuckets(spark, dir, upd, policy, 8)
-    }
+    val e = intercept[IllegalArgumentException](merge(root, upd, 8))
     assert(e.getMessage.contains("numBuckets=16"))
-    // matching count still works, and the layout keeps its marker
-    StateTables.mergeChangedBuckets(spark, dir, upd, policy, 16)
-    assert(spark.read.parquet(dir).filter(col("k") === "k1")
-      .head().getAs[String]("attr") === "A1x")
+    // a 1-bucket table records no map: its count is 1
+    merge(root, init, 1, table = "one")
+    assert(intercept[IllegalArgumentException](merge(root, upd, 8, table = "one"))
+      .getMessage.contains("numBuckets=1"))
+    // matching count still works
+    merge(root, upd, 16)
+    assert(read(root).filter(col("k") === "k1").head().getAs[String]("attr") === "A1x")
   }
 
   test("bucket compaction coalesces only oversized buckets, content-preserving") {
-    val dir = Files.createTempDirectory("graft_cpct").toString + "/state"
+    val root = Files.createTempDirectory("graft_cpct").toString
     val init = (1 to 200).map(i => (s"k$i", 1L, s"A$i", false))
       .toDF("k", "ts", "attr", "wd")
-    StateTables.writeBucketPartitioned(init, dir, Seq("k"), 8)
-    // churn one key repeatedly → its bucket accumulates a file set per merge
-    for (ts <- 2L to 7L) {
-      val upd = Seq(("k1", ts, s"A1v$ts", false)).toDF("k", "ts", "attr", "wd")
-      StateTables.mergeChangedBuckets(spark, dir, upd, policy, 8)
+    merge(root, init, 8)
+    // rewrite k1's bucket from 3 uncoalesced shuffle partitions → up to
+    // one file per partition in that bucket, the others stay at one (a
+    // partition count dividing 8 would send each bucket to one partition:
+    // both hash the keys with the same function)
+    val confs = Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "3")
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try merge(root, Seq(("k1", 2L, "A1v2", false)).toDF("k", "ts", "attr", "wd"), 8)
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
-    def bucketFiles(): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("__bucket="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filter(_.endsWith(".parquet")).toSet).toMap
-    val before = bucketFiles()
-    val want = spark.read.parquet(dir).drop("__bucket").collect().toSet
+    val before = bucketFiles(root)
+    val want = read(root).collect().toSet
 
-    val compacted = StateTables.compactBuckets(spark, dir, maxFilesPerBucket = 2)
-    assert(compacted.nonEmpty) // the churned bucket qualified
-    val after = bucketFiles()
+    def compact(): Seq[Int] = {
+      val txn = ConsistentState.begin(spark, root)
+      val c = StateTables.compactBuckets(txn, "t", maxFilesPerBucket = 2)
+      txn.commit()
+      c
+    }
+    val compacted = compact()
+    assert(compacted.nonEmpty) // the rewritten bucket qualified
+    val after = bucketFiles(root)
     compacted.foreach { b =>
-      assert(after(s"__bucket=$b").size === 1,
-        s"bucket $b not coalesced: ${after(s"__bucket=$b")}")
+      assert(after(b).size === 1, s"bucket $b not coalesced: ${after(b)}")
     }
     // healthy buckets untouched (exact file sets), content identical
-    before.keySet.filterNot(b => compacted.map(c => s"__bucket=$c").contains(b))
+    before.keySet.diff(compacted.toSet)
       .foreach(b => assert(after(b) === before(b), s"healthy bucket $b rewritten"))
-    assert(spark.read.parquet(dir).drop("__bucket").collect().toSet === want)
+    assert(read(root).collect().toSet === want)
     // idempotent: immediately re-running compacts nothing
-    assert(StateTables.compactBuckets(spark, dir, maxFilesPerBucket = 2).isEmpty)
+    assert(compact().isEmpty)
   }
 
   test("stats job: re-run with late data converges (idempotent buckets)") {
@@ -166,38 +196,35 @@ class StateAndJobsSpec extends AnyFunSuite {
   }
 
   test("bucketed stats job: write amplification ∝ touched buckets across runs") {
-    val dir = Files.createTempDirectory("graft_stats").toString + "/chg_stats"
+    val root = Files.createTempDirectory("graft_stats").toString
+    def run(log: org.apache.spark.sql.DataFrame, horizonMicros: Long, nowMicros: Long): Seq[Int] = {
+      val txn = ConsistentState.begin(spark, root)
+      val touched = AggJobs.runChgStatsBucketed(txn, "chg_stats", log, "ts_us", 60, col("wd"),
+        Seq("user_id"), horizonMicros, nowMicros, numBuckets = 32)
+      txn.commit()
+      touched
+    }
     val bucketUs = 60L * 1000000
     def logOf(rows: Seq[(Long, Long, Boolean)]) = rows.toDF("ts_us", "user_id", "wd")
     // run 1 (bootstrap): 50 users × time-buckets 0..4 fill the layout
     val rows1 = for (u <- 1L to 50L; b <- 0L to 4L) yield (b * bucketUs + u, u, u % 3 == 0)
     val log1 = logOf(rows1)
-    val t1 = AggJobs.runChgStatsBucketed(spark, dir, log1, "ts_us", 60, col("wd"),
-      Seq("user_id"), horizonMicros = 10 * bucketUs + 5,
-      nowMicros = 10 * bucketUs + 5, numBuckets = 32)
+    val t1 = run(log1, horizonMicros = 10 * bucketUs + 5, nowMicros = 10 * bucketUs + 5)
     assert(t1.nonEmpty)
-
-    def bucketFiles(): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("__bucket="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filter(_.endsWith(".parquet")).toSet).toMap
-    val before = bucketFiles()
+    val before = bucketFiles(root, "chg_stats")
 
     // run 2: new events for 3 users in time-bucket 8, horizon covering
     // only buckets 8..9 → fresh is 3 rows → ≤3 key-hash buckets touched
     val rows2 = Seq((8 * bucketUs + 1, 7L, false), (8 * bucketUs + 2, 8L, true),
       (8 * bucketUs + 3, 9L, false))
     val log2 = log1.unionByName(logOf(rows2))
-    val t2 = AggJobs.runChgStatsBucketed(spark, dir, log2, "ts_us", 60, col("wd"),
-      Seq("user_id"), horizonMicros = 2 * bucketUs,
-      nowMicros = 10 * bucketUs, numBuckets = 32)
+    val t2 = run(log2, horizonMicros = 2 * bucketUs, nowMicros = 10 * bucketUs)
     assert(t2.size <= 3, s"3 fresh rows touched ${t2.size} buckets")
     assert(t2.size < before.size, "run 2 rewrote as many buckets as exist")
 
-    // untouched bucket dirs keep their exact file sets (a rewrite would
-    // generate fresh UUID part names)
-    val after = bucketFiles()
-    before.keySet.filterNot(b => t2.map(t => s"__bucket=$t").contains(b))
+    // untouched buckets keep their exact file sets
+    val after = bucketFiles(root, "chg_stats")
+    before.keySet.diff(t2.toSet)
       .foreach(b => assert(after(b) === before(b), s"untouched bucket $b was rewritten"))
 
     // stored contents equal the snapshot-path (full-rewrite) reference
@@ -207,16 +234,13 @@ class StateAndJobsSpec extends AnyFunSuite {
       horizonMicros = 10 * bucketUs + 5, nowMicros = 10 * bucketUs + 5)
     val s2 = AggJobs.runChgStats(s1, log2, "ts_us", 60, col("wd"), Seq("user_id"),
       horizonMicros = 2 * bucketUs, nowMicros = 10 * bucketUs)
-    val got = spark.read.parquet(dir).drop("__bucket", "__tombstone")
+    val got = read(root, "chg_stats").drop("__tombstone")
     assert(got.exceptAll(s2).isEmpty && s2.exceptAll(got).isEmpty)
-    val gotSet = got.collect().toSet // materialize BEFORE replay rewrites files
+    val gotSet = got.collect().toSet
 
     // replaying run 2 converges: identical contents
-    AggJobs.runChgStatsBucketed(spark, dir, log2, "ts_us", 60, col("wd"),
-      Seq("user_id"), horizonMicros = 2 * bucketUs,
-      nowMicros = 10 * bucketUs, numBuckets = 32)
-    val again = spark.read.parquet(dir).drop("__bucket", "__tombstone")
-    assert(again.collect().toSet === gotSet)
+    run(log2, horizonMicros = 2 * bucketUs, nowMicros = 10 * bucketUs)
+    assert(read(root, "chg_stats").drop("__tombstone").collect().toSet === gotSet)
   }
 
   test("physical retention drops aged partition dirs; survivors byte-identical") {
@@ -346,35 +370,31 @@ class StateAndJobsSpec extends AnyFunSuite {
   }
 
   test("schema evolution: new column merges without rewriting untouched buckets; type change refuses") {
-    import graft.operators.{MergeOps, StateTables}
     val root = Files.createTempDirectory("graft_evolve").toString
-    val path = s"$root/snapshot"
     val policy = MergeOps.MergePolicy(
       keys = Seq("k"), withdrawnCol = "wd", orderBy = Seq("ts"),
       retainOnWithdraw = Nil, alwaysUpdate = Seq("ts", "v"),
       evolveDefaults = Map("src" -> lit("legacy")))
+    def mergeEv(updates: org.apache.spark.sql.DataFrame): Unit = {
+      val txn = ConsistentState.begin(spark, root)
+      StateTables.mergeChangedBuckets(txn, "t", updates, policy, 16)
+      txn.commit()
+    }
 
     // bootstrap: two keys in provably different buckets, old schema
     def bucketOf(k: String): Int = Seq(Tuple1(k)).toDF("k")
       .select(StateTables.bucketId(Seq("k"), 16)).head().getInt(0)
     val k2 = (2 to 60).map(i => s"k$i").find(k => bucketOf(k) != bucketOf("k1")).get
-    StateTables.mergeChangedBuckets(spark, path,
-      Seq(("k1", 1L, 10L, false), (k2, 1L, 20L, false)).toDF("k", "ts", "v", "wd"),
-      policy, 16)
-    def bucketFiles(b: Int): Set[String] =
-      new java.io.File(path, s"__bucket=$b").listFiles().map(_.getName)
-        .filter(_.endsWith(".parquet")).toSet
-    val k2Before = bucketFiles(bucketOf(k2))
+    mergeEv(Seq(("k1", 1L, 10L, false), (k2, 1L, 20L, false)).toDF("k", "ts", "v", "wd"))
+    val k2Before = bucketFiles(root)(bucketOf(k2))
 
     // merge 2: updates GREW a column (src) and touch only k1's bucket
-    StateTables.mergeChangedBuckets(spark, path,
-      Seq(("k1", 2L, 11L, false, "feedX")).toDF("k", "ts", "v", "wd", "src"),
-      policy, 16)
-    assert(bucketFiles(bucketOf(k2)) === k2Before, "untouched bucket was rewritten")
+    mergeEv(Seq(("k1", 2L, 11L, false, "feedX")).toDF("k", "ts", "v", "wd", "src"))
+    assert(bucketFiles(root)(bucketOf(k2)) === k2Before, "untouched bucket was rewritten")
     // the union read sees the new column: merged row has it, the
     // pre-evolution row backfills the POLICY default at merge time but
     // reads as null from its untouched (never-rewritten) file
-    val snap = StateTables.readSnapshot(spark, path)
+    val snap = read(root)
     assert(snap.columns.contains("src"))
     val rows = snap.select("k", "v", "src").collect().map(r =>
       (r.getString(0), r.getLong(1), Option(r.getString(2)))).toSet
@@ -383,24 +403,25 @@ class StateAndJobsSpec extends AnyFunSuite {
     // merge 3: an OLD-schema update still merges (state carries the
     // union schema; the missing column rides through as its current
     // value — NULL for pre-evolution rows until migrateSnapshot)
-    StateTables.mergeChangedBuckets(spark, path,
-      Seq((k2, 2L, 21L, false)).toDF("k", "ts", "v", "wd"), policy, 16)
-    val rows3 = StateTables.readSnapshot(spark, path).select("k", "v", "src").collect()
+    mergeEv(Seq((k2, 2L, 21L, false)).toDF("k", "ts", "v", "wd"))
+    val rows3 = read(root).select("k", "v", "src").collect()
       .map(r => (r.getString(0), r.getLong(1), Option(r.getString(2)))).toSet
     assert(rows3 === Set(("k1", 11L, Some("feedX")), (k2, 21L, None)))
 
     // migrateSnapshot: uniform schema, remaining nulls backfilled
-    val migrated = StateTables.migrateSnapshot(spark, path,
-      defaults = Map("src" -> lit("legacy")))
+    val txn = ConsistentState.begin(spark, root)
+    val migrated = StateTables.migrateSnapshot(txn, "t", defaults = Map("src" -> lit("legacy")))
+    txn.commit()
     assert(migrated.nonEmpty)
-    val plain = spark.read.parquet(path) // single-footer read now suffices
+    val m = committedMap(root, "t")
+    val plain = spark.read.parquet( // single-footer read of every bucket now suffices
+      m.versions.keys.toSeq.map(b => m.dir(root, "t", b).toString): _*)
     assert(plain.columns.contains("src"))
     assert(plain.filter(col("src").isNull).count() === 0)
 
     // a TYPE change refuses loudly instead of silently casting state
     val err = intercept[IllegalArgumentException] {
-      StateTables.mergeChangedBuckets(spark, path,
-        Seq(("k1", 3L, "not-a-long", false)).toDF("k", "ts", "v", "wd"), policy, 16)
+      mergeEv(Seq(("k1", 3L, "not-a-long", false)).toDF("k", "ts", "v", "wd"))
     }
     assert(err.getMessage.contains("changed type"))
   }
@@ -494,7 +515,7 @@ class StateAndJobsSpec extends AnyFunSuite {
   test("maintenance pass: fold CDC, drop folded raw batches, retention, bucket compaction") {
     import graft.streaming.Ingest
     val root = Files.createTempDirectory("graft_maint").toString
-    val state = s"$root/state"; val log = s"$root/log"; val hours = s"$root/hourly"
+    val log = s"$root/log"; val hours = s"$root/hourly"
     val hourUs = 3600L * 1000000
     val t0 = java.time.LocalDateTime.of(2024, 5, 1, 0, 0)
       .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
@@ -503,26 +524,32 @@ class StateAndJobsSpec extends AnyFunSuite {
     for (id <- 0L until 6L) {
       val upd = Seq((s"k${id % 3}", t0 + id * hourUs, s"A$id", false))
         .toDF("k", "ts", "attr", "wd")
-      StateTables.mergeChangedBuckets(spark, s"$state/snapshot", upd, policy, 8,
+      val txn = ConsistentState.begin(spark, root)
+      StateTables.mergeChangedBuckets(txn, "state", upd, policy, 8,
         logPath = Some(log), batchId = Some(id))
+      txn.commit()
     }
     // at toy scale AQE coalesces every stage write to one file per
     // bucket, so compaction finds nothing to do — plant an extra
     // empty part-file in one bucket to stand in for real file churn
-    val bucketDir = new java.io.File(s"$state/snapshot").listFiles()
-      .filter(_.getName.startsWith("__bucket=")).head
+    val m = committedMap(root, "state")
+    val bucketDir = new java.io.File(m.dir(root, "state", m.versions.keys.min).toString)
     val emptyDir = Files.createTempDirectory("graft_maint_empty").toString + "/part"
-    spark.read.parquet(s"$state/snapshot").drop("__bucket").limit(0)
-      .coalesce(1).write.parquet(emptyDir)
+    read(root, "state").limit(0).coalesce(1).write.parquet(emptyDir)
     val part = new java.io.File(emptyDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(part.toPath,
       new java.io.File(bucketDir, "part-churn.snappy.parquet").toPath)
 
-    val (folded, droppedB, droppedH, compacted) = Ingest.maintain(
-      spark, state, log, hours,
-      retentionCutoffUs = Some(t0 + 2 * hourUs),
-      keepRawBatches = 2, maxFilesPerBucket = 1, tsUsCol = "ts")
+    def maintain() = {
+      val txn = ConsistentState.begin(spark, root)
+      val r = Ingest.maintain(txn, "state", log, hours,
+        retentionCutoffUs = Some(t0 + 2 * hourUs),
+        keepRawBatches = 2, maxFilesPerBucket = 1, tsUsCol = "ts")
+      txn.commit()
+      r
+    }
+    val (folded, droppedB, droppedH, compacted) = maintain()
 
     assert(folded.size === 6)                       // all committed batches folded
     assert(droppedB === Seq("batch=0", "batch=1", "batch=2", "batch=3"))
@@ -535,12 +562,9 @@ class StateAndJobsSpec extends AnyFunSuite {
     // compacted history = hours past the cutoff, one CDC row per hour
     assert(spark.read.parquet(hours).select("k", "attr").count() === 4)
     // and the snapshot survived it all intact (planted file was empty)
-    val st = spark.read.parquet(s"$state/snapshot")
-    assert(st.count() === 3)
+    assert(read(root, "state").count() === 3)
     // a second maintenance pass is a no-op (idempotent housekeeping)
-    val (f2, b2, h2, c2) = Ingest.maintain(spark, state, log, hours,
-      retentionCutoffUs = Some(t0 + 2 * hourUs),
-      keepRawBatches = 2, maxFilesPerBucket = 1, tsUsCol = "ts")
+    val (f2, b2, h2, c2) = maintain()
     assert(f2.isEmpty && b2.isEmpty && h2.isEmpty && c2.isEmpty)
   }
 }

@@ -2,32 +2,57 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Messages
 import graft.operators.StateTables
 import graft.streaming.{ConsistentState, GraftApp, Ingest}
 
-/** Fault-injecting local filesystem (`crashy://` scheme): while armed,
-  * the FIRST rename whose destination is a snapshot bucket slot throws —
-  * exactly the window between park-aside and move-into-place of
-  * [[graft.operators.StateTables.mergeChangedBuckets]]'s swap. Stage
-  * writes (`..._stage/__bucket=`) and park renames (`..._old/__bucket=`)
-  * don't match the pattern, so the crash lands after the park succeeded.
+/** Fault-injecting local filesystem (`crashy://` scheme) that simulates
+  * a process crash at the N-th filesystem mutation: [[CrashingFs.arm]]
+  * restarts the count, and with `crashAt = Some(n)` the n-th mutation
+  * (create, mkdirs, rename, delete) and every later one throws — nothing
+  * the crashed run would have done after that point reaches the disk.
+  * Reads are neither counted nor failed. Without an AbstractFileSystem
+  * binding, pointer swaps on it take `replacePointerFile`'s plain-rename
+  * fallback, atomic here because a local rename replaces its target.
   */
-class CrashyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+class CrashingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
   override def getScheme: String = "crashy"
   override def getUri: java.net.URI = java.net.URI.create("crashy:///")
-  override def rename(src: org.apache.hadoop.fs.Path,
-                      dst: org.apache.hadoop.fs.Path): Boolean = {
-    if (CrashyRenameFs.armed && dst.toString.contains("/snapshot/__bucket=")) {
-      CrashyRenameFs.armed = false // one-shot: the restarted run proceeds
-      throw new java.io.IOException("injected crash between park and move")
-    }
-    super.rename(src, dst)
+  private def mutate(what: String, p: Path): Unit = {
+    val n = CrashingFs.count.incrementAndGet()
+    if (CrashingFs.crashAt.exists(n >= _))
+      throw new java.io.IOException(s"injected crash at mutation $n: $what $p")
+  }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable) = {
+    mutate("create", f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable) = {
+    mutate("create", f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def mkdirs(f: Path): Boolean = { mutate("mkdirs", f); super.mkdirs(f) }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    mutate("mkdirs", f); super.mkdirs(f, permission)
+  }
+  override def rename(src: Path, dst: Path): Boolean = { mutate("rename", dst); super.rename(src, dst) }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    mutate("delete", p); super.delete(p, recursive)
   }
 }
-object CrashyRenameFs { @volatile var armed = false }
+object CrashingFs {
+  val count = new java.util.concurrent.atomic.AtomicInteger
+  @volatile var crashAt: Option[Int] = None
+  def arm(at: Option[Int]): Unit = { crashAt = None; count.set(0); crashAt = at }
+}
 
 /** Real Structured Streaming path: file-source readStream → the
   * deployed [[GraftApp.start]] query (TSV parse → keyed merge → state +
@@ -88,21 +113,26 @@ class StreamingSpec extends SparkSpec {
     assert(compact.columns.contains("date_hour"))
   }
 
+  private def ribOf(root: String) =
+    ConsistentState.readConsistent(spark, root, Seq("ip_rib"))("ip_rib")
+
   test("bucketed streaming ingest rewrites only touched buckets per micro-batch") {
     val in  = Files.createTempDirectory("graft_bstream_in").toString
     val out = Files.createTempDirectory("graft_bstream_out").toString
-    val conf = GraftApp.Conf(out, triggerMs = 50, bucketedRib = Some(16), registerViews = false)
-    val snapshot = s"$out/ip_rib/snapshot"
+    val conf = GraftApp.Conf(out, triggerMs = 50, ribBuckets = 16, registerViews = false)
     val h2 = otherBucketHash(16)
 
     writePrefixes(in, "b1.tsv",
       line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false),
       line(h2, "a9", "2024-01-01 00:00:01.500000", wd = false))
-    def bucketFiles(): Map[String, Set[String]] =
-      new java.io.File(snapshot).listFiles()
-        .filter(_.getName.startsWith("__bucket="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filter(_.endsWith(".parquet")).toSet).toMap
+    // parquet files per bucket of the committed map (a rewrite generates
+    // fresh UUID part names)
+    def bucketFiles(): Map[Int, Set[String]] = {
+      val m = ConsistentState.bucketMap(spark, out, "ip_rib",
+        ConsistentState.readManifest(spark, out)("ip_rib")).get
+      m.versions.keys.map(b => b -> new java.io.File(m.dir(out, "ip_rib", b).toString)
+        .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet).toMap
+    }
 
     val q = GraftApp.start(GraftApp.fileSource(spark, in), conf)
     val (before, after) = try {
@@ -114,12 +144,12 @@ class StreamingSpec extends SparkSpec {
       (before, bucketFiles())
     } finally q.stop()
 
-    val h1Bucket = s"__bucket=${bucketOf("h1", 16)}"
+    val h1Bucket = bucketOf("h1", 16)
     assert(after(h1Bucket) !== before(h1Bucket))
     (before.keySet - h1Bucket).foreach(b =>
       assert(after(b) === before(b), s"bucket $b was rewritten"))
 
-    val st = spark.read.parquet(snapshot)
+    val st = ribOf(out)
     assert(st.count() === 2)
     val h1 = st.filter(col("hash_id") === "h1").head()
     assert(h1.getAs[Boolean]("isWithdrawn") === true)
@@ -127,16 +157,14 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/ip_rib_log").count() === 3) // 2 advertises + 1 withdraw
   }
 
-  test("crash between stage-write and bucket swap: restart converges, no duplicate CDC") {
+  test("crash mid-batch: restart from the checkpoint converges, no duplicate CDC") {
     spark.sparkContext.hadoopConfiguration
-      .set("fs.crashy.impl", classOf[CrashyRenameFs].getName)
+      .set("fs.crashy.impl", classOf[CrashingFs].getName)
     val in  = Files.createTempDirectory("graft_crash_in").toString
     val out = Files.createTempDirectory("graft_crash_out").toString
-    // the whole root, checkpoint included, on the fault-injecting FS; the
-    // fault only ever fires on a rename into a snapshot bucket slot
-    val conf = GraftApp.Conf(s"crashy://$out", triggerMs = 50, bucketedRib = Some(16),
+    // the whole root, checkpoint included, on the fault-injecting FS
+    val conf = GraftApp.Conf(s"crashy://$out", triggerMs = 50, ribBuckets = 16,
       registerViews = false)
-    val h1b = bucketOf("h1", 16)
     writePrefixes(in, "b1.tsv",
       line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false),
       line(otherBucketHash(16), "a9", "2024-01-01 00:00:01.500000", wd = false))
@@ -144,37 +172,109 @@ class StreamingSpec extends SparkSpec {
 
     val q1 = startQ()
     try {
-      q1.processAllAvailable() // bootstrap batch commits cleanly
-      CrashyRenameFs.armed = true
+      q1.processAllAvailable() // first batch commits cleanly
+      // crash at the 12th mutation from here: past the offset log write,
+      // inside the batch's table writes
+      CrashingFs.arm(Some(12))
       writePrefixes(in, "b2.tsv", line("h1", "", "2024-01-01 00:00:02.000000", wd = true))
       try q1.processAllAvailable() catch { case _: Exception => () }
-      assert(q1.exception.isDefined, "injected rename failure did not fail the query")
-    } finally { q1.stop(); CrashyRenameFs.armed = false }
-    // the crash window is real: h1's bucket slot is gone, its old copy parked
-    assert(!new java.io.File(s"$out/ip_rib/snapshot/__bucket=$h1b").exists())
-    assert(new java.io.File(s"$out/ip_rib/snapshot_old/__bucket=$h1b").exists())
+      assert(q1.exception.isDefined, "the injected crash did not fail the query")
+    } finally { q1.stop(); CrashingFs.arm(None) }
 
-    // restart from the same checkpoint: the uncommitted batch replays —
-    // recoverSwap restores the parked bucket, the idempotent merge
-    // re-applies, the batchId-keyed CDC write keeps its own partition
+    // restart from the same checkpoint: the uncommitted batch replays
+    // over its orphan version dirs, the batchId-keyed CDC write keeps
+    // its own partition
     val q2 = startQ()
     try q2.processAllAvailable() finally q2.stop()
 
-    val st = spark.read.parquet(s"$out/ip_rib/snapshot")
+    val st = ribOf(conf.root)
     assert(st.count() === 2)
     val h1 = st.filter(col("hash_id") === "h1").head()
     assert(h1.getAs[Boolean]("isWithdrawn") === true)
     assert(h1.getAs[String]("base_attr_hash_id") === "a1") // retained on withdraw
-    assert(!new java.io.File(s"$out/ip_rib/snapshot_old").exists()) // recovery cleaned up
     val cdc = spark.read.parquet(s"$out/ip_rib_log")
     assert(cdc.count() === 3, "replay appended duplicate CDC rows")
     assert(cdc.filter(col("hash_id") === "h1").count() === 2) // advertise + withdraw
   }
 
+  test("crash at every mutation of a bucketed rib merge: old or new state, CDC once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashy.impl", classOf[CrashingFs].getName)
+    def prefix(hash: String, peer: String, attr: String, ts: String, wd: Boolean) =
+      s"$hash\t$peer\t$attr\t1\t65001\t10.0.0.0\t8\t2024-01-01 00:00:$ts.000000\t$wd\t0\t\t1\t1"
+    def ups(peer: String, ts: String) =
+      Seq((peer, s"2024-01-01 00:00:$ts")).toDF("hash_id", "ts")
+        .select(col("hash_id"), unix_micros(col("ts").cast("timestamp")).as("ts_us"))
+    // one ip_rib merge of batch `id` + its CDC write + the commit, as
+    // GraftApp.processBatch runs it
+    def batch(root: String, id: Long, lines: Seq[String], peerUps: Option[DataFrame]): Unit = {
+      val conf = GraftApp.Conf(root, ribBuckets = 8, registerViews = false)
+      val txn = ConsistentState.begin(spark, root)
+      GraftApp.mergeRib(txn, conf, id, "ip_rib", GraftApp.parse("unicast_prefix", lines.toDF("line")),
+        Ingest.ipRibPolicy, peerUps)
+      txn.commit(conf.keepVersions)
+    }
+    def rows(root: String): Seq[String] = ribOf(root)
+      .select(concat_ws("|", col("peer_hash_id"), col("hash_id"), col("base_attr_hash_id"),
+        col("ts_us"), col("isWithdrawn"))).as[String].collect().sorted.toSeq
+    def cdc(root: String): Seq[String] = spark.read.parquet(s"$root/ip_rib_log")
+      .filter(col("batch") === 1)
+      .select(concat_ws("|", col("hash_id"), col("base_attr_hash_id"), col("isWithdrawn")))
+      .as[String].collect().sorted.toSeq
+    def copy(from: java.nio.file.Path): String = {
+      val to = Files.createTempDirectory("graft_enum")
+      val it = Files.walk(from)
+      try it.forEach(p => if (p != from) Files.copy(p, to.resolve(from.relativize(p))))
+      finally it.close()
+      s"crashy://$to"
+    }
+
+    // pre-batch state: two committed batches over two peers, 8 buckets
+    val base = Files.createTempDirectory("graft_enum_base")
+    batch(base.toString, -1L, (1 to 6).map(i => prefix(s"h$i", if (i % 2 == 0) "p2" else "p1",
+      "a0", "01", wd = false)), None)
+    batch(base.toString, 0L, Seq(prefix("h1", "p1", "a2", "02", wd = false),
+      prefix("h2", "p2", "a2", "02", wd = false)), None)
+    // the batch under test: an attribute change, a withdraw, a new key,
+    // and p1 coming up at :03 — the T9 purge drops p1's older rows
+    val lines = Seq(prefix("h2", "p2", "a1", "04", wd = false),
+      prefix("h4", "p2", "", "04", wd = true), prefix("h7", "p1", "a1", "04", wd = false))
+    val up = Some(ups("p1", "03"))
+
+    CrashingFs.arm(None)
+    val ref = copy(base)
+    batch(ref, 1L, lines, up)
+    val (pre, post, postCdc) = (rows(base.toString), rows(ref), cdc(ref))
+    assert(pre !== post)
+    assert(postCdc.size === 3)
+
+    var n = 1
+    var reached = true
+    val t0 = System.nanoTime()
+    while (reached) {
+      val root = copy(base)
+      CrashingFs.arm(Some(n))
+      val threw = scala.util.Try(batch(root, 1L, lines, up)).isFailure
+      reached = CrashingFs.count.get >= n
+      CrashingFs.arm(None)
+      if (reached) {
+        assert(threw, s"the crash at mutation $n was swallowed")
+        val seen = rows(root)
+        assert(seen == pre || seen == post, s"crash at mutation $n: torn state $seen")
+        batch(root, 1L, lines, up) // the replay under the same batch id
+        assert(rows(root) === post, s"crash at mutation $n: replay diverged")
+        assert(cdc(root) === postCdc, s"crash at mutation $n: CDC not exactly once")
+      }
+      n += 1
+    }
+    info(s"${n - 2} crash points in ${(System.nanoTime() - t0) / 1000000} ms")
+    assert(n > 20, "the batch made fewer mutations than expected")
+  }
+
   test("replay after state commit (lost checkpoint commit) keeps original CDC rows") {
     val in  = Files.createTempDirectory("graft_rp_in").toString
     val out = Files.createTempDirectory("graft_rp_out").toString
-    val conf = GraftApp.Conf(out, triggerMs = 50, bucketedRib = Some(8), registerViews = false)
+    val conf = GraftApp.Conf(out, triggerMs = 50, ribBuckets = 8, registerViews = false)
     val log = s"$out/ip_rib_log"
     writePrefixes(in, "b1.tsv", line("h1", "a1", "2024-01-01 00:00:01.000000", wd = false))
     val q1 = GraftApp.start(GraftApp.fileSource(spark, in), conf)
@@ -185,7 +285,7 @@ class StreamingSpec extends SparkSpec {
     } finally q1.stop()
     assert(spark.read.parquet(log).count() === 2) // advertise + withdraw
 
-    // crash window: merge + CDC + swap all committed, but the streaming
+    // crash window: merge + CDC + commit all landed, but the streaming
     // checkpoint did NOT — on restart the source re-delivers the batch
     // and foreachBatch re-invokes processBatch with the SAME batchId
     // against the already-updated state. Drive that invocation directly
@@ -200,8 +300,7 @@ class StreamingSpec extends SparkSpec {
     assert(cdc.count() === 2, "replay destroyed committed CDC rows")
     assert(cdc.filter(col("isWithdrawn") === true).count() === 1)
     // and state is unchanged (idempotent merge)
-    val h1 = spark.read.parquet(s"$out/ip_rib/snapshot")
-      .filter(col("hash_id") === "h1").head()
+    val h1 = ribOf(out).filter(col("hash_id") === "h1").head()
     assert(h1.getAs[Boolean]("isWithdrawn") === true)
   }
 
@@ -296,7 +395,7 @@ class StreamingSpec extends SparkSpec {
 
   test("replacePointerFile: atomic on file scheme; fallback works without an AbstractFileSystem binding") {
     val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.crashy.impl", classOf[CrashyRenameFs].getName)
+    conf.set("fs.crashy.impl", classOf[CrashingFs].getName)
 
     def roundTrip(base: String): Unit = {
       val ptr = new org.apache.hadoop.fs.Path(base, "_CURRENT")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query seconds.
   *
@@ -17,25 +16,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 50 queries × several codegen'd stages each blows through the
-      // default 100-entry generated-class cache — evictions force
-      // recompiles that inflate individual queries by seconds (observed
-      // 8.5s in-bench vs 1.1s isolated). Static conf, set before the
-      // session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // physical top-k rewrite (BoundedTopKRule) + the inet/array/text
-      // function set; semantics-preserving — Verify grades the same
-      // extension set
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // optional query subset (comma-separated names) — scale points run

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.Messages
@@ -18,15 +17,9 @@ import graft.views.BmpViews
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
 
     val dir = Files.createTempDirectory("graft_demo").toString
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `runMain graft.Explain <queryName> [sfDir] [mode]` —
   * prints the formatted physical plan (and optionally re-times two runs
   * to separate codegen/compile cost from execution).
@@ -11,16 +9,7 @@ object Explain {
     val name  = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mode  = if (args.length > 2) args(2) else "formatted"
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(name)
     if (mode != "time") fn(spark, sfDir).explain(mode)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-off generator for suite-level scale evidence: replicates the
@@ -74,13 +74,7 @@ object ScaleUp {
     val src  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out  = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_sf1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // optional table subset (e.g. "documents,embeddings" for the 100×

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries INT64 TIMESTAMP(NANOS) which Spark's
-      // parquet reader rejects; read as raw nanos longs instead
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // physical top-k rewrite + inet/array/text functions (the same
-      // semantics-preserving extension set Bench runs with, so the
-      // correctness dump grades the plans the bench times)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // local-iteration subset (driver leaves this unset → full run)

@@ -222,25 +222,6 @@ object TextFns {
   def normalizeText(text: Column): Column =
     regexp_replace(lower(trim(text)), "\\s+", " ")
 
-  /** Adjacent-duplicate token ratio: |{i : tok_i = tok_{i+1}}| / n — the
-    * degenerate-repetition signal ("buy buy buy buy …" → 0.75). O(n) per
-    * doc, pure array built-ins, and engine-portable (the DuckDB oracle is
-    * the same list_filter over 1-based indexing). 0 for empty text.
-    */
-  def repetitionRatio(text: Column): Column = {
-    val toks = tokens(text)
-    // size<2 guard also keeps sequence() ascending — sequence(1, 0)
-    // would DESCEND through index 0 and trip ANSI array indexing
-    // zip_with(slice, slice) evaluates the token array once per child;
-    // transform/filter + element_at would re-tokenize per element
-    when(length(trim(text)) === 0 || size(toks) < 2, lit(0.0)).otherwise(
-      size(filter(
-        zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
-          (a, b) => a === b),
-        eq => eq))
-        .cast("double") / size(toks).cast("double"))
-  }
-
   /** Deterministic rolling document fingerprint over tokens:
     * acc = (acc * 131 + (ascii(first) + ascii(last) + len)) mod 1e9+7.
     * Pure integer arithmetic → reproducible across engines (the DuckDB

@@ -29,20 +29,6 @@ object AggJobs {
   def runChgStats(stats: DataFrame, log: DataFrame, epochMicrosCol: String,
                   bucketSec: Long, withdrawnCond: org.apache.spark.sql.Column,
                   keys: Seq[String], horizonMicros: Long, nowMicros: Long): DataFrame = {
-    val fresh = freshChgStats(log, epochMicrosCol, bucketSec, withdrawnCond,
-      keys, horizonMicros, nowMicros)
-    // upsert whole buckets: delete-then-insert by (bucket, keys) ≡ ON
-    // CONFLICT DO UPDATE for a complete recomputation
-    val mergeKeys = "bucket" +: keys
-    stats.join(fresh.select(mergeKeys.map(col): _*), mergeKeys, "left_anti")
-      .unionByName(fresh)
-  }
-
-  /** The whole-bucket recomputation shared by both merge paths. */
-  private def freshChgStats(log: DataFrame, epochMicrosCol: String,
-                            bucketSec: Long, withdrawnCond: org.apache.spark.sql.Column,
-                            keys: Seq[String], horizonMicros: Long,
-                            nowMicros: Long): DataFrame = {
     val bucketUs      = bucketSec * 1000000L
     val currentBucket = nowMicros - nowMicros % bucketUs
     // align the lower bound UP to a bucket boundary: only whole buckets
@@ -57,42 +43,11 @@ object AggJobs {
     val windowed = log.filter(
       col(epochMicrosCol) >= lit(alignedStart) &&
         col(epochMicrosCol) < lit(currentBucket)) // exclude in-progress bucket
-    TimeAgg.chgStats(windowed, epochMicrosCol, bucketSec, withdrawnCond, keys)
-  }
-
-  /** [[runChgStats]] against an n-bucket stats table
-    * ([[StateTables.mergeChangedBuckets]] keyed (bucket ++ keys)), staged
-    * in `txn` — the caller commits. One cron run rewrites ONLY the
-    * key-hash buckets holding recomputed rows — write amplification
-    * ∝ touched buckets ≈ the horizon's group spread, not O(stats table).
-    * This is the columnar equivalent of the reference touching only
-    * conflicting rows (`2_aggregations.sql:91-130`); the
-    * snapshot-returning [[runChgStats]] rewrites the full table per run
-    * and should only be used for small stats tables or tests.
-    *
-    * A recomputed whole bucket fully supersedes its stored row, so the
-    * merge is pure last-write-wins: the `__tombstone` bookkeeping column
-    * (constant false, stored with the table) exists only because
-    * [[MergeOps.MergePolicy]] models withdraw semantics the stats path
-    * never exercises.
-    *
-    * @return key-hash bucket ids rewritten (the run's write
-    *         amplification, in buckets)
-    */
-  def runChgStatsBucketed(txn: graft.streaming.ConsistentState.Txn, table: String,
-                          log: DataFrame, epochMicrosCol: String, bucketSec: Long,
-                          withdrawnCond: org.apache.spark.sql.Column,
-                          keys: Seq[String], horizonMicros: Long, nowMicros: Long,
-                          numBuckets: Int): Seq[Int] = {
-    val fresh = freshChgStats(log, epochMicrosCol, bucketSec, withdrawnCond,
-      keys, horizonMicros, nowMicros)
-    val policy = MergeOps.MergePolicy(
-      keys = "bucket" +: keys,
-      withdrawnCol = "__tombstone",
-      orderBy = Seq("updates"), // one row per key per run — any total order
-      retainOnWithdraw = Nil,
-      alwaysUpdate = Seq("withdraws", "updates"))
-    StateTables.mergeChangedBuckets(txn, table,
-      fresh.withColumn("__tombstone", lit(false)), policy, numBuckets)
+    val fresh = TimeAgg.chgStats(windowed, epochMicrosCol, bucketSec, withdrawnCond, keys)
+    // upsert whole buckets: delete-then-insert by (bucket, keys) ≡ ON
+    // CONFLICT DO UPDATE for a complete recomputation
+    val mergeKeys = "bucket" +: keys
+    stats.join(fresh.select(mergeKeys.map(col): _*), mergeKeys, "left_anti")
+      .unionByName(fresh)
   }
 }

@@ -256,22 +256,6 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** Streaming face of [[exact]]: first-seen-wins dedup over an
-    * unbounded stream, keyed by content hash in the state store and
-    * BOUNDED by the event-time watermark —
-    * `dropDuplicatesWithinWatermark` evicts a hash once the watermark
-    * passes it, so state is ∝ stream rate × horizon, not stream length.
-    * (The reference's seen-cache with TTL,
-    * `ConsumerRunnable.java:489-498`, is the same shape; q39's TTL
-    * bucket is the batch equivalent.) Use in append mode; duplicates
-    * arriving within the horizon are dropped across micro-batches.
-    */
-  def streamingExact(stream: DataFrame, hashOf: Column, tsCol: String,
-                     watermarkDelay: String): DataFrame =
-    stream.withColumn("content_hash", hashOf)
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("content_hash")
-
   // ---- duplicate-cluster resolution -----------------------------------
 
   /** Connected components over a near-dup pair list: every doc gets

@@ -14,17 +14,23 @@ import org.apache.spark.sql.functions._
   *    r.prefix_len BETWEEN p.prefix_len AND p.prefix_len_max`
   *    (`2_aggregations.sql:260-265,338-343`).
   *
-  * Both operate on the canonical numeric form (start, end, len) from
-  * [[graft.ip.IpKit]]. Two physical strategies:
+  * Both operate on the canonical address forms of [[graft.ip.IpKit]]:
+  * numeric (start, end, len) for v4, fixed-length binary for v6 and
+  * mixed families. Three LPM strategies:
   *
   *  1. `lpmRange` — range-predicate join + `row_number`. The dim side
   *     (geo table, ROAs) is small → `broadcast` makes this a broadcast
   *     nested-loop that never shuffles the 100 TB probe side. Right for
-  *     dims up to ~1M rows.
-  *  2. `lpmByExpansion` — explode each probe into its ≤33 (v4) / ≤129
-  *     (v6) ancestor prefixes and equi-join on (start, len). Pure
-  *     shuffle-free-broadcast or shuffled *equi* join → scales to huge
-  *     dim tables where a nested loop would be quadratic.
+  *     dims up to ~1M rows, either address form.
+  *  2. `lpmByExpansionAgg` — explode each numeric probe into one
+  *     candidate ancestor per dim-present length and equi-join on
+  *     (start, len); the winner is one max() hash aggregate. Scales to
+  *     huge dim tables where a nested loop would be quadratic.
+  *  3. `lpmByExpansionBinary` — the same expansion over the binary form,
+  *     for v6 and mixed families.
+  *
+  * The covering join has the same split: `coveringJoin` (broadcast
+  * range NLJ) and `coveringJoinByExpansion` (numeric equi-join).
   */
 object LpmJoin {
 
@@ -82,40 +88,12 @@ object LpmJoin {
     * start is `(a >> (B-L)) << (B-L)`; generating that candidate per
     * dim-present length turns LPM into an equi-join on (start, len)
     * followed by max-length-wins. `bits` = size of the address space
-    * (32, or smaller for test domains).
-    */
-  def lpmByExpansion(probes: DataFrame, probeKey: Seq[String], probeAddr: String,
-                     prefixes: DataFrame, startCol: String, lenCol: String,
-                     bits: Int, tieBreak: Seq[Column] = Nil): DataFrame = {
-    // long arithmetic: shiftleft wraps shift amounts mod 64, so address
-    // spaces beyond 62 bits would silently corrupt candidates — the v6
-    // (128-bit) path uses lpmRange over the binary form instead
-    require(bits <= 62, s"lpmByExpansion supports numeric spaces up to 62 bits (got $bits); use lpmRange on the binary form for IPv6")
-    val candidates = probes.withColumn(
-      "__cand",
-      explode(candidateArray(probeAddr, dimLens(prefixes, lenCol), bits)))
-    val w = Window
-      .partitionBy(probeKey.map(col): _*)
-      .orderBy(col(lenCol).desc +: col(startCol).desc +: tieBreak: _*)
-    candidates
-      .join(
-        prefixes,
-        col("__cand.len") === col(lenCol) && col("__cand.start") === col(startCol),
-        "inner")
-      .drop("__cand")
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
-  /** Aggregated expansion LPM — the high-throughput variant: the dim is
-    * first deduped to one row per (start, len) keeping the minimum of
-    * `tieBreakAsc` (plus its payload), then the per-probe winner is a
-    * single `max_by(struct(len, start), …)` hash aggregate instead of a
-    * window sort. Map-side partial aggregation means the shuffle carries
-    * one row per probe — at 100 TB this beats the window variant by the
-    * full sort cost. Result is identical to `lpmByExpansion` with
-    * tieBreak = (tieBreakAsc asc).
+    * (32, or smaller for test domains). The dim is first deduped to one
+    * row per (start, len) keeping the minimum of `tieBreakAsc` (plus its
+    * payload), then the per-probe winner is a single hash aggregate
+    * instead of a window sort. Map-side partial aggregation means the
+    * shuffle carries one row per probe. Result is identical to
+    * `lpmRange` with tieBreak = (tieBreakAsc asc).
     *
     * @param payload dim columns to carry to the output (must include
     *                tieBreakAsc if wanted in the result)
@@ -262,14 +240,14 @@ object LpmJoin {
     * @param dimLenCol the dim PREFIX length (the lower BETWEEN bound of
     *                  the reference predicate `2_aggregations.sql:338-343`;
     *                  `dimMaxLen` remains the upper bound on factLen)
-    * @param bits      address-space width (≤ 62; binary variant below
-    *                  for v6/mixed)
+    * @param bits      address-space width (≤ 62; v6/mixed prefixes take
+    *                  [[coveringJoin]] over the binary form)
     */
   def coveringJoinByExpansion(facts: DataFrame, factStart: String, factLen: String,
                               dims: DataFrame, dimStart: String, dimLenCol: String,
                               dimMaxLen: String, bits: Int,
                               broadcastDim: Boolean = true): DataFrame = {
-    require(bits <= 62, s"coveringJoinByExpansion supports numeric spaces up to 62 bits (got $bits); use the binary variant for IPv6")
+    require(bits <= 62, s"coveringJoinByExpansion supports numeric spaces up to 62 bits (got $bits); use coveringJoin on the binary form for IPv6")
     val dim = if (broadcastDim) broadcast(dims) else dims
     facts
       .withColumn("__cand",
@@ -277,33 +255,6 @@ object LpmJoin {
       // a dim can only cover an EQUAL-OR-NARROWER fact; without this the
       // aligned start of a WIDER fact would false-match its sub-prefix dim
       .filter(col("__cand.len") <= col(factLen))
-      .join(dim,
-        col("__cand.len") === col(dimLenCol) && col("__cand.start") === col(dimStart),
-        "inner")
-      .filter(col(factLen) <= col(dimMaxLen))
-      .drop("__cand")
-  }
-
-  /** [[coveringJoinByExpansion]] over the fixed-length BINARY address
-    * form (v6 / mixed families), candidate starts via the codegen'd
-    * [[graft.plans.InetAligned]] — same structural family safety as
-    * [[lpmByExpansionBinary]].
-    */
-  def coveringJoinByExpansionBinary(facts: DataFrame, factStart: String, factLen: String,
-                                    dims: DataFrame, dimStart: String, dimLenCol: String,
-                                    dimMaxLen: String,
-                                    broadcastDim: Boolean = true): DataFrame = {
-    val cleanDim = dims.filter(col(dimStart).isNotNull && col(dimLenCol).isNotNull)
-    val dim = if (broadcastDim) broadcast(cleanDim) else cleanDim
-    val lens0 = dimLens(cleanDim, dimLenCol)
-    val lens = if (lens0.isEmpty) Seq(0) else lens0 // placeholder keeps the plan analyzable (joins zero rows)
-    val candStructs = lens.sorted.map { l =>
-      struct(lit(l).as("len"),
-        graft.ip.IpKit.inetAligned(col(factStart), lit(l)).as("start"))
-    }
-    facts
-      .withColumn("__cand", explode(array(candStructs: _*)))
-      .filter(col("__cand.start").isNotNull && col("__cand.len") <= col(factLen))
       .join(dim,
         col("__cand.len") === col(dimLenCol) && col("__cand.start") === col(dimStart),
         "inner")

@@ -10,11 +10,9 @@ import org.apache.spark.sql.types._
   * decoder (libjpeg, ffmpeg, …) amortizes its setup per task, exactly
   * like a Pandas-UDF/`mapInPandas` stage would in PySpark.
   *
-  * IMAGE decode is real ([[Multimodal.imageDecode]]: the JDK's
-  * javax.imageio, PNG/BMP/GIF/JPEG). Audio/video decode is STUBBED
-  * (this container ships no ffmpeg): `stubDecode` produces
-  * deterministic pseudo-features from the bytes behind the same
-  * signature. Everything around the seam — schema, batching, partition
+  * Decode is STUBBED: `stubDecode` produces deterministic
+  * pseudo-features from the bytes behind the signature a real decoder
+  * would take. Everything around the seam — schema, batching, partition
   * mapping, output encoder — is the real Spark plumbing and is tested.
   */
 object Multimodal {
@@ -58,78 +56,20 @@ object Multimodal {
     out
   }
 
-  /** REAL image decode for `kind='image'` rows: PNG/BMP/GIF/JPEG via the
-    * JDK's own `javax.imageio` — no external codec dependency. Features
-    * are a `dim`-bin luminance histogram normalized by pixel count
-    * (ITU-R BT.601 integer luma: (299·R + 587·G + 114·B) / 1000), which
-    * is size-invariant and deterministic across JVMs. Undecodable bytes
-    * (unknown container, truncation, dirty data) fall back to
-    * [[stubDecode]] instead of failing the task — a 100 TB media scan
-    * must not die on one corrupt shard; audio/video stay on the stub
-    * (this container ships no ffmpeg — the seam is the same signature).
-    */
-  def imageDecode(content: Array[Byte], dim: Int): Array[Float] = {
-    if (content == null) return new Array[Float](dim)
-    try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
-      if (img == null) return stubDecode(content, dim)
-      val counts = new Array[Long](dim)
-      val w = img.getWidth; val h = img.getHeight
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          val lum = (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff) +
-            114 * (rgb & 0xff)) / 1000
-          counts(lum * dim / 256) += 1
-          x += 1
-        }
-        y += 1
-      }
-      val total = w.toLong * h
-      val out = new Array[Float](dim)
-      var d = 0
-      while (d < dim) { out(d) = counts(d).toFloat / total; d += 1 }
-      out
-    } catch { case _: Exception => stubDecode(content, dim) }
-  }
-
-  /** Kind-routed batched feature extraction: image rows go through the
-    * real [[imageDecode]], everything else through [[stubDecode]] —
-    * same per-partition batching as [[extractFeatures]].
-    */
-  def extractImageFeatures(df: DataFrame, contentCol: String, kindCol: String,
-                           dim: Int): DataFrame = {
-    val kindIdx = df.schema.fieldIndex(kindCol)
-    extractWith(df, contentCol) { (row, content) =>
-      if (row.getString(kindIdx) == "image") imageDecode(content, dim)
-      else stubDecode(content, dim)
-    }
-  }
-
   /** Batched per-partition feature extraction: binary content →
-    * `features: array<float>`. One decoder instantiation per partition
-    * (the `// decoder setup` line is where a real codec initializes),
+    * `features: array<float>`. One decoder instantiation per partition,
     * rows streamed through it — the Scala shape of `mapInPandas`.
     */
-  def extractFeatures(df: DataFrame, contentCol: String, dim: Int): DataFrame =
-    extractWith(df, contentCol)((_, content) => stubDecode(content, dim))
-
-  /** The shared per-partition plumbing of the extractors: schema+encoder
-    * for the appended `features` column, row streaming, decode seam.
-    */
-  private def extractWith(df: DataFrame, contentCol: String)
-                         (decode: (Row, Array[Byte]) => Array[Float]): DataFrame = {
+  def extractFeatures(df: DataFrame, contentCol: String, dim: Int): DataFrame = {
     val outSchema  = df.schema.add("features", ArrayType(FloatType))
     val contentIdx = df.schema.fieldIndex(contentCol)
     implicit val enc = Encoders.row(outSchema)
     df.mapPartitions { rows =>
-      // decoder setup happens here, once per partition/task (ImageIO's
-      // plugin registry scan, an ffmpeg handle, a JNI context)
+      // decoder setup happens here, once per partition/task (an ffmpeg
+      // handle, a JNI context)
       rows.map { r =>
         val content = r.get(contentIdx).asInstanceOf[Array[Byte]]
-        Row.fromSeq(r.toSeq :+ decode(r, content).toSeq)
+        Row.fromSeq(r.toSeq :+ stubDecode(content, dim).toSeq)
       }
     }
   }

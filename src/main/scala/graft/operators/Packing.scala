@@ -111,29 +111,6 @@ object Packing {
         expr(s"percentile(`${valueCol.replace("`", "``")}`, 0.5)").as("p50"),
         expr(s"percentile(`${valueCol.replace("`", "``")}`, 0.95)").as("p95"))
 
-  /** Sketch regime of [[profileNumeric]] — same output columns, drop-in.
-    * Exact distinct (full hash set per group) and exact percentile
-    * (buffers every value per group) carry per-group state ∝ group size;
-    * at 100 TB that is the memory bound. HyperLogLog++
-    * (`approx_count_distinct`, `rsd` relative error) and KLL-style
-    * `percentile_approx` (error ∝ 1/accuracy) hold FIXED-size state per
-    * group and merge associatively map-side. Use exact for gate-scale
-    * reports, sketch for corpus-scale ones.
-    */
-  def profileNumericSketch(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                           rsd: Double = 0.05, accuracy: Int = 10000): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col(valueCol).isNull, 1L).otherwise(0L)).as("n_null"),
-        approx_count_distinct(col(valueCol), rsd).as("n_distinct"),
-        min(col(valueCol)).as("min_v"),
-        max(col(valueCol)).as("max_v"),
-        (sum(col(valueCol).cast("decimal(28,8)")).cast("double") /
-          count(col(valueCol))).as("mean_v"),
-        percentile_approx(col(valueCol), lit(0.5), lit(accuracy)).as("p50"),
-        percentile_approx(col(valueCol), lit(0.95), lit(accuracy)).as("p95"))
-
   /** Token-budget mixture sampling — the "hit THIS mixture at THIS
     * token budget" corpus-assembly step (the Pile/DoReMi recipe: target
     * weights per source, one global budget): derive each source's

@@ -1049,11 +1049,10 @@ object Similarity {
     // |A|·|B| pair set twice (cosine is bit-symmetric); the fused path
     // scores each pair once and ranks both orientations out of one
     // two-element explode — half the dot products, one materialized
-    // (|A|+|B|)·k frame instead of two scans.
-    // (`spark.graft.marginpairs.fused=false` is the measurement off-switch)
+    // (|A|+|B|)·k frame instead of two scans. A caller-supplied topK
+    // (the IVF arms) keeps the two scans.
     val (abKnn, baKnn) =
-      if ((topK eq crossTopKFn) && sideA.sparkSession.conf
-          .get("spark.graft.marginpairs.fused", "true").toBoolean) {
+      if (topK eq crossTopKFn) {
         val fused = fusedCrossTopK(sideA, sideB, idCol, vecCol, k).mat
         (fused.filter(col("__o") === 0).drop("__o"),
           fused.filter(col("__o") === 1).drop("__o"))

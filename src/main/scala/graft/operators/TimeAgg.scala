@@ -108,49 +108,6 @@ object TimeAgg {
   def applyRetention(log: DataFrame, epochMicrosCol: String, cutoffMicros: Long): DataFrame =
     log.filter(col(epochMicrosCol) >= lit(cutoffMicros))
 
-  /** Streaming variant of A1 (SURVEY §2.8): tumbling event-time window
-    * + watermark, append mode — a window's row is emitted exactly once,
-    * when the watermark passes its end (the streaming twin of the
-    * idempotent whole-bucket batch re-run in [[AggJobs]]; allowed
-    * lateness = the watermark delay instead of the re-run horizon).
-    * `tsCol` must be a TimestampType event-time column.
-    */
-  def streamingChgStats(stream: DataFrame, tsCol: String, bucket: String,
-                        watermarkDelay: String, withdrawnCond: Column,
-                        keys: Seq[String]): DataFrame =
-    stream
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), bucket) +: keys.map(col): _*)
-      .agg(
-        count(when(withdrawnCond, 1)).as("withdraws"),
-        count(when(!withdrawnCond, 1)).as("updates"))
-      .select((col("window.start").as("bucket_start") +: keys.map(col)) ++
-        Seq(col("withdraws"), col("updates")): _*)
-
-  /** Streaming SESSION-window aggregation: per-key event counts over
-    * dynamic gap-based sessions (`session_window` — a session closes
-    * after `gap` of silence, sealed in append mode once the watermark
-    * passes its end). The streaming twin of the batch [[sessionize]]:
-    * same grouping semantics, but state-store-backed and emitting each
-    * session exactly once. Session state per key is bounded by the gap,
-    * not the stream length — the state store holds only open sessions.
-    */
-  def streamingSessionAgg(stream: DataFrame, tsCol: String, gap: String,
-                          watermarkDelay: String,
-                          keys: Seq[String]): DataFrame =
-    stream
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(session_window(col(tsCol), gap) +: keys.map(col): _*)
-      .agg(count(lit(1)).as("n_events"))
-      .select((col("session_window.start").as("session_start") +:
-        col("session_window.end").as("session_end") +:
-        keys.map(col)) :+ col("n_events"): _*)
-
-  /** A4's incremental-job watermark (`2_aggregations.sql:189-201`): the
-    * start time is derived from the data itself (max timestamp minus the
-    * re-run horizon) — computed distributedly and applied via a
-    * broadcast scalar join, never a driver collect.
-    */
   /** Gap-based sessionization: events of one key belong to the same
     * session until a silence longer than `gapMicros` splits them.
     * Emits `session_idx` (1-based, per key, in time order) on every

@@ -171,11 +171,10 @@ case class BoundedTopKExec(
   * huge scored stream collapsing onto few group keys); when group
   * count ≈ row count (per-row dedup windows) the hash+heap churn
   * LOSES to the prefix sort (measured 0.68–0.74× on q39/q41/q183).
-  * So by default the rewrite fires only when every partition key
-  * provably comes from the BUILD side of a broadcast join below — a
-  * relation small enough to broadcast bounds the group count, and the
-  * stream side supplies the many rows. `spark.graft.topk.broadcastKeysOnly=false`
-  * lifts the restriction; `spark.graft.topk.enabled=false` disables
+  * So the rewrite fires only when every partition key provably comes
+  * from the BUILD side of a broadcast join below — a relation small
+  * enough to broadcast bounds the group count, and the stream side
+  * supplies the many rows. `spark.graft.topk.enabled=false` disables
   * the rewrite outright.
   */
 case class BoundedTopKRule(session: SparkSession) extends Rule[SparkPlan] {
@@ -222,16 +221,12 @@ case class BoundedTopKRule(session: SparkSession) extends Rule[SparkPlan] {
 
   override def apply(plan: SparkPlan): SparkPlan = {
     if (!session.conf.get("spark.graft.topk.enabled", "true").toBoolean) plan
-    else {
-      val broadcastOnly =
-        session.conf.get("spark.graft.topk.broadcastKeysOnly", "true").toBoolean
-      plan.transformUp {
-        case WindowGroupLimitExec(part, order, _: RowNumber, limit, Partial,
-            SortExec(_, false, child, _))
-            if limit > 0 && (!broadcastOnly ||
-              keysFromBroadcastBuild(child, AttributeSet(part.flatMap(_.references)))) =>
-          BoundedTopKExec(part, order, limit, child)
-      }
+    else plan.transformUp {
+      case WindowGroupLimitExec(part, order, _: RowNumber, limit, Partial,
+          SortExec(_, false, child, _))
+          if limit > 0 &&
+            keysFromBroadcastBuild(child, AttributeSet(part.flatMap(_.references))) =>
+        BoundedTopKExec(part, order, limit, child)
     }
   }
 }

@@ -76,7 +76,11 @@ object GraftApp {
       registerViews: Boolean = true,
       maintenanceEvery: Int = 0, // micro-batches between maintenance passes (0 = off)
       retentionUs: Option[Long] = None,
-      corpusDir: Option[String] = None) // LLM-corpus parquet dir → curation views
+      corpusDir: Option[String] = None) { // LLM-corpus parquet dir → curation views
+    // a count below 1 commits a 1-bucket table whose recorded count then
+    // fails every later merge
+    require(ribBuckets >= 1, s"ribBuckets (env GRAFT_NUM_BUCKETS) must be >= 1, got $ribBuckets")
+  }
 
   /** The RIB-scale tables (`Conf.ribBuckets` buckets, each with a
     * `<table>_log` CDC log) and the 1-bucket inventory tables.

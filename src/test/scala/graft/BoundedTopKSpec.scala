@@ -28,62 +28,66 @@ class BoundedTopKSpec extends SparkSpec {
     }
   }
 
-  // the value-identity tests exercise the operator on an arbitrary
-  // (non-broadcast-keyed) window, so lift the shape restriction
-  private def withRewriteForced[T](body: => T): T =
-    withConf("spark.graft.topk.broadcastKeysOnly", "false")(body)
+  private def rewritten(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("GraftBoundedTopK")
 
   // 3 groups × 40 rows; ties in score (score = i % 7) broken by id;
   // nulls (undefined score) must sort LAST under desc — rows 0,13,26,39
-  private lazy val base = (0 until 120).map { i =>
+  private lazy val rows = (0 until 120).map { i =>
     val score: java.lang.Double = if (i % 13 == 0) null else (i % 7).toDouble
-    (s"g${i % 3}", i.toLong, score)
-  }.toDF("g", "id", "score").repartition(4)
+    (i % 3, i.toLong, score)
+  }.toDF("gid", "id", "score").repartition(4)
+
+  // the same rows with the group key g taken from the build side of a
+  // broadcast join: the shape the rewrite fires on
+  private lazy val base = rows
+    .join(broadcast((0 until 3).map(i => (i, s"g$i")).toDF("gid", "g")), "gid")
+    .select("g", "id", "score")
+
+  // the same rows with g computed in place: no broadcast join below
+  private lazy val plain = rows
+    .select(concat(lit("g"), $"gid".cast("string")).as("g"), $"id", $"score")
 
   test("bounded top-k matches the window plan exactly (ties, nulls, k>n)") {
-    withRewriteForced {
-      for (k <- Seq(1, 3, 40, 100)) {
-        val got = topk(base, k).collect().toSet
-        val want = withConf("spark.graft.topk.enabled", "false") {
-          topk(base, k).collect().toSet
-        }
-        assert(got == want, s"k=$k mismatch: ${got.diff(want)} vs ${want.diff(got)}")
-        assert(got.size == (math.min(k, 40) * 3))
+    for (k <- Seq(1, 3, 40, 100)) {
+      val q = topk(base, k)
+      val got = q.collect().toSet
+      assert(rewritten(q), s"k=$k: rewrite missing")
+      val want = withConf("spark.graft.topk.enabled", "false") {
+        topk(base, k).collect().toSet
       }
+      assert(got == want, s"k=$k mismatch: ${got.diff(want)} vs ${want.diff(got)}")
+      assert(got.size == (math.min(k, 40) * 3))
     }
   }
 
   test("group cap: pass-through rows keep results identical") {
-    withRewriteForced {
-      val want = withConf("spark.graft.topk.enabled", "false") {
-        topk(base, 5).collect().toSet
-      }
-      val got = withConf("spark.graft.topk.maxGroupsPerTask", "1") {
-        topk(base, 5).collect().toSet
-      }
-      assert(got == want)
+    val want = withConf("spark.graft.topk.enabled", "false") {
+      topk(base, 5).collect().toSet
     }
+    val q = topk(base, 5)
+    val got = withConf("spark.graft.topk.maxGroupsPerTask", "1") {
+      q.collect().toSet
+    }
+    assert(rewritten(q), "rewrite missing")
+    assert(got == want)
   }
 
   test("executed plan replaces Sort+partial WindowGroupLimit with GraftBoundedTopK") {
-    withRewriteForced {
-      val df = topk(base, 5)
-      df.count()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("GraftBoundedTopK"), s"rewrite missing:\n$plan")
-      // exactly the Final window limit remains; the Partial one is ours now
-      assert(!plan.contains("Partial"), s"partial WindowGroupLimit survived:\n$plan")
-    }
+    val df = topk(base, 5)
+    df.count()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftBoundedTopK"), s"rewrite missing:\n$plan")
+    // exactly the Final window limit remains; the Partial one is ours now
+    assert(!plan.contains("Partial"), s"partial WindowGroupLimit survived:\n$plan")
   }
 
   test("rank()/dense_rank() filters are NOT rewritten (ties exceed k rows)") {
-    withRewriteForced {
-      val w = Window.partitionBy($"g").orderBy($"score".desc)
-      val df = base.withColumn("rk", rank().over(w)).filter($"rk" <= 2)
-      df.count()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("GraftBoundedTopK"), s"rank() must keep Spark's plan:\n$plan")
-    }
+    val w = Window.partitionBy($"g").orderBy($"score".desc)
+    val df = base.withColumn("rk", rank().over(w)).filter($"rk" <= 2)
+    df.count()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("GraftBoundedTopK"), s"rank() must keep Spark's plan:\n$plan")
   }
 
   test("default conf: broadcast-keyed top-k rewritten, per-row window is not") {
@@ -107,7 +111,7 @@ class BoundedTopKSpec extends SparkSpec {
 
     // per-row-group dedup window (groups ≈ rows): must KEEP Spark's
     // sort-based plan — the heap loses on this shape
-    val dedup = topk(base, 1)
+    val dedup = topk(plain, 1)
     dedup.count()
     val dedupPlan = dedup.queryExecution.executedPlan.toString
     assert(!dedupPlan.contains("GraftBoundedTopK"),

@@ -593,4 +593,14 @@ class GraftAppSpec extends SparkSpec {
         spark.sparkContext.defaultParallelism.toString)
     } finally spark.conf.set(key, before)
   }
+
+  test("a rib bucket count below 1 is rejected when the Conf is built") {
+    // let through, 0 would commit a 1-bucket ip_rib in batch 1 and fail
+    // the recorded-count check of every later batch
+    for (n <- Seq(0, -3)) {
+      val e = intercept[IllegalArgumentException](GraftApp.Conf("/unused", ribBuckets = n))
+      assert(e.getMessage.contains("GRAFT_NUM_BUCKETS"), e.getMessage)
+    }
+    assert(GraftApp.Conf("/unused", ribBuckets = 1).ribBuckets === 1)
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.LpmJoin
 
-/** J5/J6: both LPM strategies agree with a brute-force scan (seeded
+/** J5/J6: the LPM strategies agree with a brute-force scan (seeded
   * random property), and the covering join reproduces the RPKI
   * containment predicate of `2_aggregations.sql:260-265`.
   */
@@ -20,7 +20,7 @@ class LpmJoinSpec extends SparkSpec {
     addr - addr % step
   }
 
-  test("lpmRange == lpmByExpansion == brute force on random data") {
+  test("lpmRange == lpmByExpansionAgg == brute force on random data") {
     val rnd = new Random(42)
     for (_ <- 1 to 5) {
       val pfx = (0 until 40).map { i =>
@@ -39,8 +39,6 @@ class LpmJoinSpec extends SparkSpec {
 
       val viaRange = resOf(LpmJoin.lpmRange(probes, Seq("probe_id"), "addr",
         prefixes, "pstart", "pend", "len", tieBreak = Seq(col("pid").asc)))
-      val viaExp = resOf(LpmJoin.lpmByExpansion(probes, Seq("probe_id"), "addr",
-        prefixes, "pstart", "len", bits, tieBreak = Seq(col("pid").asc)))
       val viaAgg = resOf(LpmJoin.lpmByExpansionAgg(probes, Seq("probe_id"), "addr",
         prefixes, "pstart", "len", bits, payload = Seq("pid"), tieBreakAsc = "pid"))
 
@@ -54,7 +52,6 @@ class LpmJoinSpec extends SparkSpec {
       }.toSet
 
       assert(viaRange === brute)
-      assert(viaExp === brute)
       assert(viaAgg === brute)
     }
   }
@@ -152,8 +149,7 @@ class LpmJoinSpec extends SparkSpec {
     assert(got === Set(1L))
   }
 
-  test("coveringJoinByExpansion ≡ coveringJoin on aligned dims (numeric and binary forms)") {
-    import graft.ip.IpKit
+  test("coveringJoinByExpansion ≡ coveringJoin on aligned dims") {
     // numeric 16-bit space: pseudo-random aligned dims + facts
     val dims = spark.range(200).select(
       (lit(4) + col("id") % 8L).cast("int").as("rlen"),
@@ -180,26 +176,5 @@ class LpmJoinSpec extends SparkSpec {
       dims, "rstart", "rlen", "maxlen", bits = 16))
     assert(exp === nlj)
     assert(nlj.nonEmpty)
-
-    // binary form over real v4 prefixes: same row set as the range NLJ
-    val bdims = IpKit.withPrefixRange(spark.range(64).select(
-      format_string("10.%d.0.0/%d", col("id") % 32, lit(12) + (col("id") % 3) * lit(4))
-        .as("prefix")), "prefix")
-      .withColumn("maxlen", col("ip_len") + lit(8))
-    val bfacts = IpKit.withPrefixRange(spark.range(500).select(
-      col("id"),
-      format_string("10.%d.%d.0/%d", col("id") % 40, (col("id") * 3) % 256,
-        lit(20) + (col("id") % 3) * lit(2)).as("prefix")), "prefix")
-      .withColumnRenamed("ip_start", "f_start").withColumnRenamed("ip_end", "f_end")
-      .withColumnRenamed("ip_len", "f_len")
-    def bpairs(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
-      df.select(col("id"), hex(col("ip_start")).as("rs")).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-    val bnlj = bpairs(LpmJoin.coveringJoin(bfacts, "f_start", "f_end", "f_len",
-      bdims, "ip_start", "ip_end", "maxlen"))
-    val bexp = bpairs(LpmJoin.coveringJoinByExpansionBinary(bfacts, "f_start", "f_len",
-      bdims, "ip_start", "ip_len", "maxlen"))
-    assert(bexp === bnlj)
-    assert(bnlj.nonEmpty)
   }
 }

@@ -22,28 +22,33 @@ class MergeOpsSpec extends SparkSpec {
     rows.toDF("k", "ts", "attr", "wd")
 
   test("upsert retains attr on withdraw, updates ts/flag") {
-    val current = df(("a", 1L, "A1", false), ("b", 1L, "B1", false))
-    val updates = df(("a", 2L, null, true), ("c", 2L, "C1", false))
+    val current = df(("a", 1L, "A1", false), ("b", 1L, "B1", false),
+      ("f", 1L, "F1", false))
+    val updates = df(("a", 2L, null, true), ("c", 2L, "C1", false),
+      ("f", 2L, "", true)) // the wire's withdraw carries an empty attr
     val next = MergeOps.upsert(current, updates, policy)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getBoolean(3))).toSet
     assert(next === Set(
       ("a", 2L, "A1", true),   // withdrawn: ts/flag new, attr retained
       ("b", 1L, "B1", false),  // untouched
-      ("c", 2L, "C1", false))) // fresh insert
+      ("c", 2L, "C1", false),  // fresh insert
+      ("f", 2L, "F1", true)))  // non-null withdraw attr is not taken
   }
 
   test("CDC fires on withdraw flip and attr change only; withdraw logs OLD attr") {
     val current = df(("a", 1L, "A1", false), ("b", 1L, "B1", false),
-      ("d", 1L, "D1", false))
+      ("d", 1L, "D1", false), ("f", 1L, "F1", false))
     val updates = df(
       ("a", 2L, null, true),   // flip → log with OLD attr A1
       ("b", 2L, "B1", false),  // no flip, attr unchanged → no log
       ("d", 2L, "D2", false),  // attr change → log new attr
-      ("e", 2L, "E1", false))  // fresh advertise → log
+      ("e", 2L, "E1", false),  // fresh advertise → log
+      ("f", 2L, "", true))     // flip with empty attr → log OLD attr F1
     val (_, log) = MergeOps.upsertWithLog(current, updates, policy)
     val rows = log.select("k", "attr", "wd").collect()
       .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSet
-    assert(rows === Set(("a", "A1", true), ("d", "D2", false), ("e", "E1", false)))
+    assert(rows === Set(("a", "A1", true), ("d", "D2", false), ("e", "E1", false),
+      ("f", "F1", true)))
   }
 
   test("applyOrdered ≡ sequential upserts (batch fold parity)") {

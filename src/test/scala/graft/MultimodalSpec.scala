@@ -32,31 +32,6 @@ class MultimodalSpec extends SparkSpec {
     assert(counts("image") === 3L)
   }
 
-  test("real PNG decodes via javax.imageio; dirty bytes fall back to stub") {
-    // 8×4 PNG, left half black (lum 0 → bin 0), right half white
-    // (lum 255 → bin dim-1), generated in-memory — a REAL codec path
-    val img = new java.awt.image.BufferedImage(8, 4,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 4; x <- 0 until 8)
-      img.setRGB(x, y, if (x < 4) 0x000000 else 0xffffff)
-    val baos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", baos))
-    val png = baos.toByteArray
-
-    val rows = Multimodal.extractImageFeatures(
-      Multimodal.fromBytes(spark, Seq(
-        (1L, "image", png),
-        (2L, "image", "not-an-image".getBytes("UTF-8")), // dirty shard
-        (3L, "audio", png))),                            // non-image kind → stub
-      "content", "kind", dim = 8)
-      .select(col("media_id"), col("features")).as[(Long, Seq[Float])]
-      .collect().toMap
-
-    assert(rows(1L) === Seq(0.5f, 0f, 0f, 0f, 0f, 0f, 0f, 0.5f))
-    assert(rows(2L) === Multimodal.stubDecode("not-an-image".getBytes("UTF-8"), 8).toSeq)
-    assert(rows(3L) === Multimodal.stubDecode(png, 8).toSeq) // audio never image-decodes
-  }
-
   test("frame sampling produces deterministic offsets") {
     val offs = Multimodal.sampleFrameOffsets(media.filter(col("kind") === "video"),
       "content", everyN = 10)

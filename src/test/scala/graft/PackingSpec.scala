@@ -63,18 +63,6 @@ class PackingSpec extends SparkSpec {
     assert(perDoc === r2)
   }
 
-  test("profileNumericSketch tracks the exact profile within sketch error") {
-    val df = (1 to 5000).map(i => ("g", (i % 997).toDouble)).toDF("k", "v")
-    val exact  = Packing.profileNumeric(df, Seq("k"), "v").collect()(0)
-    val sketch = Packing.profileNumericSketch(df, Seq("k"), "v").collect()(0)
-    assert(sketch.getAs[Long]("n_rows") === exact.getAs[Long]("n_rows"))
-    assert(sketch.getAs[Double]("mean_v") === exact.getAs[Double]("mean_v"))
-    val (de, ds) = (exact.getAs[Long]("n_distinct"), sketch.getAs[Long]("n_distinct"))
-    assert(math.abs(ds - de).toDouble / de < 0.15) // 3× the 5% rsd
-    assert(math.abs(sketch.getAs[Double]("p50") - exact.getAs[Double]("p50")) <= 5.0)
-    assert(math.abs(sketch.getAs[Double]("p95") - exact.getAs[Double]("p95")) <= 5.0)
-  }
-
   test("profileNumeric: exact counters, mean, percentiles; nulls counted not averaged") {
     val df = Seq(
       ("a", Some(1.0)), ("a", Some(2.0)), ("a", Some(3.0)), ("a", Some(4.0)),

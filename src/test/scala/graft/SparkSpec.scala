@@ -3,16 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one per suite, lazy). */
+/** Shared local session for specs (one per suite, lazy): the mains'
+  * session, so every suite exercises the BoundedTopK physical rewrite
+  * the bench times.
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // same extension set as Bench/Verify, so every suite exercises the
-    // BoundedTopK physical rewrite the bench times
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local()
 }

@@ -195,54 +195,6 @@ class StateAndJobsSpec extends AnyFunSuite {
     assert(s.count() === 1)
   }
 
-  test("bucketed stats job: write amplification ∝ touched buckets across runs") {
-    val root = Files.createTempDirectory("graft_stats").toString
-    def run(log: org.apache.spark.sql.DataFrame, horizonMicros: Long, nowMicros: Long): Seq[Int] = {
-      val txn = ConsistentState.begin(spark, root)
-      val touched = AggJobs.runChgStatsBucketed(txn, "chg_stats", log, "ts_us", 60, col("wd"),
-        Seq("user_id"), horizonMicros, nowMicros, numBuckets = 32)
-      txn.commit()
-      touched
-    }
-    val bucketUs = 60L * 1000000
-    def logOf(rows: Seq[(Long, Long, Boolean)]) = rows.toDF("ts_us", "user_id", "wd")
-    // run 1 (bootstrap): 50 users × time-buckets 0..4 fill the layout
-    val rows1 = for (u <- 1L to 50L; b <- 0L to 4L) yield (b * bucketUs + u, u, u % 3 == 0)
-    val log1 = logOf(rows1)
-    val t1 = run(log1, horizonMicros = 10 * bucketUs + 5, nowMicros = 10 * bucketUs + 5)
-    assert(t1.nonEmpty)
-    val before = bucketFiles(root, "chg_stats")
-
-    // run 2: new events for 3 users in time-bucket 8, horizon covering
-    // only buckets 8..9 → fresh is 3 rows → ≤3 key-hash buckets touched
-    val rows2 = Seq((8 * bucketUs + 1, 7L, false), (8 * bucketUs + 2, 8L, true),
-      (8 * bucketUs + 3, 9L, false))
-    val log2 = log1.unionByName(logOf(rows2))
-    val t2 = run(log2, horizonMicros = 2 * bucketUs, nowMicros = 10 * bucketUs)
-    assert(t2.size <= 3, s"3 fresh rows touched ${t2.size} buckets")
-    assert(t2.size < before.size, "run 2 rewrote as many buckets as exist")
-
-    // untouched buckets keep their exact file sets
-    val after = bucketFiles(root, "chg_stats")
-    before.keySet.diff(t2.toSet)
-      .foreach(b => assert(after(b) === before(b), s"untouched bucket $b was rewritten"))
-
-    // stored contents equal the snapshot-path (full-rewrite) reference
-    val empty = Seq.empty[(Long, Long, Long, Long)]
-      .toDF("bucket", "user_id", "withdraws", "updates")
-    val s1 = AggJobs.runChgStats(empty, log1, "ts_us", 60, col("wd"), Seq("user_id"),
-      horizonMicros = 10 * bucketUs + 5, nowMicros = 10 * bucketUs + 5)
-    val s2 = AggJobs.runChgStats(s1, log2, "ts_us", 60, col("wd"), Seq("user_id"),
-      horizonMicros = 2 * bucketUs, nowMicros = 10 * bucketUs)
-    val got = read(root, "chg_stats").drop("__tombstone")
-    assert(got.exceptAll(s2).isEmpty && s2.exceptAll(got).isEmpty)
-    val gotSet = got.collect().toSet
-
-    // replaying run 2 converges: identical contents
-    run(log2, horizonMicros = 2 * bucketUs, nowMicros = 10 * bucketUs)
-    assert(read(root, "chg_stats").drop("__tombstone").collect().toSet === gotSet)
-  }
-
   test("physical retention drops aged partition dirs; survivors byte-identical") {
     import graft.operators.Retention
     val hourUs = 3600L * 1000000

@@ -8,51 +8,12 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.TimeAgg
 
-/** §2.8 streaming semantics: event-time tumbling window + watermark in
-  * append mode — windows seal once the watermark passes, late-but-
-  * within-watermark data still counts.
+/** §2.8 streaming semantics (complete-mode monitor, watermarked
+  * stream-stream join) and the batch time-series operators of
+  * [[graft.operators.TimeAgg]].
   */
 class StreamingAggSpec extends SparkSpec {
   import spark.implicits._
-
-  test("windowed change stats with watermark across micro-batches") {
-    val in = Files.createTempDirectory("graft_sagg_in").toString
-    def write(name: String, rows: Seq[(Timestamp, Long, Boolean)]): Unit =
-      rows.toDF("ts", "user_id", "wd").write.parquet(s"$in/$name")
-    def ts(s: String) = Timestamp.valueOf(s)
-
-    write("b1", Seq(
-      (ts("2024-01-01 00:00:10"), 1L, false),
-      (ts("2024-01-01 00:00:40"), 1L, true),
-      (ts("2024-01-01 00:01:10"), 1L, false)))
-
-    val stream = spark.readStream
-      .schema("ts timestamp, user_id bigint, wd boolean")
-      .option("recursiveFileLookup", "true")
-      .parquet(in)
-    val agg = TimeAgg.streamingChgStats(stream, "ts", "1 minute", "30 seconds",
-      col("wd"), Seq("user_id"))
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("chg_stats_stream")
-      .trigger(Trigger.ProcessingTime(50)).start()
-    q.processAllAvailable()
-
-    // late event for the 00:00 window, within watermark horizon relative
-    // to max seen (00:01:10 → watermark 00:00:40): 00:00 window not yet
-    // sealed, so this still counts; then an event far ahead seals all.
-    write("b2", Seq((ts("2024-01-01 00:00:50"), 1L, false)))
-    q.processAllAvailable()
-    write("b3", Seq((ts("2024-01-01 00:10:00"), 1L, false)))
-    q.processAllAvailable()
-    q.stop()
-
-    val out = spark.table("chg_stats_stream")
-      .select(col("bucket_start").cast("string"), col("user_id"),
-        col("withdraws"), col("updates"))
-      .as[(String, Long, Long, Long)].collect().toSet
-    assert(out.contains(("2024-01-01 00:00:00", 1L, 1L, 2L))) // incl. late event
-    assert(out.contains(("2024-01-01 00:01:00", 1L, 0L, 1L)))
-  }
 
   test("streaming SPRT monitor: complete-mode LLR updates per batch, " +
       "batch/stream parity") {
@@ -89,44 +50,6 @@ class StreamingAggSpec extends SparkSpec {
     assert(snap2 === batchAt(Seq((1L, true), (2L, false), (3L, false),
       (4L, true), (5L, true))))
     assert(snap2._3 > snap1._3, "two successes must push the LLR up")
-  }
-
-  test("streaming session windows: gap splits sessions, watermark seals them") {
-    val in = Files.createTempDirectory("graft_ssw_in").toString
-    def write(name: String, rows: Seq[(Timestamp, Long)]): Unit =
-      rows.toDF("ts", "user_id").write.parquet(s"$in/$name")
-    def ts(s: String) = Timestamp.valueOf(s)
-
-    // user 1: two bursts separated by > 1 min gap; user 2: one event
-    write("b1", Seq(
-      (ts("2024-01-01 00:00:00"), 1L),
-      (ts("2024-01-01 00:00:30"), 1L),
-      (ts("2024-01-01 00:05:00"), 1L),
-      (ts("2024-01-01 00:05:10"), 2L)))
-
-    val stream = spark.readStream
-      .schema("ts timestamp, user_id bigint")
-      .option("recursiveFileLookup", "true")
-      .parquet(in)
-    val agg = TimeAgg.streamingSessionAgg(stream, "ts", "1 minute",
-      "30 seconds", Seq("user_id"))
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("session_stream")
-      .trigger(Trigger.ProcessingTime(50)).start()
-    q.processAllAvailable()
-    // advance the watermark far enough to seal every open session
-    write("b2", Seq((ts("2024-01-01 01:00:00"), 9L)))
-    q.processAllAvailable()
-    q.stop()
-
-    val out = spark.table("session_stream")
-      .select(col("session_start").cast("string"),
-        col("session_end").cast("string"), col("user_id"), col("n_events"))
-      .as[(String, String, Long, Long)].collect().toSet
-    // session end = last event + gap
-    assert(out.contains(("2024-01-01 00:00:00", "2024-01-01 00:01:30", 1L, 2L)))
-    assert(out.contains(("2024-01-01 00:05:00", "2024-01-01 00:06:00", 1L, 1L)))
-    assert(out.contains(("2024-01-01 00:05:10", "2024-01-01 00:06:10", 2L, 1L)))
   }
 
   test("stream-stream interval join: errors pair with purchases in-window, " +

@@ -304,32 +304,6 @@ class StreamingSpec extends SparkSpec {
     assert(h1.getAs[Boolean]("isWithdrawn") === true)
   }
 
-  test("streaming exact dedup: first-seen wins across micro-batches, watermark-bounded state") {
-    val in = Files.createTempDirectory("graft_sdedup_in").toString
-    Files.writeString(java.nio.file.Paths.get(s"$in/b1.tsv"),
-      "1\t2024-01-01 00:00:01\tsame text\n" +
-        "2\t2024-01-01 00:00:02\tsame text\n" + // in-batch dup
-        "3\t2024-01-01 00:00:03\tother text")
-    val parsed = spark.readStream.text(in)
-      .select(split(col("value"), "\t").as("f"))
-      .select(col("f").getItem(0).as("id"),
-        to_timestamp(col("f").getItem(1)).as("ts"),
-        col("f").getItem(2).as("text"))
-    val deduped = graft.operators.Dedup.streamingExact(
-      parsed, md5(col("text")), "ts", "1 hour")
-    val q = deduped.writeStream.format("memory").queryName("sdedup")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    // next micro-batch: a cross-batch dup (state-store hit) + a new text
-    Files.writeString(java.nio.file.Paths.get(s"$in/b2.tsv"),
-      "4\t2024-01-01 00:00:10\tsame text\n" +
-        "5\t2024-01-01 00:00:11\tfresh text")
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("sdedup").select("id").collect().map(_.getString(0)).toSet
-    assert(kept === Set("1", "3", "5")) // 2 (in-batch) and 4 (cross-batch) dropped
-  }
-
   test("streaming corpus builder: Bloom-guarded append keeps one copy per content") {
     // the incremental corpus-build loop: each micro-batch keeps only
     // rows whose content is NEW vs the accumulated corpus, then appends

@@ -86,15 +86,6 @@ class TextFnsSpec extends SparkSpec {
     assert(r === "mixed case text here")
   }
 
-  test("repetitionRatio flags degenerate repetition, 0 for short/empty") {
-    val r = Seq("buy buy buy buy", "all distinct words here", "one", "")
-      .toDF("text").select(TextFns.repetitionRatio(col("text"))).as[Double].collect().toSeq
-    assert(r(0) === 0.75) // 3 adjacent dup pairs / 4 tokens
-    assert(r(1) === 0.0)
-    assert(r(2) === 0.0)
-    assert(r(3) === 0.0)
-  }
-
   test("blank text scores zero diversity; null text yields null langId") {
     import org.apache.spark.sql.functions._
     import graft.functions.TextFns

@@ -1,8 +1,12 @@
 package graft.operators
 
 import graft.operators.Mat._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import scala.annotation.tailrec
+import scala.collection.mutable
 
 /** Similarity-graph analytics over kNN frames — the graph layer a
   * curation pipeline builds ON TOP of ANN results: mutual-edge
@@ -314,13 +318,19 @@ object Graph {
     * cliques survive).
     *
     * Plan: each round is ONE hash aggregate (degrees over the current
-    * edge frame) + two semi-joins of the edge frame against surviving
+    * edge frame) + two anti-joins of the edge frame against the dead
     * vertices — all shuffles keyed on vertex id, nothing wider than
     * (id, long). Each round's frame is localCheckpoint'd so lineage
     * stays linear in rounds and early rounds' full-corpus upstream
     * (often a kNN pipeline) is never re-executed. A round that removes
     * nothing short-circuits the loop (one cheap count per round —
     * driver-side but O(rounds), never O(N)).
+    *
+    * Once the surviving edges fit under [[LocalPeelMaxEdges]] (2²⁰
+    * edges, ≤ 48 B each in the task), the remaining rounds and the
+    * final degrees run in ONE task over primitive arrays (see [[peel]])
+    * — the same algebra, so the output is identical to the distributed
+    * rounds'. LongType ids only; other id types stay distributed.
     *
     * Worst case rounds-to-fixpoint is O(diameter) (a path with k=2
     * peels from the ends inward); on the bounded-degree kNN graphs
@@ -330,7 +340,14 @@ object Graph {
     * @return (id, core_degree) for vertices of the k-core, with their
     *         degree INSIDE the core
     */
-  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    kCore(edges, k, rounds, LocalPeelMaxEdges)
+
+  /** [[kCore]] with the one-task cap given: specs pass -1 to force the
+    * distributed rounds, or a cap between two rounds' counts to switch
+    * mid-loop. */
+  private[graft] def kCore(edges: DataFrame, k: Int, rounds: Int,
+      localMaxEdges: Int): DataFrame = {
     require(k >= 1, s"k ($k) must be >= 1")
     require(rounds >= 1 && rounds <= 64, s"rounds ($rounds) must be in [1, 64]")
     def degrees(e: DataFrame): DataFrame =
@@ -342,12 +359,11 @@ object Graph {
     // dead set, so its edge would survive every round) — enforce the
     // precondition here instead of assuming it of callers; a no-op for
     // mutualEdges-shaped input, whose a < b filter already drops nulls
-    var cur = edges.select(col("a"), col("b")).na.drop()
-      .mat
-    var curCount = cur.count()
-    var r = 0
-    var done = curCount == 0L
-    while (r < rounds && !done) {
+    val start = edges.select(col("a"), col("b")).na.drop()
+    val schema = StructType(Seq(
+      StructField("id", LongType, start.schema.exists(_.nullable)),
+      StructField("core_degree", LongType, nullable = false)))
+    peel(start, rounds, localMaxEdges)(
       // peel by ANTI-joining the DEAD set (degree < k) instead of
       // semi-joining the alive set: after round one the dead set is
       // the handful of vertices that just dropped below k, so the
@@ -355,17 +371,71 @@ object Graph {
       // (guide §3.1) — the alive-side semi-join build was always
       // ~|V|. Identical semantics: an edge survives iff neither
       // endpoint is dead.
-      val dead = degrees(cur).filter(col("core_degree") < k)
-      val next = cur
-        .join(dead.select(col("id").as("a")), Seq("a"), "left_anti")
-        .join(dead.select(col("id").as("b")), Seq("b"), "left_anti")
-        .select(col("a"), col("b"))
-        .mat
-      val nextCount = next.count()
-      done = nextCount == curCount || nextCount == 0L
-      cur = next; curCount = nextCount; r += 1
-    }
-    degrees(cur).filter(col("core_degree") >= k)
+      round = cur => {
+        val dead = degrees(cur).filter(col("core_degree") < k)
+        cur
+          .join(dead.select(col("id").as("a")), Seq("a"), "left_anti")
+          .join(dead.select(col("id").as("b")), Seq("b"), "left_anti")
+          .select(col("a"), col("b"))
+      },
+      finish = cur => degrees(cur).filter(col("core_degree") >= k),
+      localSchema = schema,
+      localFinish = (g, left) => {
+        g.peelRounds(left) { () =>
+          val deg = g.degrees()
+          g.retain(c => deg(g.src(c)) >= k && deg(g.dst(c)) >= k)
+        }
+        val deg = g.degrees()
+        Iterator.range(0, g.vertices).filter(v => deg(v) >= k)
+          .map(v => Row(g.ids(v), deg(v)))
+      })
+  }
+
+  /** Edge count at or under which [[kCore]] and [[kTruss]] finish in one
+    * task. The task's arrays hold at most 48 B per edge: 16 for the
+    * sorted vertex ids (up to two per edge), 8 for the packed edge key,
+    * 4 for its multiplicity, 1 for its alive flag, and 16 for one
+    * round's counts (kCore: a long degree per vertex; kTruss: a long
+    * support per edge plus an int row start per vertex). The 16 B per
+    * edge of rows as read are garbage before the counts exist. So
+    * ≤ 48 MiB at the cap.
+    */
+  private[graft] val LocalPeelMaxEdges: Int = 1 << 20
+
+  /** The peel loop [[kCore]] and [[kTruss]] share: materialize and count
+    * `start`, then either finish in one task — once the count is
+    * ≤ `localMaxEdges` and both ids are LongType — or run one
+    * distributed `round` and count again. A round that removes nothing
+    * or empties the frame ends the loop, as does the `rounds` budget,
+    * and `finish` builds the output from the last frame.
+    *
+    * The one-task finish is `repartition(1).mapPartitions`: it runs the
+    * rounds left of the budget (with the same early exit) and builds
+    * the output rows (`localSchema`) in memory. Nothing is collected to
+    * the driver and the result stays lazy, so every round after the
+    * switch costs no Spark job.
+    */
+  private def peel(start: DataFrame, rounds: Int, localMaxEdges: Int)(
+      round: DataFrame => DataFrame, finish: DataFrame => DataFrame,
+      localSchema: StructType,
+      localFinish: (PeelGraph, Int) => Iterator[Row]): DataFrame = {
+    val longIds = start.schema.forall(_.dataType == LongType)
+    @tailrec def loop(cur: DataFrame, curCount: Long, r: Int,
+        done: Boolean): DataFrame =
+      if (longIds && curCount <= localMaxEdges) {
+        val (n, left) = (curCount.toInt, rounds - r)
+        cur.repartition(1).mapPartitions(rows =>
+          localFinish(PeelGraph(rows, n), left))(Encoders.row(localSchema))
+      } else if (done || r == rounds) finish(cur)
+      else {
+        val next = round(cur).mat
+        val nextCount = next.count()
+        loop(next, nextCount, r + 1,
+          nextCount == curCount || nextCount == 0L)
+      }
+    val cur = start.mat
+    val n = cur.count()
+    loop(cur, n, 0, n == 0L)
   }
 
   /** Adamic–Adar link prediction over an undirected edge frame
@@ -779,13 +849,29 @@ object Graph {
     *
     * Scale shape: each round is the wedge self-equi-join (Σ deg²
     * rows, deg ≤ k on symmetrized kNN input), one closing equi-join,
-    * one explode×3 + hash agg, two semi-joins — the kCore round plan
+    * one explode×3 + hash agg, one semi-join — the kCore round plan
     * plus a triangle count; localCheckpoint per round caps lineage.
     *
-    * @return surviving edges (a, b, support) — support from the
-    *         final converged round
+    * Once the surviving edges fit under [[LocalPeelMaxEdges]] (2²⁰
+    * edges, ≤ 48 B each in the task; LongType ids only), the remaining
+    * rounds and the final support run in ONE task over primitive
+    * arrays (see [[peel]]): wedges over a sorted adjacency,
+    * each closed by binary search — the same algebra as the joins
+    * (every copy of a closing edge counts, null endpoints never join),
+    * so the output is identical to the distributed rounds'.
+    *
+    * @return surviving edges (a, b, support) — support from the last
+    *         round run, which may stop at the `rounds` budget before
+    *         the fixpoint
     */
-  def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    kTruss(edges, k, rounds, LocalPeelMaxEdges)
+
+  /** [[kTruss]] with the one-task cap given: specs pass -1 to force the
+    * distributed rounds, or a cap between two rounds' counts to switch
+    * mid-loop. */
+  private[graft] def kTruss(edges: DataFrame, k: Int, rounds: Int,
+      localMaxEdges: Int): DataFrame = {
     require(k >= 3, s"k ($k) must be >= 3")
     require(rounds >= 1 && rounds <= 64, s"rounds ($rounds) must be in [1, 64]")
     def support(e: DataFrame): DataFrame = {
@@ -801,22 +887,27 @@ object Graph {
         .select(col("__e.a").as("a"), col("__e.b").as("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
     }
-    var cur = edges.select(col("a"), col("b")).mat
-    var curCount = cur.count()
-    var r = 0
-    var done = curCount == 0L
-    while (r < rounds && !done) {
-      val keep = support(cur).filter(col("support") >= k - 2)
-      val next = cur.join(keep.select(col("a"), col("b")), Seq("a", "b"),
-          "left_semi")
-        .mat
-      val nextCount = next.count()
-      done = nextCount == curCount || nextCount == 0L
-      cur = next; curCount = nextCount; r += 1
-    }
-    cur.join(support(cur), Seq("a", "b"), "left")
-      .na.fill(0L, Seq("support"))
-      .filter(col("support") >= k - 2)
+    val start = edges.select(col("a"), col("b"))
+    val schema = StructType(start.schema.fields :+
+      StructField("support", LongType, nullable = false))
+    peel(start, rounds, localMaxEdges)(
+      round = cur => cur.join(support(cur).filter(col("support") >= k - 2)
+        .select(col("a"), col("b")), Seq("a", "b"), "left_semi"),
+      // an inner join: an edge without support has 0 < k−2
+      finish = cur => cur.join(support(cur), Seq("a", "b"))
+        .filter(col("support") >= k - 2),
+      localSchema = schema,
+      localFinish = (g, left) => {
+        g.peelRounds(left) { () =>
+          val sup = g.support()
+          g.retain(c => sup(c) >= k - 2)
+        }
+        val sup = g.support()
+        g.alive.filter(c => sup(c) >= k - 2).flatMap { c =>
+          val row = Row(g.ids(g.src(c)), g.ids(g.dst(c)), sup(c))
+          Iterator.fill(g.mult(c))(row)
+        }
+      })
   }
 
   /** Bounded-round integer eigenvector centrality over a canonical
@@ -1169,5 +1260,117 @@ object Graph {
           floor(lit(1.0e6) * (lit(2L) * col("n_mutual")).cast("double") /
             col("n_directed").cast("double")).cast("long"))
           .as("reciprocity_q"))
+  }
+}
+
+/** An `(a, b)` edge multiset in primitive arrays: the state of one
+  * task finishing [[Graph.kCore]] or [[Graph.kTruss]]. Vertex ids are
+  * replaced by their rank among the sorted distinct ids, and each
+  * distinct edge becomes one class — the key `src << 32 | dst` over
+  * ranks, sorted, with its multiplicity — so a class's out-neighbors
+  * are one contiguous run ordered by destination id.
+  */
+private[operators] final class PeelGraph private (
+    val ids: Array[Long], val vertices: Int,
+    keys: Array[Long], val classes: Int, val mult: Array[Int]) {
+  private val live = Array.fill(classes)(true)
+  // rowStart(v) until rowStart(v + 1): the classes whose source is v
+  private lazy val rowStart: Array[Int] = {
+    val starts = new Array[Int](vertices + 1)
+    var c = 0
+    while (c < classes) { starts(src(c) + 1) += 1; c += 1 }
+    var v = 0
+    while (v < vertices) { starts(v + 1) += starts(v); v += 1 }
+    starts
+  }
+
+  def src(c: Int): Int = (keys(c) >>> 32).toInt
+  def dst(c: Int): Int = keys(c).toInt
+  def alive: Iterator[Int] = Iterator.range(0, classes).filter(live)
+  def edgeCount: Long = {
+    var n = 0L
+    for (c <- 0 until classes if live(c)) n += mult(c)
+    n
+  }
+
+  /** Drops every alive class failing `keep`. */
+  def retain(keep: Int => Boolean): Unit =
+    for (c <- 0 until classes if live(c) && !keep(c)) live(c) = false
+
+  /** Runs `round` up to `rounds` times, stopping early once a round
+    * removes nothing or no edge is left. */
+  def peelRounds(rounds: Int)(round: () => Unit): Unit = {
+    var count = edgeCount
+    var r = 0
+    var done = count == 0L
+    while (r < rounds && !done) {
+      round()
+      val next = edgeCount
+      done = next == count || next == 0L
+      count = next; r += 1
+    }
+  }
+
+  /** Per vertex, its alive edge endpoints — a self-loop counts twice,
+    * as in the union of both endpoint columns. */
+  def degrees(): Array[Long] = {
+    val deg = new Array[Long](vertices)
+    for (c <- 0 until classes if live(c)) {
+      deg(src(c)) += mult(c); deg(dst(c)) += mult(c)
+    }
+    deg
+  }
+
+  /** Per class, the triangles through it among alive classes: every
+    * wedge `(x, y), (x, z)` with `y < z`, closed by `(y, z)`, credits
+    * all three edges once per combination of their copies. */
+  def support(): Array[Long] = {
+    val sup = new Array[Long](classes)
+    for (i <- 0 until classes if live(i)) {
+      val (y, end) = (dst(i), rowStart(src(i) + 1))
+      for (j <- i + 1 until end if live(j)) {
+        val c = java.util.Arrays.binarySearch(keys, rowStart(y),
+          rowStart(y + 1), (y.toLong << 32) | dst(j))
+        if (c >= 0 && live(c)) {
+          val w = mult(i).toLong * mult(j) * mult(c)
+          sup(i) += w; sup(j) += w; sup(c) += w
+        }
+      }
+    }
+    sup
+  }
+}
+
+private[operators] object PeelGraph {
+  /** Reads `(a, b)` rows of LongType ids; an edge with a null endpoint
+    * never joins, so it is dropped here. `sizeHint` is the expected row
+    * count, which sizes the read buffer exactly. */
+  def apply(rows: Iterator[Row], sizeHint: Int): PeelGraph = {
+    val buf = new mutable.ArrayBuilder.ofLong
+    buf.sizeHint(2 * sizeHint)
+    for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) {
+      buf += r.getLong(0); buf += r.getLong(1)
+    }
+    val ends = buf.result()
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var vertices = 0
+    for (v <- ids.indices if vertices == 0 || ids(v) != ids(vertices - 1)) {
+      ids(vertices) = ids(v); vertices += 1
+    }
+    def rank(id: Long): Long =
+      java.util.Arrays.binarySearch(ids, 0, vertices, id).toLong
+    val keys = Array.tabulate(ends.length / 2)(e =>
+      (rank(ends(2 * e)) << 32) | rank(ends(2 * e + 1)))
+    java.util.Arrays.sort(keys)
+    val classes =
+      keys.indices.count(e => e == 0 || keys(e) != keys(e - 1))
+    val mult = new Array[Int](classes)
+    var c = -1
+    for (e <- keys.indices) {
+      if (e == 0 || keys(e) != keys(e - 1)) { c += 1; keys(c) = keys(e) }
+      mult(c) += 1
+    }
+    new PeelGraph(ids, vertices, keys, classes, mult)
   }
 }

@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.operators.Graph
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+import org.apache.spark.sql.types.IntegerType
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -172,29 +179,40 @@ class GraphSpec extends SparkSpec {
   }
 
 
+  // kCore/kTruss one-task caps: the default (every graph here fits
+  // under it, so the rounds finish in one task) and -1 (never: the
+  // distributed rounds run to the end)
+  private val peelCaps = Seq(Graph.LocalPeelMaxEdges, -1)
+
   test("kCore: k=3 keeps the 4-clique, peels the tail") {
     val vs = Seq(1L, 2L, 3L, 4L)
     val clique = for (a <- vs; b <- vs if a < b) yield (a, b)
     val edges = (clique ++ Seq((4L, 5L), (5L, 6L))).toDF("a", "b")
-    val out = Graph.kCore(edges, k = 3, rounds = 8).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
+    for (cap <- peelCaps) {
+      val out = Graph.kCore(edges, k = 3, rounds = 8, cap).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L), s"cap $cap")
+    }
   }
 
   test("kCore: k=2 fully peels a path (worst-case depth) within bound") {
     val edges = (1L until 8L).map(i => (i, i + 1)).toDF("a", "b")
-    assert(Graph.kCore(edges, k = 2, rounds = 8).count() === 0L)
+    for (cap <- peelCaps)
+      assert(Graph.kCore(edges, k = 2, rounds = 8, cap).count() === 0L,
+        s"cap $cap")
   }
 
   test("kCore: k=2 core of triangle+pendant is the triangle, and " +
       "early-exit equals the full-round result") {
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("a", "b")
-    val a = Graph.kCore(edges, k = 2, rounds = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Graph.kCore(edges, k = 2, rounds = 64).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a === Set((1L, 2L), (2L, 2L), (3L, 2L)))
-    assert(b === a)
+    for (cap <- peelCaps) {
+      val a = Graph.kCore(edges, k = 2, rounds = 2, cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val b = Graph.kCore(edges, k = 2, rounds = 64, cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(a === Set((1L, 2L), (2L, 2L), (3L, 2L)), s"cap $cap")
+      assert(b === a, s"cap $cap")
+    }
   }
 
   test("adamicAdar: 4-cycle — both diagonals predicted with the exact " +
@@ -402,20 +420,130 @@ class GraphSpec extends SparkSpec {
       "k=4 cascades to empty") {
     // triangle 1-2-3 + pendant 3-4: the pendant sits in no triangle
     val g1 = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("a", "b")
-    val t3 = Graph.kTruss(g1, k = 3, rounds = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(t3.keySet === Set((1L, 2L), (1L, 3L), (2L, 3L)))
-    assert(t3.values.forall(_ === 1L))
     // two triangles sharing edge 2-3: support(2,3)=2, others 1
     val g2 = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
       .toDF("a", "b")
-    val t3b = Graph.kTruss(g2, k = 3, rounds = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(t3b((2L, 3L)) === 2L)
-    assert(t3b.size === 5 && t3b.count(_._2 === 1L) === 4)
-    // k=4 needs support >= 2 everywhere: first peel keeps only (2,3),
-    // whose support then drops to 0 -> empty fixpoint
-    assert(Graph.kTruss(g2, k = 4, rounds = 8).count() === 0L)
+    for (cap <- peelCaps) withClue(s"cap $cap: ") {
+      val t3 = Graph.kTruss(g1, k = 3, rounds = 8, cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(t3.keySet === Set((1L, 2L), (1L, 3L), (2L, 3L)))
+      assert(t3.values.forall(_ === 1L))
+      val t3b = Graph.kTruss(g2, k = 3, rounds = 8, cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(t3b((2L, 3L)) === 2L)
+      assert(t3b.size === 5 && t3b.count(_._2 === 1L) === 4)
+      // k=4 needs support >= 2 everywhere: first peel keeps only (2,3),
+      // whose support then drops to 0 -> empty fixpoint
+      assert(Graph.kTruss(g2, k = 4, rounds = 8, cap).count() === 0L)
+    }
+  }
+
+  test("kCore/kTruss: the one-task finish equals the distributed rounds " +
+      "row for row on random multigraphs") {
+    def oneTask(df: DataFrame): Boolean =
+      df.queryExecution.logical.collectFirst { case m: MapPartitions => m }
+        .nonEmpty
+    def rowsOf(df: DataFrame): Seq[String] =
+      df.collect().map(_.mkString(",")).toSeq.sorted
+    // every path must give the distributed rounds' rows and schema
+    def agree(label: String, run: Int => DataFrame, midCap: Int): Unit = {
+      val dist = run(-1)
+      assert(!oneTask(dist), label)
+      for (cap <- Seq(Graph.LocalPeelMaxEdges, midCap)) {
+        val out = run(cap)
+        assert(oneTask(out), s"$label cap $cap")
+        assert(out.schema === dist.schema, s"$label cap $cap")
+        assert(rowsOf(out) === rowsOf(dist), s"$label cap $cap")
+      }
+    }
+    val rnd = new scala.util.Random(8101)
+    // a 5-edge path (kCore k=2 peels one edge off each end per round,
+    // so rounds = 1 stops before the fixpoint) and two triangles sharing
+    // an edge (kTruss k=4 empties them in two rounds); the pendant
+    // 100-101 dies in round 1 for every k, so a cap one below the
+    // start count switches to the one task after round 1
+    val fixed = ((200L until 205L).map(i => (i, i + 1)) ++
+      Seq((300L, 301L), (300L, 302L), (301L, 302L), (301L, 303L),
+        (302L, 303L), (100L, 101L)))
+      .map { case (a, b) => (Option(a), Option(b)) }
+    val budgets = Seq(1, 8) ++ Seq.fill(4)(1 + rnd.nextInt(8))
+    for ((rounds, trial) <- budgets.zipWithIndex) {
+      // ids from a small range: duplicates, self-loops and a > b edges;
+      // one endpoint in 15 is null
+      val n = 4 + rnd.nextInt(5)
+      def end = if (rnd.nextInt(15) == 0) None else Some(rnd.nextInt(n).toLong)
+      val rows = Seq.fill(10 + rnd.nextInt(30))((end, end)) ++ fixed
+      val edges = rnd.shuffle(rows).toDF("a", "b")
+      val nonNull = rows.count { case (a, b) => a.isDefined && b.isDefined }
+      val kc = 2 + trial % 3
+      agree(s"trial $trial kCore k=$kc rounds=$rounds",
+        Graph.kCore(edges, kc, rounds, _), nonNull - 1)
+      val kt = 3 + trial % 3
+      agree(s"trial $trial kTruss k=$kt rounds=$rounds",
+        Graph.kTruss(edges, kt, rounds, _), rows.size - 1)
+      if (rounds == 1) {
+        val core = Graph.kCore(edges, 2, 1).collect().map(_.getLong(0))
+        assert(core.contains(202L) && core.contains(203L),
+          "rounds = 1 stops before the path is peeled")
+      }
+    }
+    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
+    agree("empty kCore", Graph.kCore(empty, 2, 8, _), 0)
+    agree("empty kTruss", Graph.kTruss(empty, 3, 8, _), 0)
+    // IntegerType ids keep the distributed rounds and their result
+    val ints = Seq((1, 2), (1, 3), (2, 3), (3, 4)).toDF("a", "b")
+    val core = Graph.kCore(ints, k = 2, rounds = 8)
+    val truss = Graph.kTruss(ints, k = 3, rounds = 8)
+    assert(!oneTask(core) && !oneTask(truss))
+    assert(core.schema("id").dataType === IntegerType)
+    assert(rowsOf(core) === Seq("1,2", "2,2", "3,2"))
+    assert(truss.schema("a").dataType === IntegerType)
+    assert(rowsOf(truss) === Seq("1,2,1", "1,3,1", "2,3,1"))
+  }
+
+  test("kCore/kTruss under the cap: rounds = 1 and rounds = 8 launch the " +
+      "same jobs (the build plus one collect)") {
+    val sc = spark.sparkContext
+    val tag = "graft.test.peelJobs"
+    // jobs started with this thread's tag; a marker job, started after
+    // the body, proves the listener has seen all of the body's jobs
+    def jobsOf(body: => Unit): Int = {
+      val label = java.util.UUID.randomUUID().toString
+      val seen = new AtomicInteger
+      val drained = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          Option(j.properties).map(_.getProperty(tag)).orNull match {
+            case `label` => seen.incrementAndGet()
+            case m if m == label + "/end" => drained.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setLocalProperty(tag, label)
+        body
+        sc.setLocalProperty(tag, label + "/end")
+        sc.parallelize(Seq(1), 1).count()
+        assert(drained.await(60, TimeUnit.SECONDS))
+        seen.get
+      } finally {
+        sc.setLocalProperty(tag, null)
+        sc.removeSparkListener(listener)
+      }
+    }
+    // both need several distributed rounds: a path peels from its ends
+    // (kCore k=2), two triangles sharing an edge empty in two (kTruss k=4)
+    val path = (1L until 8L).map(i => (i, i + 1)).toDF("a", "b")
+    val g2 = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
+      .toDF("a", "b")
+    val core1 = jobsOf(Graph.kCore(path, k = 2, rounds = 1).collect())
+    val core8 = jobsOf(Graph.kCore(path, k = 2, rounds = 8).collect())
+    val truss1 = jobsOf(Graph.kTruss(g2, k = 4, rounds = 1).collect())
+    val truss8 = jobsOf(Graph.kTruss(g2, k = 4, rounds = 8).collect())
+    assert(core8 === core1, s"kCore jobs: rounds=1 $core1, rounds=8 $core8")
+    assert(truss8 === truss1,
+      s"kTruss jobs: rounds=1 $truss1, rounds=8 $truss8")
   }
 
   test("eigenvectorCentrality: star concentrates on the hub; path " +

@@ -23,7 +23,8 @@ ceil_s = float(os.environ.get("SELFCHECK_MAX_ORACLE_S", "30") or 0)
 oracle_secs = {}  # name -> oracle wall seconds, for the summary
 
 con = duckdb.connect()
-con.execute("SET memory_limit='48GB'")
+# no memory_limit SET: DuckDB's default (80 % of RAM) makes a large
+# oracle spill to temp_directory instead of being OOM-killed
 # one spill dir per process: two concurrent selfchecks sharing a temp
 # dir corrupt each other's spill files (learned the hard way at 10x)
 spill = os.environ.get("SELFCHECK_SPILL_DIR", f"/tmp/duckdb_spill_{os.getpid()}")

@@ -4,7 +4,8 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round dev tool: one compact plan-shape line per gate —
   * parquet-scan count, exchange count, reused-exchange count, join
-  * strategies, plan size — so subtree duplication (scan count ≫ table
+  * strategies, graft top-k (`topk=`) and fused kNN (`knn=`) nodes, plan
+  * size — so subtree duplication (scan count ≫ table
   * count) and join-strategy surprises are visible across the whole
   * inventory in one JVM, without executing anything.
   *
@@ -41,6 +42,7 @@ object PlanAudit {
           f"bnlj=${n(_.startsWith("BroadcastNestedLoopJoin"))}%2d smj=${n(_.startsWith("SortMergeJoin"))}%2d " +
           f"bhj=${n(_.startsWith("BroadcastHashJoin"))}%2d cart=${n(_.startsWith("CartesianProduct"))}%2d " +
           f"win=${n(_ == "Window")}%2d topk=${n(_.startsWith("GraftBoundedTopK"))}%2d " +
+          f"knn=${n(_.startsWith("GraftCosineTopK"))}%2d " +
           f"lines=${p.linesIterator.size}%5d planMs=$planMs%8.1f")
       } catch { case e: Throwable =>
         println(s"${q.name} ERROR ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(80)}")

@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.operators.Mat._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,13 +12,15 @@ import org.apache.spark.sql.functions._
   * a training-data pipeline.
   *
   * Baseline: brute-force cosine top-k with a broadcast query side — the
-  * corpus (100 TB side) streams through one codegen'd stage, never
-  * shuffling. Scale path: LSH bucketing by random-hyperplane signs cuts
-  * the candidate set per query to one bucket (equi-join on the
-  * signature), trading recall for a ~2^planes fan-in reduction.
+  * corpus (100 TB side) streams through one fused scoring operator
+  * ([[graft.plans.GraftCosineTopK]]) that keeps a bounded top-k per
+  * query per partition, never shuffling the scored pairs. Scale path:
+  * LSH bucketing by random-hyperplane signs cuts the candidate set per
+  * query to one bucket (equi-join on the signature), trading recall for
+  * a ~2^planes fan-in reduction.
   *
-  * All dot products run in double via `zip_with`/`aggregate` built-ins
-  * (whole-stage codegen; no UDF, no Python).
+  * All dot products are [[dot]]'s left-to-right double fold; the fused
+  * kNN operator repeats it bit for bit (no UDF, no Python).
   */
 object Similarity {
 
@@ -46,23 +50,36 @@ object Similarity {
   }
 
   /** Brute-force cosine top-k: for each row of `queries`, the k nearest
-    * corpus rows (excluding self-id matches). Queries must be small
-    * (broadcast); corpus arbitrarily large.
+    * corpus rows (excluding self-id matches; a null id matches nothing).
+    * Queries must be small (broadcast); corpus arbitrarily large.
+    *
+    * Plan: [[graft.plans.GraftCosineTopK]] scores every pair inside one
+    * operator — the query side broadcast, each corpus vector decoded
+    * once — and forwards at most k candidates per query per corpus
+    * partition to [[topKPerQuery]]. `cos` is bit-identical to
+    * `when(|q|·|c| > 0, dot(q, c) / (|q|·|c|))`: a zero, null or
+    * null-element vector and a length mismatch give a null cos, which
+    * ranks last. Building the frame runs no Spark job.
+    *
+    * @return (query_id, rank, neighbor_id, cos)
     */
   def cosineTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-                 k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("__qn")))
-    val c = balanced(corpus).select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("cv"), norm(col(vecCol)).as("__cn"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", hoistedCosine)
-    topKPerQuery(scored, k)
+                 k: Int): DataFrame =
+    bruteTopK(queries, corpus, idCol, vecCol, k, excludeSelf = true, band = None)
+
+  /** The brute kNN shared by [[cosineTopK]], [[hardNegatives]] and
+    * [[crossTopK]]: the fused scoring node under [[topKPerQuery]].
+    */
+  private def bruteTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
+                        vecCol: String, k: Int, excludeSelf: Boolean,
+                        band: Option[(Double, Double)]): DataFrame = {
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val c = balanced(corpus).select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+    topKPerQuery(graft.plans.GraftCosineTopK.frame(q, c, k, excludeSelf, band), k)
   }
 
   /** cosine() with BOTH norms precomputed as row columns (`__qn`,
-    * `__cn`): the brute scans score |Q|·|C| pairs, and inlining
+    * `__cn`): the LSH and fused-cross scans score many pairs, and inlining
     * `cosine()` would evaluate three dot products per pair — hoisting
     * the norms to one per ROW cuts the kernel to a third. The value is
     * bit-identical: same `sqrt(dot(v,v))` subexpressions, same
@@ -80,11 +97,12 @@ object Similarity {
     * negatives. The canonical retrieval-training data op (DPR/ANCE
     * family: negatives mined near the decision boundary).
     *
-    * Plan: [[cosineTopK]]'s broadcast-queries scan with the band
-    * predicate pushed BEFORE the rank stage — the corpus is scanned
-    * once, non-band rows never enter the top-k window. The
-    * band compare runs on the same double `cosine` both engines
-    * compute identically (q28's contract), so the cut is
+    * Plan: [[cosineTopK]]'s fused scoring node with the band applied
+    * inside it, before a pair can enter a query's bounded top-k — the
+    * corpus is scanned once, non-band pairs never leave the task. The
+    * band compare (`minCos <= cos < maxCos` in Spark's double order,
+    * so null and NaN cosines drop) runs on the same double `cosine`
+    * both engines compute identically (q28's contract), so the cut is
     * oracle-exact.
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, idCol: String,
@@ -92,23 +110,18 @@ object Similarity {
                     maxCos: Double): DataFrame = {
     require(k > 0, s"k ($k) must be positive")
     require(minCos < maxCos, s"minCos ($minCos) must be < maxCos ($maxCos)")
-    val q = broadcast(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("__qn")))
-    val c = balanced(corpus).select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("cv"), norm(col(vecCol)).as("__cn"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", hoistedCosine)
-      .filter(col("cos") >= minCos && col("cos") < maxCos)
-    topKPerQuery(scored, k)
+    bruteTopK(queries, corpus, idCol, vecCol, k, excludeSelf = true,
+      band = Some((minCos, maxCos)))
   }
 
   /** Global top-k per query over a `(query_id, neighbor_id, cos)` frame
     * — the shared rank stage of every *TopK variant. The 10⁹-row
     * failure mode of a bare "partitionBy(query_id)" window (every
-    * scored row of a hot query gathered into ONE task) is prevented by
-    * the PARTIAL WindowGroupLimit Spark plans below the exchange: each
-    * map task forwards at most k rows per query.
+    * scored row of a hot query gathered into ONE task) is prevented
+    * below the exchange: the brute kNN's fused node emits at most k
+    * candidates per query per task, and over any other scored frame
+    * Spark plans a PARTIAL WindowGroupLimit that forwards at most k
+    * rows per query per map task. Ranks are always this window's.
     */
   private[operators] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     // ONE row_number window + rank filter. Spark's InferWindowGroupLimit
@@ -136,16 +149,28 @@ object Similarity {
 
   /** Rebalance a brute-scan corpus side whose scan has FEWER partitions
     * than the session's parallelism (a small parquet fixture reads as
-    * 1–2 splits, and a broadcast join's output inherits the streamed
-    * side's partitioning — leaving the 4M-pair scoring loop AND the
-    * top-k sort on one or two threads; measured 3–4× on the sf0.1
-    * full-corpus kNN). A corpus already wider than the session (the
-    * 100 TB case) is left untouched — repartitioning it would be a
-    * full shuffle of the big side.
+    * 1–2 splits, and the scoring node inherits the streamed side's
+    * partitioning — leaving the 4M-pair scoring loop on one or two
+    * threads; measured 3–4× on the sf0.1 full-corpus kNN). A scanned
+    * corpus already wider than the session (the 100 TB case) is left
+    * untouched — repartitioning it would be a full shuffle of the big
+    * side.
+    *
+    * Nothing executes here. A corpus plan without an exchange reports
+    * its split count from its RDD, which runs no job. A shuffled
+    * corpus's partition count is AQE's to decide at run time (it
+    * coalesces a small result to one partition), and nothing short of
+    * running it tells how small the result is — the optimizer's size
+    * estimate ignores filter and join selectivity — so a shuffled
+    * corpus is always rebalanced: one more shuffle of the corpus rows,
+    * small beside scoring each of them against every query.
     */
   private def balanced(c: DataFrame): DataFrame = {
     val want = c.sparkSession.sparkContext.defaultParallelism
-    if (c.rdd.getNumPartitions < want) c.repartition(want) else c
+    val plan = c.queryExecution.executedPlan
+    val shuffled = plan.isInstanceOf[AdaptiveSparkPlanExec] ||
+      plan.exists(p => p.isInstanceOf[Exchange] || p.subqueries.nonEmpty)
+    if (shuffled || plan.execute().getNumPartitions < want) c.repartition(want) else c
   }
 
   /** Deterministic pseudo-random hyperplanes: plane p, dim d weight =
@@ -1082,21 +1107,12 @@ object Similarity {
   }
 
   /** Brute-force top-k of each `queries` row against a DISJOINT corpus
-    * (no self-id exclusion — sides are different corpora). Queries
-    * broadcast, corpus scanned once; rank stage is the salted
-    * [[topKPerQuery]].
+    * (no self-id exclusion — sides are different corpora; null ids
+    * rank). [[cosineTopK]]'s fused scoring node, then [[topKPerQuery]].
     */
-  private def crossTopK(queries: DataFrame, corpus: DataFrame,
-                        idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("__qn")))
-    val c = balanced(corpus).select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("cv"), norm(col(vecCol)).as("__cn"))
-    val scored = q.crossJoin(c)
-      .withColumn("cos", hoistedCosine)
-    topKPerQuery(scored, k)
-  }
+  private[graft] def crossTopK(queries: DataFrame, corpus: DataFrame,
+                               idCol: String, vecCol: String, k: Int): DataFrame =
+    bruteTopK(queries, corpus, idCol, vecCol, k, excludeSelf = false, band = None)
 
   /** [[crossTopK]] as a stable value, so [[marginPairs]] can recognize
     * the default by reference (a method default arg eta-expands to a

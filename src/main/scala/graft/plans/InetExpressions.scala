@@ -191,8 +191,9 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions` entry point: inet functions + the
-  * containment-to-range optimizer rule.
+/** `spark.sql.extensions` entry point: inet functions, the
+  * containment-to-range optimizer rule, the bounded top-k rewrite and
+  * the fused cosine kNN strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -203,5 +204,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (queryStagePrepRules run AFTER EnsureRequirements, so the local
     // sort the rule removes is already in the plan)
     ext.injectQueryStagePrepRule(BoundedTopKRule.apply)
+    ext.injectPlannerStrategy(_ => CosineTopKStrategy)
   }
 }

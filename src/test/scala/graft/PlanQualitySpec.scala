@@ -490,11 +490,15 @@ class PlanQualitySpec extends SparkSpec {
       emb.filter(org.apache.spark.sql.functions.col("vec_id") < 5), emb,
       "vec_id", "embedding", k = 3, minCos = 0.1, maxCos = 0.4)
     val plan = r.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin"),
-      s"query side must broadcast into the corpus scan:\n$plan")
-    // the band predicate must sit in the scan-side filter, not after
-    // the aggregate: no corpus row outside the band enters a shuffle
-    assert(plan.contains("Filter"), s"band filter missing:\n$plan")
+    val lines = plan.split("\n")
+    val at = lines.indexWhere(_.contains("GraftCosineTopK"))
+    assert(at >= 0 && lines(at + 1).contains("BroadcastExchange"),
+      s"query side must broadcast into the fused kNN node:\n$plan")
+    // the band is applied inside the node, before a pair can enter a
+    // query's top-k: no corpus pair outside the band leaves the task
+    assert(lines(at).contains("band=[0.1, 0.4)"), s"band not in the node:\n$plan")
+    assert(!lines.exists(l => l.contains("Filter") && l.contains("cos#")),
+      s"band applied as a separate filter:\n$plan")
     assert(!plan.contains("rangepartitioning"),
       s"hardNegatives plans a global sort:\n$plan")
   }

@@ -1,8 +1,19 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.{Similarity, Skew}
+import graft.plans.CosineTopKExec
 
 class SimilarityAndSkewSpec extends SparkSpec {
   import spark.implicits._
@@ -652,5 +663,235 @@ class SimilarityAndSkewSpec extends SparkSpec {
     assert(rf.getLong(2) === 2L * term)
     assert(rf.getLong(3) === math.floor(1.0e6 *
       (2000000L * 3L).toDouble / (2L * term).toDouble).toLong)
+  }
+
+  // ---- fused brute kNN against the broadcast-join formula it replaced
+
+  /** The brute kNN as a broadcast nested-loop join: norms hoisted per
+    * row, `when(qn·cn > 0, dot / (qn·cn))`, the band as a filter, one
+    * `row_number` window over (cos desc, neighbor_id asc).
+    */
+  private def referenceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
+                            vecCol: String, k: Int, excludeSelf: Boolean,
+                            band: Option[(Double, Double)]): DataFrame = {
+    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+      Similarity.norm(col(vecCol)).as("__qn")))
+    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      Similarity.norm(col(vecCol)).as("__cn"))
+    val joined =
+      if (excludeSelf) q.join(c, col("query_id") =!= col("neighbor_id")) else q.crossJoin(c)
+    val denom = col("__qn") * col("__cn")
+    val scored = joined.withColumn("cos",
+      when(denom > 0, Similarity.dot(col("qv"), col("cv")) / denom))
+    val banded = band.fold(scored) { case (lo, hi) =>
+      scored.filter(col("cos") >= lo && col("cos") < hi)
+    }
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("neighbor_id").asc)
+    banded.select(col("query_id"), col("cos"), col("neighbor_id"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "neighbor_id", "cos")
+  }
+
+  /** Rows as comparable strings, cos by its bits. NaN compares as one
+    * value: NaNs of either sign tie in Spark's order, so their ranks
+    * among each other are the sort's choice on both sides.
+    */
+  private def exactRows(df: DataFrame): Seq[String] = df.collect().toSeq.map { r =>
+    val cos = if (r.isNullAt(3)) "null"
+      else java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(r.getDouble(3)))
+    s"${r.get(0)}|${r.getInt(1)}|${r.get(2)}|$cos"
+  }.sorted
+
+  private def assertSame(got: DataFrame, want: DataFrame, clue: String): Unit = {
+    assert(got.schema.map(f => f.name -> f.dataType) ===
+      want.schema.map(f => f.name -> f.dataType), clue)
+    assert(exactRows(got) === exactRows(want), clue)
+  }
+
+  /** Seeded vectors with every edge the formula has: zero, null and
+    * null-element vectors, NaN/±Inf elements, a length mismatch, and
+    * small integer components so that many cosines tie exactly.
+    */
+  private def knnFrame(seed: Long, n: Int, idType: DataType, elemType: DataType,
+                       nullIds: Boolean, dupIds: Boolean): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val dim = 4
+    def elem(x: Double): Any = if (elemType == FloatType) x.toFloat else x
+    val rows = (0 until n).map { i =>
+      val idNum = if (dupIds && i % 5 == 4) i - 1 else i
+      val id: Any =
+        if (nullIds && i % 7 == 3) null
+        else if (idType == StringType) f"id$idNum%03d"
+        else if (idType == IntegerType) idNum else idNum.toLong
+      val vec: Seq[Any] = rnd.nextInt(12) match {
+        case 0 => null
+        case 1 => Seq.fill(dim)(elem(0.0))
+        case 2 => Seq.tabulate(dim)(d => if (d == 1) null else elem(d + 1.0))
+        case 3 => Seq.tabulate(dim)(d => elem(if (d == 0) Double.NaN else 1.0))
+        case 4 => Seq.tabulate(dim)(d => elem(if (d == 2) Double.PositiveInfinity else 0.5))
+        case 5 => Seq.tabulate(dim)(d => elem(if (d == 3) Double.NegativeInfinity else 1.0))
+        case 6 => Seq.fill(dim - 1)(elem(1.0))
+        case _ => Seq.fill(dim)(elem((rnd.nextInt(5) - 2).toDouble))
+      }
+      Row(id, vec)
+    }
+    val schema = StructType(Seq(StructField("id", idType),
+      StructField("v", ArrayType(elemType, containsNull = true))))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  test("fused kNN equals the broadcast-join formula row for row, cos bits included") {
+    val ks = Seq(0, 1, 3, 40)
+    for {
+      (idType, qElem, cElem, seed) <- Seq(
+        (LongType, FloatType, FloatType, 11L), (IntegerType, FloatType, DoubleType, 12L),
+        (StringType, DoubleType, FloatType, 13L), (StringType, DoubleType, DoubleType, 14L))
+      (corpusParts, nq) <- Seq((1, 6), (8, 3))
+    } {
+      val corpus = knnFrame(seed, 30, idType, cElem, nullIds = true, dupIds = true)
+        .repartition(corpusParts)
+      val queries = knnFrame(seed + 100, nq, idType, qElem, nullIds = true, dupIds = false)
+      // self-kNN: the corpus's own rows as queries, cast to the query element type
+      val self = corpus.select(col("id"), col("v").cast(ArrayType(qElem)).as("v"))
+        .filter(col("id").isNull || col("id") < (if (idType == StringType) lit("id010") else lit(10)))
+      for (k <- ks; qs <- Seq(queries, self)) {
+        val clue = s"ids=$idType q=$qElem c=$cElem parts=$corpusParts k=$k"
+        assertSame(Similarity.cosineTopK(qs, corpus, "id", "v", k),
+          referenceTopK(qs, corpus, "id", "v", k, excludeSelf = true, band = None),
+          s"cosineTopK $clue")
+        assertSame(Similarity.crossTopK(qs, corpus, "id", "v", k),
+          referenceTopK(qs, corpus, "id", "v", k, excludeSelf = false, band = None),
+          s"crossTopK $clue")
+        if (k > 0) assertSame(Similarity.hardNegatives(qs, corpus, "id", "v", k, -0.25, 0.75),
+          referenceTopK(qs, corpus, "id", "v", k, excludeSelf = true,
+            band = Some((-0.25, 0.75))), s"hardNegatives $clue")
+      }
+    }
+  }
+
+  test("fused kNN: empty query side and empty corpus give no rows") {
+    val corpus = knnFrame(21L, 12, LongType, FloatType, nullIds = false, dupIds = false)
+    val none = corpus.filter(lit(false))
+    for ((qs, cs) <- Seq((none, corpus), (corpus, none))) {
+      assertSame(Similarity.cosineTopK(qs, cs, "id", "v", 3),
+        referenceTopK(qs, cs, "id", "v", 3, excludeSelf = true, band = None), "cosineTopK")
+      assert(Similarity.crossTopK(qs, cs, "id", "v", 3).count() === 0L)
+      assert(Similarity.hardNegatives(qs, cs, "id", "v", 3, 0.0, 1.0).count() === 0L)
+    }
+  }
+
+  /** Jobs started while `body` runs (a marker job proves the listener
+    * has seen all of them).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.test.knnJobs"
+    val label = java.util.UUID.randomUUID().toString
+    val seen = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty(tag)).orNull match {
+          case `label` => seen.incrementAndGet()
+          case m if m == label + "/end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, label)
+      body
+      sc.setLocalProperty(tag, label + "/end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS))
+      seen.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("fused kNN plan: query side broadcast into GraftCosineTopK, no nested-loop join") {
+    val knn = Similarity.cosineTopK(corpus.filter(col("vec_id") < 3), corpus,
+      "vec_id", "embedding", k = 3)
+    val lines = knn.queryExecution.executedPlan.toString.split("\n")
+    val at = lines.indexWhere(_.contains("GraftCosineTopK"))
+    assert(at >= 0, lines.mkString("\n"))
+    assert(lines(at + 1).contains("BroadcastExchange"),
+      s"the query side must broadcast into the node:\n${lines.mkString("\n")}")
+    assert(!lines.exists(_.contains("BroadcastNestedLoopJoin")), lines.mkString("\n"))
+    // the install step for sessions without GraftExtensions is idempotent
+    graft.plans.GraftCosineTopK.install(spark)
+    graft.plans.GraftCosineTopK.install(spark)
+    assert(spark.sessionState.planner.strategies
+      .count(_ == graft.plans.CosineTopKStrategy) === 1)
+  }
+
+  /** The fused node of `knn`'s executed plan, after running it. */
+  private def scoredNode(knn: DataFrame): CosineTopKExec = {
+    knn.collect()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val nodes = helper.collect(knn.queryExecution.executedPlan) { case e: CosineTopKExec => e }
+    assert(nodes.size === 1, knn.queryExecution.executedPlan.toString)
+    nodes.head
+  }
+
+  private def scoredPartitions(knn: DataFrame): Int =
+    scoredNode(knn).right.outputPartitioning.numPartitions
+
+  test("building a kNN frame launches no job, also over a shuffled corpus") {
+    assert(jobsOf(Similarity.cosineTopK(corpus, corpus, "vec_id", "embedding", 3)) === 0)
+    val want = spark.sparkContext.defaultParallelism
+    // AQE coalesces the distinct's shuffle of 12 rows to one partition
+    val distinct = corpus.distinct()
+    // the optimizer estimates four inner joins as the product of their
+    // sides, far above one advisory partition per core; the filtered
+    // result is 8 rows
+    val joined = (1 to 4).foldLeft(corpus) { (acc, i) =>
+      acc.join(corpus.select(col("vec_id"), lit(i).as(s"x$i")), "vec_id")
+    }.filter(col("vec_id") < 8).select("vec_id", "embedding").distinct()
+    assert(joined.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(want) *
+      spark.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    for ((name, c, same) <- Seq(("distinct", distinct, corpus),
+                                ("filtered join", joined, corpus.filter(col("vec_id") < 8)))) {
+      assert(jobsOf(Similarity.cosineTopK(corpus, c, "vec_id", "embedding", 3)) === 0, name)
+      assert(jobsOf(Similarity.hardNegatives(c, c, "vec_id", "embedding", 3, 0.0, 0.5)) === 0,
+        name)
+      // balanced however small the shuffled corpus turns out: one scoring task per core
+      val knn = Similarity.cosineTopK(corpus, c, "vec_id", "embedding", 3)
+      assert(scoredPartitions(knn) >= want, name)
+      assert(scoredPartitions(Similarity.hardNegatives(corpus, c, "vec_id", "embedding",
+        3, 0.0, 0.5)) >= want, name)
+      assert(exactRows(knn) ===
+        exactRows(Similarity.cosineTopK(corpus, same, "vec_id", "embedding", 3)), name)
+    }
+  }
+
+  test("a kNN frame joins with itself: both sides keep their own cos") {
+    val knn = Similarity.cosineTopK(corpus, corpus, "vec_id", "embedding", k = 3)
+    // two hops: each neighbor's own neighbors
+    val hops = knn.as("a").join(knn.as("b"), col("a.neighbor_id") === col("b.query_id"))
+      .select(col("a.query_id"), col("a.neighbor_id"), col("a.cos"),
+        col("b.neighbor_id"), col("b.cos"))
+      .as[(Long, Long, Double, Long, Double)].collect()
+    val cosOf = knn.select("query_id", "neighbor_id", "cos").as[(Long, Long, Double)]
+      .collect().map { case (q, n, c) => (q, n) -> c }.toMap
+    assert(hops.length === cosOf.size * 3)
+    hops.foreach { case (q, n, aCos, m, bCos) =>
+      assert(aCos === cosOf((q, n)) && bCos === cosOf((n, m)), s"$q -> $n -> $m")
+    }
+    assert(hops.exists { case (_, _, aCos, _, bCos) => aCos != bCos })
+  }
+
+  test("fused kNN metrics: pairsScored = |Q|·|C| − self matches") {
+    val qs = corpus.filter(col("vec_id") < 3)
+    val m = scoredNode(Similarity.cosineTopK(qs, corpus, "vec_id", "embedding", k = 2)).metrics
+    assert(m("pairsScored").value === 3L * 12L - 3L)
+    // every query keeps its 2 best overall; no task forwards a pair twice
+    assert(m("candidatesOut").value >= 3L * 2L &&
+      m("candidatesOut").value <= m("pairsScored").value)
   }
 }

@@ -30,8 +30,11 @@ object Queries {
                      run: (SparkSession, String) => DataFrame,
                      oracle: Option[String])
 
+  /** Table `name` of the fixture dir; its schema is inferred once per
+    * session (and listing), not on every gate build.
+    */
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.SchemaCatalog.read(s, s"$dir/$name.parquet")
 
   /** events with `ts_us` (epoch micros, exact) added — schema-adaptive
     * via [[graft.operators.TimeAgg.epochMicros]] (the generator has

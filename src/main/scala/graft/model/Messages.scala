@@ -216,15 +216,36 @@ object Messages {
 
   // ---- envelope parse + coercions ------------------------------------
 
-  /** S2: parse a raw TSV `line` column into typed fields (all-string
-    * schema first; coercions applied per target type below).
+  /** S2: parse a raw TSV `line` column into its schema's fields, all
+    * strings (the topic parsers below coerce them in the same select).
     */
-  def parseTsv(df: DataFrame, lineCol: String, schema: StructType): DataFrame = {
+  def parseTsv(df: DataFrame, lineCol: String, schema: StructType): DataFrame =
+    parseCoerced(df, lineCol, schema, Map.empty)
+
+  /** S2 + S3 in two projections: `from_csv` into one struct, then ONE
+    * select of the input columns, every schema field — through its
+    * `coerce` function where one is named — and the `extra` columns,
+    * which read the raw cells (`__p.<field>`). An input column named
+    * like a field is replaced in place, as `withColumn` would; the
+    * fields and extras follow. One projection analyzes once, where a
+    * `withColumn` per field re-analyzed an ever deeper plan each step.
+    */
+  private def parseCoerced(df: DataFrame, lineCol: String, schema: StructType,
+                           coerce: Map[String, Column => Column],
+                           extra: Seq[(String, Column)] = Nil): DataFrame = {
     val parsed = df.withColumn("__p",
       from_csv(col(lineCol), schema, Map("sep" -> "\t", "quote" -> "")))
-    schema.fields.foldLeft(parsed)((d, f) => d.withColumn(f.name, col(s"__p.${f.name}")))
-      .drop("__p")
+    def field(n: String): Column = coerce.getOrElse(n, identity[Column] _)(col(s"__p.$n")).as(n)
+    val fields = schema.fieldNames
+    parsed.select(
+      df.columns.map(c => if (fields.contains(c)) field(c) else col(s"`$c`")) ++
+        fields.filterNot(df.columns.contains).map(field) ++
+        extra.map { case (n, c) => c.as(n) }: _*)
   }
+
+  /** The epoch-micros `ts_us` of the coerced `timestamp`, appended last. */
+  private def withTsUs(df: DataFrame): DataFrame =
+    df.withColumn("ts_us", unix_micros(col("timestamp")))
 
   /** S3 coercions — the ParseNullAsEmpty / ParseLongEmptyAsZero /
     * ParseTimestamp processors as column transforms.
@@ -261,127 +282,119 @@ object Messages {
       .otherwise(split(s, " +"))
   }
 
+  private val intEmptyAsZero: Column => Column = c => longEmptyAsZero(c).cast(IntegerType)
+  private def enumCell(domain: Set[String]): Column => Column =
+    c => when(c.isin(domain.toSeq: _*), c).otherwise(lit(""))
+
   /** Typed unicast_prefix records from raw TSV lines: applies the
     * coercions and the reference's `prefix_len > 128` drop
     * (`UnicastPrefixQuery.java:50-51`), plus epoch-micros `ts_us` for
     * the numeric time path.
     */
   def unicastPrefixFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
-    parseTsv(raw, lineCol, unicastPrefixSchema)
-      .withColumn("isIPv4", boolCell(col("isIPv4")))
-      .withColumn("origin_as", longEmptyAsZero(col("origin_as")))
-      .withColumn("prefix_len", longEmptyAsZero(col("prefix_len")).cast(IntegerType))
-      .withColumn("timestamp", parseTs(col("timestamp")))
-      .withColumn("ts_us", unix_micros(col("timestamp")))
-      .withColumn("isWithdrawn", boolCell(col("isWithdrawn")))
-      .withColumn("path_id", longEmptyAsZero(col("path_id")))
-      .withColumn("labels", nullAsEmpty(col("labels")))
-      .withColumn("isPrePolicy", boolCell(col("isPrePolicy")))
-      .withColumn("isAdjRibIn", boolCell(col("isAdjRibIn")))
+    withTsUs(parseCoerced(raw, lineCol, unicastPrefixSchema, Map(
+      "isIPv4" -> boolCell _,
+      "origin_as" -> longEmptyAsZero _,
+      "prefix_len" -> intEmptyAsZero,
+      "timestamp" -> parseTs _,
+      "isWithdrawn" -> boolCell _,
+      "path_id" -> longEmptyAsZero _,
+      "labels" -> nullAsEmpty _,
+      "isPrePolicy" -> boolCell _,
+      "isAdjRibIn" -> boolCell _)))
       .filter(col("prefix_len") <= 128)
 
   def baseAttributeFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
-    parseTsv(raw, lineCol, baseAttributeSchema)
-      .withColumn("as_path", longArray(col("as_path")))
-      .withColumn("origin_as", longEmptyAsZero(col("origin_as")))
-      .withColumn("med", longEmptyAsZero(col("med")))
-      .withColumn("local_pref", longEmptyAsZero(col("local_pref")))
-      .withColumn("isAtomicAgg", boolCell(col("isAtomicAgg")))
-      .withColumn("community_list", strArray(col("community_list")))
-      .withColumn("ext_community_list", strArray(col("ext_community_list")))
-      .withColumn("large_community_list", strArray(col("large_community_list")))
-      .withColumn("cluster_list", strArray(col("cluster_list")))
-      .withColumn("as_path_count", longEmptyAsZero(col("as_path_count")).cast(IntegerType))
-      .withColumn("nexthop_isIPv4", boolCell(col("nexthop_isIPv4")))
-      .withColumn("timestamp", parseTs(col("timestamp")))
-      .withColumn("ts_us", unix_micros(col("timestamp")))
+    withTsUs(parseCoerced(raw, lineCol, baseAttributeSchema, Map(
+      "as_path" -> longArray _,
+      "origin_as" -> longEmptyAsZero _,
+      "med" -> longEmptyAsZero _,
+      "local_pref" -> longEmptyAsZero _,
+      "isAtomicAgg" -> boolCell _,
+      "community_list" -> strArray _,
+      "ext_community_list" -> strArray _,
+      "large_community_list" -> strArray _,
+      "cluster_list" -> strArray _,
+      "as_path_count" -> intEmptyAsZero,
+      "nexthop_isIPv4" -> boolCell _,
+      "timestamp" -> parseTs _)))
 
   def peerFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
-    parseTsv(raw, lineCol, peerSchema)
-      .withColumn("isIPv4", boolCell(col("isIPv4")))
-      .withColumn("peer_as", longEmptyAsZero(col("peer_as")))
-      // action first/up → state 'up' else 'down' (PeerQuery.java:59-64)
-      .withColumn("state", when(col("action").isin("first", "up"), lit("up")).otherwise(lit("down")))
-      .withColumn("isL3VPNpeer", boolCell(col("isL3VPNpeer")))
-      .withColumn("timestamp", parseTs(col("timestamp")))
-      .withColumn("ts_us", unix_micros(col("timestamp")))
-      .withColumn("isPrePolicy", boolCell(col("isPrePolicy")))
+    withTsUs(parseCoerced(raw, lineCol, peerSchema, Map(
+      "isIPv4" -> boolCell _,
+      "peer_as" -> longEmptyAsZero _,
+      "isL3VPNpeer" -> boolCell _,
+      "timestamp" -> parseTs _,
+      "isPrePolicy" -> boolCell _,
       // numeric session/error fields (nullable in the reference schema,
       // 1_base.sql:181-196): empty → NULL long, not 0 — a down message
       // carries no session and peerEventLog must emit NULLs for it
-      .withColumn("local_port", longEmptyAsNull(col("local_port")))
-      .withColumn("local_hold_time", longEmptyAsNull(col("local_hold_time")))
-      .withColumn("local_asn", longEmptyAsNull(col("local_asn")))
-      .withColumn("remote_port", longEmptyAsNull(col("remote_port")))
-      .withColumn("remote_hold_time", longEmptyAsNull(col("remote_hold_time")))
-      .withColumn("bgp_err_code", longEmptyAsNull(col("bgp_err_code")))
-      .withColumn("bgp_err_subcode", longEmptyAsNull(col("bgp_err_subcode")))
-      .withColumn("isLocRib", boolCell(col("isLocRib")))
-      .withColumn("isLocRibFiltered", boolCell(col("isLocRibFiltered")))
+      "local_port" -> longEmptyAsNull _,
+      "local_hold_time" -> longEmptyAsNull _,
+      "local_asn" -> longEmptyAsNull _,
+      "remote_port" -> longEmptyAsNull _,
+      "remote_hold_time" -> longEmptyAsNull _,
+      "bgp_err_code" -> longEmptyAsNull _,
+      "bgp_err_subcode" -> longEmptyAsNull _,
+      "isLocRib" -> boolCell _,
+      "isLocRibFiltered" -> boolCell _),
+      // action first/up → state 'up' else 'down' (PeerQuery.java:59-64)
+      Seq("state" -> when(col("__p.action").isin("first", "up"), lit("up")).otherwise(lit("down")))))
 
   def routerFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
-    parseTsv(raw, lineCol, routerSchema)
+    withTsUs(parseCoerced(raw, lineCol, routerSchema, Map("timestamp" -> parseTs _),
       // action term → 'down' else 'up' (RouterQuery.java:55)
-      .withColumn("state", when(col("action") === "term", lit("down")).otherwise(lit("up")))
-      .withColumn("timestamp", parseTs(col("timestamp")))
-      .withColumn("ts_us", unix_micros(col("timestamp")))
+      Seq("state" -> when(col("__p.action") === "term", lit("down")).otherwise(lit("up")))))
 
   def collectorFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
-    parseTsv(raw, lineCol, collectorSchema)
+    withTsUs(parseCoerced(raw, lineCol, collectorSchema,
+      Map("router_count" -> intEmptyAsZero, "timestamp" -> parseTs _),
       // action stopped → 'down' (CollectorQuery.java:33-52)
-      .withColumn("state", when(col("action") === "stopped", lit("down")).otherwise(lit("up")))
-      .withColumn("router_count", longEmptyAsZero(col("router_count")).cast(IntegerType))
-      .withColumn("timestamp", parseTs(col("timestamp")))
-      .withColumn("ts_us", unix_micros(col("timestamp")))
+      Seq("state" -> when(col("__p.action") === "stopped", lit("down")).otherwise(lit("up")))))
 
   def l3vpnFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
-    parseTsv(raw, lineCol, l3vpnSchema)
-      .withColumn("isIPv4", boolCell(col("isIPv4")))
-      .withColumn("origin_as", longEmptyAsZero(col("origin_as")))
-      .withColumn("prefix_len", longEmptyAsZero(col("prefix_len")).cast(IntegerType))
-      .withColumn("timestamp", parseTs(col("timestamp")))
-      .withColumn("ts_us", unix_micros(col("timestamp")))
-      .withColumn("isWithdrawn", boolCell(col("isWithdrawn")))
-      .withColumn("path_id", longEmptyAsZero(col("path_id")))
-      .withColumn("isPrePolicy", boolCell(col("isPrePolicy")))
-      .withColumn("isAdjRibIn", boolCell(col("isAdjRibIn")))
-      .withColumn("rd", nullAsEmpty(col("rd")))
-      .withColumn("ext_community_list", strArray(col("ext_community_list")))
+    withTsUs(parseCoerced(raw, lineCol, l3vpnSchema, Map(
+      "isIPv4" -> boolCell _,
+      "origin_as" -> longEmptyAsZero _,
+      "prefix_len" -> intEmptyAsZero,
+      "timestamp" -> parseTs _,
+      "isWithdrawn" -> boolCell _,
+      "path_id" -> longEmptyAsZero _,
+      "isPrePolicy" -> boolCell _,
+      "isAdjRibIn" -> boolCell _,
+      "rd" -> nullAsEmpty _,
+      "ext_community_list" -> strArray _)))
       .filter(col("prefix_len") <= 128)
 
-  private def lsCommon(df: DataFrame): DataFrame =
-    df.withColumn("seq", longEmptyAsZero(col("seq")))
-      .withColumn("isWithdrawn", boolCell(col("isWithdrawn")))
-      .withColumn("timestamp", parseTs(col("timestamp")))
-      .withColumn("ts_us", unix_micros(col("timestamp")))
-      // enum validation (1_base.sql:28-32): unknown → ''
-      .withColumn("protocol",
-        when(col("protocol").isin(LsProtocols.toSeq: _*), col("protocol"))
-          .otherwise(lit("")))
+  /** Coercions every link-state topic shares. */
+  private val lsCommon: Map[String, Column => Column] = Map(
+    "seq" -> longEmptyAsZero _,
+    "isWithdrawn" -> boolCell _,
+    "timestamp" -> parseTs _)
 
   def lsNodeFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
-    lsCommon(parseTsv(raw, lineCol, lsNodeSchema)
-      .withColumn("asn", longEmptyAsZero(col("asn"))))
+    withTsUs(parseCoerced(raw, lineCol, lsNodeSchema, lsCommon ++ Map(
+      "asn" -> longEmptyAsZero _,
+      // enum validation (1_base.sql:28-32): unknown → ''
+      "protocol" -> enumCell(LsProtocols))))
 
+  // links and prefixes carry no protocol cell: '' (the enum's empty member)
   def lsLinkFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
-    lsCommon(parseTsv(raw, lineCol, lsLinkSchema).withColumn("protocol", lit("")))
-      .withColumn("igp_metric", longEmptyAsZero(col("igp_metric")))
-      .withColumn("local_asn", longEmptyAsZero(col("local_asn")))
-      .withColumn("remote_asn", longEmptyAsZero(col("remote_asn")))
+    withTsUs(parseCoerced(raw, lineCol, lsLinkSchema, lsCommon ++ Map(
+      "igp_metric" -> longEmptyAsZero _,
+      "local_asn" -> longEmptyAsZero _,
+      "remote_asn" -> longEmptyAsZero _),
+      Seq("protocol" -> lit(""))))
 
   def lsPrefixFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
-    lsCommon(parseTsv(raw, lineCol, lsPrefixSchema).withColumn("protocol", lit("")))
-      .withColumn("prefix_len", longEmptyAsZero(col("prefix_len")).cast(IntegerType))
-      .withColumn("metric", longEmptyAsZero(col("metric")))
-      .withColumn("ospf_route_type",
-        when(col("ospf_route_type").isin(OspfRouteTypes.toSeq: _*),
-          col("ospf_route_type")).otherwise(lit("")))
+    withTsUs(parseCoerced(raw, lineCol, lsPrefixSchema, lsCommon ++ Map(
+      "prefix_len" -> intEmptyAsZero,
+      "metric" -> longEmptyAsZero _,
+      "ospf_route_type" -> enumCell(OspfRouteTypes)),
+      Seq("protocol" -> lit(""))))
 
-  def bmpStatFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame = {
-    val parsed = parseTsv(raw, lineCol, bmpStatSchema)
-    bmpStatSchema.fieldNames.filterNot(Set("peer_hash_id", "timestamp"))
-      .foldLeft(parsed)((d, c) => d.withColumn(c, longEmptyAsZero(col(c))))
-      .withColumn("timestamp", parseTs(col("timestamp")))
-      .withColumn("ts_us", unix_micros(col("timestamp")))
-  }
+  def bmpStatFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
+    withTsUs(parseCoerced(raw, lineCol, bmpStatSchema,
+      bmpStatSchema.fieldNames.filterNot(Set("peer_hash_id", "timestamp"))
+        .map(_ -> (longEmptyAsZero _)).toMap + ("timestamp" -> parseTs _)))
 }

@@ -14,9 +14,13 @@ import org.apache.spark.sql.DataFrame
   * job instead of recomputing; set
   * `spark.graft.materialize.reliable=true` (plus
   * `sparkContext.setCheckpointDir`) to switch every site to reliable
-  * checkpointing at once. Lazy in both modes: materialization happens
-  * inside the first action that consumes the frame, so nothing ever
-  * executes outside a timed region that wouldn't have.
+  * checkpointing at once. The checkpoint's rows are written inside the
+  * first action that consumes the frame, but building it is NOT free
+  * under AQE: `eager = false` still plans the frame, and adaptive
+  * planning runs every shuffle and broadcast stage below it at build
+  * time (e.g. `Graph.mutualEdges(Similarity.cosineTopK(…))` launches 6
+  * jobs while it is built). A `mat` frame therefore executes its
+  * upstream stages wherever it is constructed, timed region or not.
   */
 object Mat {
   implicit class MatOps(private val df: DataFrame) extends AnyVal {

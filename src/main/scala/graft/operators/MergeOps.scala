@@ -142,7 +142,8 @@ object MergeOps {
     import policy._
     val updates    = nonNullKeys(updates0, keys) // see nonNullKeys — a null-key row would survive as unmatchable junk state
     val stateCols  = current.columns.toSeq
-    val cur        = current.columns.foldLeft(current)((d, c) => d.withColumnRenamed(c, s"__old_$c"))
+    // one projection: a withColumnRenamed per column re-analyzes a deeper plan each step
+    val cur        = current.select(current.columns.map(c => col(s"`$c`").as(s"__old_$c")): _*)
     val joined0 = updates.join(
       cur,
       keys.map(k => updates(k) === cur(s"__old_$k")).reduce(_ && _),

@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.streaming.ConsistentState
 import graft.streaming.ConsistentState.BucketCol
@@ -100,8 +102,7 @@ object StateTables {
     * `numBuckets` is part of the table's identity: a merge with another
     * count would hash updates into buckets other than the ones holding
     * their current rows and silently duplicate every updated key, so it
-    * is refused against the count the committed map records (a 1-bucket
-    * table records none: its count is 1).
+    * is refused against the count the committed map records.
     *
     * With `logPath`, the CDC rows of the merge ([[MergeOps.upsertWithLog]])
     * are written before the stage — batchId-keyed partitions make a
@@ -119,8 +120,7 @@ object StateTables {
                           logPath: Option[String] = None,
                           batchId: Option[Long] = None,
                           peerUps: Option[DataFrame] = None): Seq[Int] = {
-    val recorded = txn.bucketMap(table).map(_.numBuckets)
-      .orElse(txn.version(table).map(_ => 1)).getOrElse(numBuckets)
+    val recorded = txn.bucketMap(table).map(_.numBuckets).getOrElse(numBuckets)
     require(recorded == numBuckets,
       s"$table was written with numBuckets=$recorded but this merge was called with " +
         s"$numBuckets — merging would duplicate every updated key")
@@ -174,17 +174,109 @@ object StateTables {
     * history. If the crash landed before the state commit, the replay
     * recomputes the identical rows, so keeping the original is equally
     * correct. (Callers always write the log before the state commit.)
+    *
+    * Before its rows, a write records the log's read schema at the root
+    * ([[logSchema]]): the first write records it, a write adding a column
+    * widens it (older partitions read the column as null), and a write
+    * changing a recorded column's type is refused.
     */
   private[graft] def writeCdcBatch(spark: SparkSession, log: DataFrame,
-                                   logPath: String, batchId: Option[Long]): Unit =
-    batchId match {
-      case Some(id) =>
-        val dir = new org.apache.hadoop.fs.Path(s"$logPath/batch=$id")
-        val fs  = dir.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
-          log.write.mode("overwrite").parquet(dir.toString)
-      case None => log.write.mode("append").parquet(logPath)
+                                   logPath: String, batchId: Option[Long]): Unit = {
+    val fs = new Path(logPath).getFileSystem(spark.sessionState.newHadoopConf())
+    val dir = batchId.map(id => new Path(s"$logPath/batch=$id"))
+    if (!dir.exists(d => fs.exists(new Path(d, "_SUCCESS")))) {
+      recordLogSchema(spark, fs, logPath, log.schema, batchId)
+      dir.fold(log.write.mode("append").parquet(logPath))(d =>
+        log.write.mode("overwrite").parquet(d.toString))
     }
+  }
+
+  /** A log's recorded schema, at its root beside the `batch=` dirs
+    * (Spark's file listing skips `_` files).
+    */
+  private val LogSchemaFile = "_SCHEMA"
+
+  /** The schema `spark.read.parquet` infers for what Spark wrote with
+    * `written`: every field, element and value nullable.
+    */
+  private[graft] def readSchema(written: StructType): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case o => o
+    }
+    nullable(written).asInstanceOf[StructType]
+  }
+
+  /** The read schema recorded at a log root; None before its first write. */
+  private[graft] def logSchema(spark: SparkSession, logPath: String): Option[StructType] = {
+    val p = new Path(logPath, LogSchemaFile)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      Some(DataType.fromJson(json).asInstanceOf[StructType])
+    }
+  }
+
+  /** The log at `logPath` — or only its partition `dirs` — read with its
+    * recorded schema. A log that records none (written other than by
+    * [[writeCdcBatch]], e.g. an enrichment table) reads with the schema
+    * [[graft.sources.SchemaCatalog]] inferred for the whole root.
+    */
+  private[graft] def readLog(spark: SparkSession, logPath: String,
+                             dirs: Seq[String] = Nil): DataFrame = {
+    val schema = logSchema(spark, logPath)
+      .getOrElse(graft.sources.SchemaCatalog.schemaOf(spark, logPath))
+    if (dirs.isEmpty) spark.read.schema(schema).parquet(logPath)
+    else spark.read.option("basePath", logPath).schema(schema).parquet(dirs: _*)
+  }
+
+  /** The hourly layout [[graft.streaming.Ingest.compactLogIncremental]]
+    * writes from the log at `logPath`, read with the schema that follows
+    * from the log's recorded one: `batch` becomes the `__src_batch` data
+    * column, and the `date_hour` label partitions it.
+    */
+  private[graft] def readCompactedLog(spark: SparkSession, logPath: String,
+                                      compactedPath: String): DataFrame = {
+    val schema = logSchema(spark, logPath).fold(
+      graft.sources.SchemaCatalog.schemaOf(spark, compactedPath)) { raw =>
+      StructType(raw.fields.map(f => if (f.name == "batch") f.copy(name = "__src_batch") else f) :+
+        StructField("date_hour", StringType))
+    }
+    spark.read.schema(schema).parquet(compactedPath)
+  }
+
+  /** The recorded schema after a write of `data` as partition `batchId`:
+    * the recorded fields (types checked), then new data fields, then the
+    * `batch` partition column typed as Spark's partition inference types
+    * it (int while every id fits, else long).
+    */
+  private def recordLogSchema(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                              logPath: String, data: StructType, batchId: Option[Long]): Unit = {
+    val before = logSchema(spark, logPath)
+    val old = before.getOrElse(new StructType())
+    val fields = readSchema(data).fields
+    fields.foreach { f =>
+      old.find(_.name == f.name).filter(_.name != "batch").foreach(o =>
+        require(o.dataType == f.dataType, s"$logPath records ${f.name} as " +
+          s"${o.dataType.simpleString}; a write as ${f.dataType.simpleString} is refused"))
+    }
+    val recordedBatch = old.find(_.name == "batch").map(_.dataType)
+    val batchType = batchId.map(id =>
+      if (id.isValidInt && !recordedBatch.contains(LongType)) IntegerType else LongType)
+      .orElse(recordedBatch)
+    val widened = StructType(old.filterNot(_.name == "batch") ++
+      fields.filterNot(f => old.exists(_.name == f.name)) ++
+      batchType.map(StructField("batch", _)))
+    if (!before.contains(widened))
+      replacePointerFile(fs, spark.sessionState.newHadoopConf(),
+        new Path(logPath, LogSchemaFile), widened.json.getBytes("UTF-8"))
+  }
 
   /** Materialize a pending schema evolution: rewrite EVERY bucket of an
     * n-bucket table to the union schema, backfilling `defaults` (typed
@@ -204,7 +296,7 @@ object StateTables {
   def migrateSnapshot(txn: ConsistentState.Txn, table: String,
                       defaults: Map[String, org.apache.spark.sql.Column] = Map.empty)
       : Seq[Int] = txn.bucketMap(table) match {
-    case Some(m) if m.versions.nonEmpty =>
+    case Some(m) if m.numBuckets > 1 && m.versions.nonEmpty =>
       val unioned = txn.current(table).get
       val filled = defaults.foldLeft(unioned) { case (d, (c, v)) =>
         d.withColumn(c, coalesce(col(c), v.cast(unioned.schema(c).dataType)))
@@ -227,8 +319,7 @@ object StateTables {
     */
   def compactBuckets(txn: ConsistentState.Txn, table: String,
                      maxFilesPerBucket: Int = 8): Seq[Int] = txn.bucketMap(table) match {
-    case None => Nil
-    case Some(m) =>
+    case Some(m) if m.numBuckets > 1 =>
       val fs = new org.apache.hadoop.fs.Path(txn.root)
         .getFileSystem(txn.spark.sessionState.newHadoopConf())
       val oversized = m.versions.keys.toSeq.sorted.filter(b =>
@@ -239,5 +330,6 @@ object StateTables {
           txn.current(table, Some(oversized)).get
             .repartition(bucketId(m.keys, m.numBuckets))) // one task per bucket → one output file each
       oversized
+    case _ => Nil
   }
 }

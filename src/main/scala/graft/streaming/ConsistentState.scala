@@ -19,16 +19,20 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * {{{
   *   <root>/<table>/v<N>/                       1 bucket: the whole table at version N
   *   <root>/<table>/v<N>/__bucket=<i>/          n buckets: bucket i as rewritten at N
-  *   <root>/<table>/v<N>/_BUCKETS               n buckets: bucket → version map of N
+  *   <root>/<table>/v<N>/_BUCKETS               every version: its map (buckets=1 or n,
+  *                                              read schema, bucket → version)
+  *   <root>/<table>_log/_SCHEMA                 a CDC/append log's read schema
+  *                                              (StateTables.writeCdcBatch)
   *   <root>/_CURRENT                            the ONE manifest: "<table>=<version>" lines
   * }}}
   *
   * A batch stages each table's next version to a NEW directory (never
   * in place): a 1-bucket table writes all its rows, an n-bucket table
-  * only the buckets the batch touched, plus an immutable map naming the
-  * version that holds each of its buckets (unchanged buckets keep
-  * pointing at older versions). Then `_CURRENT` is swapped once (tmp +
-  * atomic rename) — the only rename in the protocol. Readers resolve
+  * only the buckets the batch touched; either way it writes an immutable
+  * map naming the version that holds each of its buckets (unchanged
+  * buckets keep pointing at older versions) and the schema every reader
+  * reads with, so no read infers one. Then `_CURRENT` is swapped once
+  * (tmp + atomic rename) — the only rename in the protocol. Readers resolve
   * the manifest ONCE ([[readConsistent]]) and pin every table's plan to
   * the versions it names, listing exactly the bucket directories the
   * map names — a merge committing concurrently writes v(N+1) dirs and
@@ -85,23 +89,25 @@ object ConsistentState {
   private def mapPath(root: String, table: String, version: Int) =
     new Path(s"$root/$table/v$version", MapFile)
 
-  /** An n-bucket table version's map: the bucket function (`numBuckets`
-    * over `keys`), the union schema of every bucket it names (buckets
-    * not rewritten since a column was added null-fill it — `ALTER TABLE
-    * … ADD COLUMN` read semantics), and bucket → the version whose
-    * directory holds it. A bucket absent from the map is empty.
+  /** A table version's map: the bucket function (`numBuckets` over
+    * `keys`; no keys for one bucket), the read schema — for n buckets the
+    * union of every bucket it names (buckets not rewritten since a column
+    * was added null-fill it — `ALTER TABLE … ADD COLUMN` read semantics)
+    * — and bucket → the version whose directory holds it. A bucket absent
+    * from the map is empty. One bucket's directory is its version's own.
     */
   private[graft] final case class BucketMap(numBuckets: Int, keys: Seq[String],
                                             schema: StructType, versions: Map[Int, Int]) {
     def dir(root: String, table: String, bucket: Int): Path =
-      new Path(s"$root/$table/v${versions(bucket)}/$BucketCol=$bucket")
+      if (numBuckets == 1) new Path(s"$root/$table/v${versions(bucket)}")
+      else new Path(s"$root/$table/v${versions(bucket)}/$BucketCol=$bucket")
 
     def render: String =
       (Seq(s"buckets=$numBuckets", s"keys=${keys.mkString(",")}", s"schema=${schema.json}") ++
         versions.toSeq.sorted.map { case (b, v) => s"$b=$v" }).mkString("", "\n", "\n")
   }
 
-  /** The map of `table` at `version`; None for a 1-bucket table. */
+  /** The map of `table` at `version`; None if that version was never staged. */
   private[graft] def bucketMap(spark: SparkSession, root: String, table: String,
                                version: Int): Option[BucketMap] = {
     val p  = mapPath(root, table, version)
@@ -114,26 +120,29 @@ object ConsistentState {
         val i = ln.indexOf('='); ln.take(i) -> ln.drop(i + 1)
       }.toSeq
       val m = kv.toMap
-      Some(BucketMap(m("buckets").toInt, m("keys").split(',').toSeq,
+      Some(BucketMap(m("buckets").toInt, m("keys").split(',').toSeq.filter(_.nonEmpty),
         DataType.fromJson(m("schema")).asInstanceOf[StructType],
         kv.collect { case (b, v) if b.forall(_.isDigit) => b.toInt -> v.toInt }.toMap))
     }
   }
 
-  /** `table` at `version` — with `buckets`, only those buckets of an
-    * n-bucket table (a 1-bucket table is always read whole).
+  /** `table` at `version`, read with its map's schema — with `buckets`,
+    * only those buckets.
     */
   private[graft] def readVersion(spark: SparkSession, root: String, table: String,
-                                 version: Int, buckets: Option[Seq[Int]] = None): DataFrame =
-    bucketMap(spark, root, table, version) match {
-      case None => spark.read.parquet(s"$root/$table/v$version")
-      case Some(m) =>
-        val dirs = m.versions.keys.toSeq.sorted
-          .filter(b => buckets.forall(_.contains(b))).map(m.dir(root, table, _).toString)
-        if (dirs.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
-        else spark.read.schema(m.schema).parquet(dirs: _*)
-    }
+                                 version: Int, buckets: Option[Seq[Int]] = None): DataFrame = {
+    val m = bucketMap(spark, root, table, version)
+      .getOrElse(sys.error(s"$table v$version has no $MapFile map"))
+    val dirs = m.versions.keys.toSeq.sorted
+      .filter(b => buckets.forall(_.contains(b))).map(m.dir(root, table, _).toString)
+    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
+    else spark.read.schema(m.schema).parquet(dirs: _*)
+  }
+
+  private def writeMap(fs: org.apache.hadoop.fs.FileSystem, dir: Path, map: BucketMap): Unit = {
+    val out = fs.create(new Path(dir, MapFile), true)
+    try out.write(map.render.getBytes("UTF-8")) finally out.close()
+  }
 
   /** The committed manifest: table → version (empty before first commit). */
   def readManifest(spark: SparkSession, root: String): Map[String, Int] = {
@@ -173,7 +182,7 @@ object ConsistentState {
     /** The table's committed version as of txn start (None = never committed). */
     private[graft] def version(table: String): Option[Int] = base.get(table)
 
-    /** The table's committed bucket map as of txn start (None = 1 bucket or never committed). */
+    /** The table's committed map as of txn start (None = never committed). */
     private[graft] def bucketMap(table: String): Option[BucketMap] =
       base.get(table).flatMap(ConsistentState.bucketMap(spark, root, table, _))
 
@@ -197,8 +206,9 @@ object ConsistentState {
     /** Compute-and-stage the 1-bucket table's next version. The write
       * runs NOW (so later stages can read this table's fresh state
       * without recomputing the plan); visibility waits for [[commit]].
-      * Returns the WRITTEN frame — downstream plans in the same batch
-      * should build on it (truncated lineage, one compute).
+      * Returns the WRITTEN frame, read with the schema its map records
+      * (no inference job) — downstream plans in the same batch should
+      * build on it (truncated lineage, one compute).
       *
       * Thread-safe across tables. A table stages at most once per txn:
       * a second stage would race the first over the same `v` directory.
@@ -206,12 +216,15 @@ object ConsistentState {
       * a new one.
       */
     def stage(table: String, next: DataFrame): DataFrame = {
-      val dir = s"$root/$table/v${claim(table)}"
+      val v = claim(table)
+      val dir = new Path(s"$root/$table/v$v")
       // overwrite: a replayed batch (crash before commit/checkpoint)
       // re-stages the same version dir; the idempotent merge makes the
       // content identical
-      next.write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir)
+      next.write.mode("overwrite").parquet(dir.toString)
+      val map = BucketMap(1, Nil, graft.operators.StateTables.readSchema(next.schema), Map(0 -> v))
+      writeMap(fsOf(spark, root), dir, map)
+      spark.read.schema(map.schema).parquet(dir.toString)
     }
 
     /** Stage the n-bucket table's next version: `rows` (partitioned by
@@ -232,10 +245,9 @@ object ConsistentState {
       require(written.subsetOf(touched.toSet),
         s"$table v$v wrote buckets ${written.diff(touched.toSet)} outside the touched set")
       val before = bucketMap(table).map(_.versions).getOrElse(Map.empty[Int, Int])
-      val map = BucketMap(numBuckets, keys, rows.drop(BucketCol).schema,
-        before -- touched ++ written.map(_ -> v))
-      val out = fs.create(new Path(dir, MapFile), true)
-      try out.write(map.render.getBytes("UTF-8")) finally out.close()
+      writeMap(fs, dir, BucketMap(numBuckets, keys,
+        graft.operators.StateTables.readSchema(rows.drop(BucketCol).schema),
+        before -- touched ++ written.map(_ -> v)))
     }
 
     /** Atomically publish every staged table (one pointer swap), then
@@ -269,23 +281,7 @@ object ConsistentState {
         spark.sessionState.newHadoopConf(), new Path(root, "_CURRENT"),
         man.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" }
           .mkString("", "\n", "\n").getBytes)
-      published.foreach { case (t, v) =>
-        if (fs.exists(mapPath(root, t, v))) pruneBuckets(fs, t, v, keepVersions)
-        else {
-          // walk DOWN from the newest prunable version and stop at the
-          // first gap: previous commits already pruned below it, so the
-          // steady-state cost is one delete + one existence probe per
-          // table per commit, not O(all versions ever)
-          var old = v - keepVersions
-          var hit = true
-          while (old >= 0 && hit) {
-            val dir = new Path(s"$root/$t/v$old")
-            hit = fs.exists(dir)
-            if (hit) fs.delete(dir, true)
-            old -= 1
-          }
-        }
-      }
+      published.foreach { case (t, v) => pruneBuckets(fs, t, v, keepVersions) }
       man
     }
 
@@ -293,7 +289,10 @@ object ConsistentState {
       * map still exists: delete each bucket dir it names that no map in
       * the window names, then the map itself (a crash in between redoes
       * the same deletes next commit), then version dirs left with
-      * neither buckets nor a map.
+      * neither buckets nor a map. Commits before this one pruned below
+      * the first missing map, so a commit costs one version per table,
+      * not O(all versions ever). A 1-bucket version's one bucket dir is
+      * the version dir, map included.
       */
     private def pruneBuckets(fs: org.apache.hadoop.fs.FileSystem, t: String, v: Int,
                              keepVersions: Int): Unit = {

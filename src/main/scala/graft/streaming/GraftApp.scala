@@ -299,12 +299,12 @@ object GraftApp {
   def registerViews(spark: SparkSession, conf: Conf): Unit = {
     conf.corpusDir.foreach(registerCorpus(spark, _))
     val snap = ConsistentState.readConsistent(spark, conf.root, Inventory ++ RibTables)
+    // CDC/append logs read with their recorded schemas, enrichment
+    // tables with the session's cached one: no read infers a schema
     def log(name: String): Option[DataFrame] = {
-      val p = s"${conf.root}/$name"
-      val fs = new org.apache.hadoop.fs.Path(p)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(new org.apache.hadoop.fs.Path(p)))
-        Some(spark.read.parquet(p)) else None
+      val p = new org.apache.hadoop.fs.Path(s"${conf.root}/$name")
+      if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+        Some(StateTables.readLog(spark, p.toString)) else None
     }
 
     (snap.get("ip_rib"), snap.get("bgp_peers"), snap.get("base_attrs"), snap.get("routers")) match {
@@ -364,7 +364,7 @@ object GraftApp {
     def read(name: String): Option[DataFrame] = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
       if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-        Some(spark.read.parquet(p.toString)) else None
+        Some(graft.sources.SchemaCatalog.read(spark, p.toString)) else None
     }
     read("documents").foreach { docs =>
       docs.createOrReplaceTempView("documents")
@@ -574,8 +574,9 @@ object GraftApp {
           (col("__nl") === col("__ql")).as("rel"))
       graft.operators.Eval.ndcgAtK(ranked, k = 5)
         .createOrReplaceTempView("v_knn_ndcg")
-      // predicted links over the mutual-kNN graph (q241) — lazy; the
-      // kNN pipeline runs on first query
+      // predicted links over the mutual-kNN graph (q241). NOT lazy:
+      // mutualEdges' Mat.mat checkpoint runs the full self-kNN's stages
+      // (6 jobs) while this view is built, on every registration
       graft.operators.Graph.adamicAdar(graft.operators.Graph.mutualEdges(
         graft.operators.Similarity.cosineTopK(emb, emb, "vec_id",
           "embedding", k = 5)

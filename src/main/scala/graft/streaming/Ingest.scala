@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.MergeOps
+import graft.operators.{MergeOps, StateTables}
 import graft.operators.MergeOps.MergePolicy
 
 /** The per-table pieces of the reference's Kafka-consumer write path
@@ -201,7 +201,7 @@ object Ingest {
   def compactLog(spark: SparkSession, logPath: String, compactedPath: String,
                  tsUsCol: String = "ts_us",
                  retentionCutoffUs: Option[Long] = None): Unit = {
-    val log = spark.read.parquet(logPath)
+    val log = StateTables.readLog(spark, logPath)
     // retention folds into compaction for free: aged rows are filtered
     // before the rewrite (1_base.sql:236,369 policies); between
     // compactions the daily physical drop on the hourly layout is
@@ -297,8 +297,7 @@ object Ingest {
       .takeWhile(id => fs.exists(new HPath(logRoot, s"batch=$id/_SUCCESS")))
     if (freshIds.isEmpty) return Nil
 
-    val fresh = spark.read.option("basePath", logPath)
-      .parquet(freshIds.map(id => s"$logPath/batch=$id"): _*)
+    val fresh = StateTables.readLog(spark, logPath, freshIds.map(id => s"$logPath/batch=$id"))
       .withColumnRenamed("batch", "__src_batch") // provenance → exact replay dedup
       .withColumn("date_hour", hourLabel(col(tsUsCol))) // UTC + null-safe ("unknown")
     val touched = fresh.select(col("date_hour")).distinct()
@@ -308,7 +307,7 @@ object Ingest {
         .exists(_.getPath.getName.startsWith("date_hour="))
     val existing =
       if (hasCompacted)
-        spark.read.parquet(compactedPath)
+        StateTables.readCompactedLog(spark, logPath, compactedPath)
           .filter(col("date_hour").isin(touched: _*))       // partition-pruned
           .filter(!col("__src_batch").isin(freshIds: _*))   // replayed ids re-enter via fresh
       else fresh.limit(0)
@@ -426,13 +425,12 @@ object Ingest {
         .filter(id => lfs.exists(new HPath(logRoot, s"batch=$id/_SUCCESS")))
     val compacted =
       if (hasCompacted)
-        Some(spark.read.parquet(compactedPath)
+        Some(StateTables.readCompactedLog(spark, logPath, compactedPath)
           .filter(col("__src_batch") <= through)) // marker-authoritative (see above)
       else None
     val raw =
       if (rawIds.isEmpty) None
-      else Some(spark.read.option("basePath", logPath)
-        .parquet(rawIds.map(id => s"$logPath/batch=$id"): _*)
+      else Some(StateTables.readLog(spark, logPath, rawIds.map(id => s"$logPath/batch=$id"))
         .withColumnRenamed("batch", "__src_batch")
         .withColumn("date_hour", hourLabel(col(tsUsCol))))
     (compacted, raw) match {

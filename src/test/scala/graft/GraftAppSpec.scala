@@ -81,6 +81,15 @@ class GraftAppSpec extends SparkSpec {
     s"$hash\t$peer\t$attr\t1\t65002\t$prefix\t$len\t$ts\t${if (withdrawn) 1 else 0}\t0\t\t1\t1"
   private def statLine(peer: String, ts: String) =
     s"$peer\t$ts\t1\t2\t3\t4\t5\t6\t7\t8\t9"
+  private def l3vpnLine(hash: String, peer: String, attr: String, prefix: String, ts: String) =
+    prefixLine(hash, peer, attr, prefix, 24, ts, withdrawn = false) + "\t1:1\t65000:1"
+  private def lsNodeLine(hash: String, peer: String, ts: String) =
+    s"$hash\t$peer\ta1\t1\t65001\t0\t10.0.0.9\t0.0.0.0\tOSPFv2\t10.0.0.9\t\t\tnode-$hash\t0\tcap\t0\t$ts"
+  private def lsLinkLine(hash: String, peer: String, ts: String) =
+    s"$hash\t$peer\ta1\t1\tn1\tn2\t10.0.0.1\t10.0.0.2\t0\t1\t2\t0\t1000\t1000\t1000\t10\t0\t0\t10\t" +
+      s"\tlink-$hash\t0\t$ts\t\t\t\t\t65001\t65002\t\t"
+  private def lsPrefixLine(hash: String, peer: String, ts: String) =
+    s"$hash\t$peer\ta1\t1\tn1\t0\tIntra\t0\t0\t0\t0.0.0.0\t10\t10.9.0.0\t24\t0\t$ts"
 
   test("GraftApp wires the full topology: stream in, consistent views out") {
     val in   = Files.createTempDirectory("graftapp_in").toString
@@ -517,6 +526,60 @@ class GraftAppSpec extends SparkSpec {
     import spark.implicits._
     lines.toDF("topic", "line")
       .select(concat(lit(GraftApp.TopicPrefix), col("topic")).as("topic"), col("line"))
+  }
+
+  /** A batch of every topic, each row stamped `ts`; `n` varies the keys. */
+  private def allTopics(n: Int, ts: String) = tsvBatch(
+    "collector" -> collectorLine("c1", "started", ts),
+    "router" -> routerLine("r1", "router-one", "10.0.0.1", ts, "init", "c1"),
+    "peer" -> peerLine("p1", "r1", "10.1.1.1", "peer-one", "10.1.1.1", 65001, "up", ts),
+    "base_attribute" -> attrLine(s"a$n", "p1", 65002, ts),
+    "unicast_prefix" -> prefixLine(s"u$n", "p1", s"a$n", s"192.0.$n.0", 24, ts, withdrawn = false),
+    "l3vpn" -> l3vpnLine(s"v$n", "p1", s"a$n", s"10.$n.0.0", ts),
+    "bmp_stat" -> statLine("p1", ts),
+    "ls_node" -> lsNodeLine(s"n$n", "p1", ts),
+    "ls_link" -> lsLinkLine(s"l$n", "p1", ts),
+    "ls_prefix" -> lsPrefixLine(s"x$n", "p1", ts))
+
+  /** Two every-topic batches and a view registration: the second batch
+    * is the steady state (every table and log already written).
+    */
+  private def twoBatches(conf: GraftApp.Conf): (Int, Int) = {
+    GraftApp.processBatch(allTopics(1, "2024-01-01 00:00:01.000000"), 0L, conf)
+    GraftApp.registerViews(spark, conf)
+    JobCount(spark) {
+      GraftApp.processBatch(allTopics(2, "2024-01-01 00:00:02.000000"), 1L, conf)
+      GraftApp.registerViews(spark, conf)
+    }
+  }
+
+  test("a steady-state micro-batch plus registerViews launches no schema-inference job") {
+    val conf = GraftApp.Conf(Files.createTempDirectory("graftapp_jobs").toString)
+    val (jobs, inferred) = twoBatches(conf)
+    assert(inferred === 0, s"$inferred of $jobs jobs inferred a parquet schema")
+    // before table versions and logs recorded their schemas, the same
+    // batch and registration launched 80 jobs, 31 of them inference jobs
+    // (9 txn.current, 9 Txn.stage read-backs, 13 registerViews reads)
+    assert(jobs <= 80 - 31, s"$jobs jobs")
+    // u2 only: batch 1's peer-up purges p1's older u1 (T9)
+    assert(spark.sql("SELECT rib_hash_id FROM v_ip_routes").collect().map(_.getString(0))
+      .toSeq === Seq("u2"))
+  }
+
+  test("every table version and log records the schema inference returns") {
+    val root = Files.createTempDirectory("graftapp_schemas").toString
+    twoBatches(GraftApp.Conf(root))
+    val man = ConsistentState.readManifest(spark, root)
+    assert(man.size === 9)
+    for ((t, v) <- man; w <- Seq(v - 1, v)) {
+      val recorded = ConsistentState.bucketMap(spark, root, t, w).get
+      assert(recorded.numBuckets === 1)
+      assert(recorded.schema === spark.read.parquet(s"$root/$t/v$w").schema, s"$t v$w")
+    }
+    for (l <- Seq("ip_rib_log", "l3vpn_rib_log", "ls_nodes_log", "ls_links_log",
+                  "ls_prefixes_log", "peer_events", "stat_reports"))
+      assert(graft.operators.StateTables.logSchema(spark, s"$root/$l").get ===
+        spark.read.parquet(s"$root/$l").schema, l)
   }
 
   test("a failed table write fails the batch after every pipeline exits; the replay commits once") {

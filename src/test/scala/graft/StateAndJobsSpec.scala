@@ -97,7 +97,7 @@ class StateAndJobsSpec extends AnyFunSuite {
     val upd = Seq(("k1", 2L, "A1x", false)).toDF("k", "ts", "attr", "wd")
     val e = intercept[IllegalArgumentException](merge(root, upd, 8))
     assert(e.getMessage.contains("numBuckets=16"))
-    // a 1-bucket table records no map: its count is 1
+    // a 1-bucket table's map records its count, 1
     merge(root, init, 1, table = "one")
     assert(intercept[IllegalArgumentException](merge(root, upd, 8, table = "one"))
       .getMessage.contains("numBuckets=1"))

@@ -206,17 +206,27 @@ class StreamingSpec extends SparkSpec {
       Seq((peer, s"2024-01-01 00:00:$ts")).toDF("hash_id", "ts")
         .select(col("hash_id"), unix_micros(col("ts").cast("timestamp")).as("ts_us"))
     // one ip_rib merge of batch `id` + its CDC write + the commit, as
-    // GraftApp.processBatch runs it
+    // GraftApp.processBatch runs it, beside a 1-bucket table (its map and
+    // pruning) and, in batch 1, a log's first write (its recorded schema)
     def batch(root: String, id: Long, lines: Seq[String], peerUps: Option[DataFrame]): Unit = {
       val conf = GraftApp.Conf(root, ribBuckets = 8, registerViews = false)
       val txn = ConsistentState.begin(spark, root)
       GraftApp.mergeRib(txn, conf, id, "ip_rib", GraftApp.parse("unicast_prefix", lines.toDF("line")),
         Ingest.ipRibPolicy, peerUps)
+      txn.stage("peers", Seq(s"p$id").toDF("hash_id"))
+      if (id == 1L) graft.operators.StateTables.writeCdcBatch(spark,
+        Seq(s"s$id").toDF("peer_hash_id"), s"$root/stat_reports", Some(id))
       txn.commit(conf.keepVersions)
     }
-    def rows(root: String): Seq[String] = ribOf(root)
-      .select(concat_ws("|", col("peer_hash_id"), col("hash_id"), col("base_attr_hash_id"),
-        col("ts_us"), col("isWithdrawn"))).as[String].collect().sorted.toSeq
+    def rows(root: String): Seq[String] = {
+      val snap = ConsistentState.readConsistent(spark, root, Seq("ip_rib", "peers"))
+      snap("ip_rib").select(concat_ws("|", col("peer_hash_id"), col("hash_id"),
+        col("base_attr_hash_id"), col("ts_us"), col("isWithdrawn"))).as[String].collect().sorted.toSeq ++
+        snap("peers").as[String].collect().toSeq
+    }
+    def stats(root: String): Seq[String] =
+      graft.operators.StateTables.readLog(spark, s"$root/stat_reports")
+        .select(concat_ws("|", col("peer_hash_id"), col("batch"))).as[String].collect().toSeq
     def cdc(root: String): Seq[String] = spark.read.parquet(s"$root/ip_rib_log")
       .filter(col("batch") === 1)
       .select(concat_ws("|", col("hash_id"), col("base_attr_hash_id"), col("isWithdrawn")))
@@ -264,6 +274,7 @@ class StreamingSpec extends SparkSpec {
         batch(root, 1L, lines, up) // the replay under the same batch id
         assert(rows(root) === post, s"crash at mutation $n: replay diverged")
         assert(cdc(root) === postCdc, s"crash at mutation $n: CDC not exactly once")
+        assert(stats(root) === Seq("s1|1"), s"crash at mutation $n: log not exactly once")
       }
       n += 1
     }

@@ -25,6 +25,11 @@ a verdict:
   unresolved  the parent's quartile distance exceeds the bound, and not
               every change run beats every parent run;
   within      none of the above.
+
+Under the table it prints each side's median `loadavg_pre` and `steal_s`
+from the runs' result files (`.bench_build/results/<workload>-seed<n>-
+trace0.json` in that side's checkout) and marks the pairs where either
+run's CPU steal exceeded 5 s: contention the verdict cannot see.
 """
 
 import argparse
@@ -46,6 +51,19 @@ def export(rev, dest):
     archive = subprocess.run(["git", "archive", rev, "src", "perfbench", "BENCHMARK.json"],
                              cwd=ROOT, stdout=subprocess.PIPE, check=True).stdout
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
+
+
+STEAL_MARK_S = 5.0
+
+
+def telemetry(checkout, workload, seed):
+    """(loadavg_pre, steal_s) from a run's result file; None where absent."""
+    path = os.path.join(checkout, ".bench_build", "results", f"{workload}-seed{seed}-trace0.json")
+    try:
+        t = json.load(open(path)).get("telemetry", {})
+    except (OSError, ValueError):
+        return None, None
+    return t.get("loadavg_pre"), t.get("steal_s")
 
 
 def run_once(checkout, workload, seed, seconds):
@@ -122,6 +140,7 @@ def main():
                 run_once(d, a.workload, a.seed_base - 1 - k, seconds)
 
         runs = {"parent": [], "change": []}
+        tele = {"parent": [], "change": []}
         incorrect = {"parent": 0, "change": 0}
         for i in range(a.pairs):
             seed = a.seed_base + i
@@ -129,6 +148,7 @@ def main():
             for side in order:
                 m, ok = run_once(sides[side], a.workload, seed, seconds)
                 runs[side].append(m)
+                tele[side].append(telemetry(sides[side], a.workload, seed))
                 incorrect[side] += 0 if ok else 1
                 shown = " ".join(f"{k}={v:.3f}" for k, v in sorted((m or {}).items()))
                 print(f"pair {i + 1}/{a.pairs} seed {seed} {side}: {shown or 'FAILED'}"
@@ -156,6 +176,17 @@ def main():
         print(f"{name:<10} {pq[0]:>8.3f}/{pq[1]:>8.3f}/{pq[2]:>8.3f} "
               f"{cq[0]:>8.3f}/{cq[1]:>8.3f}/{cq[2]:>8.3f} {delta:>+7.1%} "
               f"{wins:>2}-{losses}-{ties}  {v}")
+
+    def median(xs):
+        xs = [x for x in xs if x is not None]
+        return f"{quartiles(xs)[1]:.2f}" if xs else "n/a"
+    for side in ("parent", "change"):
+        print(f"{side:<7} median loadavg_pre {median([t[0] for t in tele[side]])}, "
+              f"median steal_s {median([t[1] for t in tele[side]])}")
+    stolen = [i + 1 for i, (p, c) in enumerate(zip(tele["parent"], tele["change"]))
+              if any(s is not None and s > STEAL_MARK_S for s in (p[1], c[1]))]
+    print(f"pairs with steal_s > {STEAL_MARK_S:g} s on either run: "
+          f"{', '.join(map(str, stolen)) if stolen else 'none'}")
 
 
 if __name__ == "__main__":

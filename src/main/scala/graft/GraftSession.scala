@@ -9,6 +9,12 @@ import org.apache.spark.sql.SparkSession
   * apart, by `GraftApp.session()`.
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries` of the local session and of
+    * `GraftApp.session()`. Static conf, set before the session exists.
+    */
+  val CodegenCacheMaxEntries = "5000"
+
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
@@ -23,9 +29,8 @@ object GraftSession {
       // 50 queries × several codegen'd stages each blows through the
       // default 100-entry generated-class cache — evictions force
       // recompiles that inflate individual queries by seconds (observed
-      // 8.5s in-bench vs 1.1s isolated). Static conf, set before the
-      // session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // 8.5s in-bench vs 1.1s isolated)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)
       // physical top-k rewrite (BoundedTopKRule) + the inet/array/text
       // function set; semantics-preserving, so the correctness dump
       // grades the plans the bench times

@@ -248,20 +248,23 @@ object Messages {
     df.withColumn("ts_us", unix_micros(col("timestamp")))
 
   /** S3 coercions — the ParseNullAsEmpty / ParseLongEmptyAsZero /
-    * ParseTimestamp processors as column transforms.
+    * ParseTimestamp processors as column transforms. A cell that does not
+    * parse yields the fallback (0, null, or the seconds-precision
+    * timestamp) under ANSI mode too: the casts and timestamp parses are
+    * the `try_` forms, so one bad cell never fails a micro-batch.
     */
   def nullAsEmpty(c: Column): Column = coalesce(c, lit(""))
   def longEmptyAsZero(c: Column): Column =
-    coalesce(nullif(trim(c), lit("")).cast(LongType), lit(0L))
+    coalesce(nullif(trim(c), lit("")).try_cast(LongType), lit(0L))
   /** Numeric cell that is legitimately ABSENT (peer session fields on a
     * down message): empty → NULL, matching the reference's nullable
     * columns — where [[longEmptyAsZero]] is for counters that default 0.
     */
-  def longEmptyAsNull(c: Column): Column = nullif(trim(c), lit("")).cast(LongType)
+  def longEmptyAsNull(c: Column): Column = nullif(trim(c), lit("")).try_cast(LongType)
   def parseTs(c: Column): Column =
     coalesce(
-      to_timestamp(c, TsFormat),
-      to_timestamp(c, "yyyy-MM-dd HH:mm:ss"))
+      try_to_timestamp(c, lit(TsFormat)),
+      try_to_timestamp(c, lit("yyyy-MM-dd HH:mm:ss")))
   def boolCell(c: Column): Column =
     trim(lower(c)).isin("1", "true", "t")
 
@@ -272,7 +275,7 @@ object Messages {
   def longArray(c: Column): Column = {
     val s = trim(coalesce(c, lit("")))
     when(length(s) === 0, array().cast(ArrayType(LongType)))
-      .otherwise(transform(split(s, " +"), x => x.cast(LongType)))
+      .otherwise(transform(split(s, " +"), x => x.try_cast(LongType)))
   }
 
   /** Space-delimited string array (community lists, `PsqlFunctions.java:154-205`). */

@@ -22,9 +22,50 @@ import graft.streaming.ConsistentState.BucketCol
   * [[ConsistentState]]'s; every write here becomes visible only through
   * the txn's one manifest swap, so readers never see half a merge.
   *
+  * A small 1-bucket merge runs as one task ([[mergesLocally]]): when the
+  * committed version and the micro-batch are both at or under
+  * [[LocalMergeMaxBytes]], every input of the merge is one partition, so
+  * the dedup window, the full-outer merge join and the T9 purge plan
+  * with no exchange, and the CDC write and the one-file state write are
+  * one task each. The plans are the shuffled path's with the exchanges
+  * removed; the rows are the same.
+  *
   * Single writer per root, like every [[ConsistentState]] txn.
   */
 object StateTables {
+
+  /** Byte cap, for both the committed version (parquet bytes as listed)
+    * and the micro-batch (the filled cache's bytes), at or under which a
+    * 1-bucket table merges in one task. Measured on 4 cores: a 1-bucket
+    * `ip_rib` merge of a 2k-update batch (half of them new keys) plus a
+    * T9 purge, median of 5 interleaved runs after 2 warm-ups, ms:
+    * {{{
+    *   state rows (parquet)   1 merge alone          4 merges at once
+    *                          one task   shuffled    one task   shuffled
+    *   50k   (0.7 MB)           1470       1282        1774       2888
+    *   500k  (6.8 MB)           7230       3634        8256       8453
+    *   2M   (27.1 MB)          25905      10886       30272      28229
+    * }}}
+    * Inside a batch the merge runs beside nine other table pipelines on
+    * the same cores, which the second pair of columns stands for: there
+    * the one-task merge is not slower up to 6.8 MB and is slower at
+    * 27.1 MB, so the cap is 8 MiB, the nearest power of two above the
+    * last size where it is not slower. On otherwise idle cores (the
+    * first pair) the shuffled merge runs on four cores and wins at every
+    * size; a table near the cap whose merge runs alone pays that.
+    */
+  val LocalMergeMaxBytes: Long = 8L << 20
+
+  /** Whether `table`'s merge in `txn` runs over single-partition inputs:
+    * it has one bucket, and both `batchBytes` and its committed version
+    * (plan statistics of the read, which carry the listing's file
+    * bytes — no job) are at or under `maxBytes`. A table never
+    * committed counts 0 bytes.
+    */
+  private[graft] def mergesLocally(txn: ConsistentState.Txn, table: String, numBuckets: Int,
+                                   batchBytes: BigInt, maxBytes: Long): Boolean =
+    numBuckets == 1 && batchBytes <= maxBytes &&
+      txn.current(table).forall(_.queryExecution.analyzed.stats.sizeInBytes <= maxBytes)
 
   /** The bucket partition function: pmod(hash(keys), numBuckets) —
     * identical on the state and update sides by construction.
@@ -112,6 +153,11 @@ object StateTables {
     * An n-bucket merge that touches no bucket stages nothing, unless the
     * table was never committed (then an empty version publishes it).
     *
+    * With `local` (1 bucket only; see [[mergesLocally]]), the updates,
+    * `peerUps` and the state read are each coalesced to one partition,
+    * so the merge, its CDC write and its state write run as one task
+    * each.
+    *
     * @return the bucket ids rewritten (size = write amplification in
     *         units of buckets)
     */
@@ -119,13 +165,16 @@ object StateTables {
                           policy: MergeOps.MergePolicy, numBuckets: Int,
                           logPath: Option[String] = None,
                           batchId: Option[Long] = None,
-                          peerUps: Option[DataFrame] = None): Seq[Int] = {
+                          peerUps: Option[DataFrame] = None,
+                          local: Boolean = false): Seq[Int] = {
     val recorded = txn.bucketMap(table).map(_.numBuckets).getOrElse(numBuckets)
     require(recorded == numBuckets,
       s"$table was written with numBuckets=$recorded but this merge was called with " +
         s"$numBuckets — merging would duplicate every updated key")
     val bucketed = numBuckets > 1
-    val latest0 = MergeOps.dedupToLatest(updates, policy.keys, policy.orderBy)
+    require(!(local && bucketed), s"$table: only a 1-bucket merge runs in one task")
+    def one(df: DataFrame): DataFrame = if (local) df.coalesce(1) else df
+    val latest0 = MergeOps.dedupToLatest(one(updates), policy.keys, policy.orderBy)
     // an n-bucket merge reads `latest` twice: touched-bucket collect + merge
     val latest =
       if (bucketed) latest0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -142,9 +191,9 @@ object StateTables {
         }
       if (touched.isEmpty && txn.version(table).isDefined) return Nil // empty micro-batch: no-op
       val current = MergeOps.evolveState(
-        txn.current(table, Some(touched)).getOrElse(latest.limit(0)), latest, policy)
-      val purged = peerUps.fold(current)(
-        MergeOps.purgeStale(current, "peer_hash_id", "ts_us", _, "hash_id", "ts_us"))
+        txn.current(table, Some(touched)).map(one).getOrElse(latest.limit(0)), latest, policy)
+      val purged = peerUps.fold(current)(ups =>
+        MergeOps.purgeStale(current, "peer_hash_id", "ts_us", one(ups), "hash_id", "ts_us"))
       // cached variant: state write + CDC write both execute below — an
       // uncached plan would run the whole merge join once per action
       val (next, log, release) = MergeOps.upsertWithLogCached(purged, latest, policy)

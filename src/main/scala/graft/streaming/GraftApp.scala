@@ -41,7 +41,10 @@ import graft.views.BmpViews
   * batch — the reference-scale setting), or `n` for the 100 TB regime,
   * where a batch rewrites only the buckets its updates and T9 purges
   * touch (write ∝ update spread). Either way the batch commits through
-  * the one manifest.
+  * the one manifest. A 1-bucket table whose committed version and batch
+  * are both at or under [[StateTables.LocalMergeMaxBytes]] (8 MiB) merges
+  * in one task with no shuffle; larger ones, and n-bucket tables, merge
+  * over `spark.sql.shuffle.partitions` (see [[processBatch]]).
   *
   * The reference's staged topic subscribe (`ConsumerRunnable.java:
   * 1054-1084` — inventory topics first, so prefixes never arrive before
@@ -131,8 +134,24 @@ object GraftApp {
   /** One micro-batch through the whole topology. Public seam: the e2e
     * spec drives THIS (via the started stream), and a batch backfill can
     * call it directly with batchId-disjoint ids.
+    *
+    * A 1-bucket table whose committed version and batch are both at or
+    * under [[StateTables.LocalMergeMaxBytes]] merges in one task: its
+    * topic lines and its committed-state read are coalesced to one
+    * partition, so its plans carry no exchange (see
+    * [[StateTables.mergesLocally]]). The append logs take one partition
+    * whenever the batch is under the cap. Other tables keep the shuffled
+    * merge.
     */
-  def processBatch(batch0: DataFrame, batchId: Long, conf: Conf): Unit = {
+  def processBatch(batch0: DataFrame, batchId: Long, conf: Conf): Unit =
+    processBatch(batch0, batchId, conf, StateTables.LocalMergeMaxBytes)
+
+  /** [[processBatch]] with the one-task cap given: specs pass -1 to force
+    * every table's shuffled merge, or `Long.MaxValue` to merge every
+    * 1-bucket table in one task.
+    */
+  private[graft] def processBatch(batch0: DataFrame, batchId: Long, conf: Conf,
+                                  localMaxBytes: Long): Unit = {
     val spark = batch0.sparkSession
     // the batch is demuxed ten ways below — one source compute, not ten
     val batch = batch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -140,78 +159,93 @@ object GraftApp {
       // fill the cache in one job before the pipelines start: concurrent
       // first readers would each run their own caching job
       batch.queryExecution.toRdd.count()
-      def lines(t: String): DataFrame =
-        batch.filter(col("topic") === TopicPrefix + t).select(col("line"))
+      // the filled cache's bytes, from plan statistics (no job)
+      val batchBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+      val smallBatch = batchBytes <= localMaxBytes
+      def lines(t: String, local: Boolean = false): DataFrame = {
+        val ls = batch.filter(col("topic") === TopicPrefix + t).select(col("line"))
+        if (local) ls.coalesce(1) else ls
+      }
       val root = conf.root
       val txn  = ConsistentState.begin(spark, root)
 
-      def cur(table: String, like: DataFrame): DataFrame =
-        txn.current(table).getOrElse(like.limit(0))
+      def local(table: String, numBuckets: Int = 1): Boolean =
+        StateTables.mergesLocally(txn, table, numBuckets, batchBytes, localMaxBytes)
+      def cur(table: String, like: DataFrame, local: Boolean): DataFrame = {
+        val c = txn.current(table).getOrElse(like.limit(0))
+        if (local) c.coalesce(1) else c
+      }
 
       // the parsed frames several pipelines read; each pipeline
-      // re-parses them from the persisted batch
-      val collectors = parse("collector", lines("collector"))
-      val peers = parse("peer", lines("peer"))
+      // re-parses them from the persisted batch, with its own partitioning
+      def collectors(local: Boolean) = parse("collector", lines("collector", local))
+      def peers(local: Boolean) = parse("peer", lines("peer", local))
       // T9: peers that came up in this batch purge their stale rib rows
-      val peerUps = peers.filter(col("state") === "up" && col("ts_us").isNotNull)
+      val peerUps = peers(local = false)
+        .filter(col("state") === "up" && col("ts_us").isNotNull)
         .select(col("hash_id"), col("ts_us"))
 
-      def mergeRib(table: String, parsed: DataFrame, policy: MergeOps.MergePolicy,
+      // a one-task rib merge coalesces its own inputs (mergeChangedBuckets)
+      def mergeRib(table: String, topic: String, policy: MergeOps.MergePolicy,
                    purge: Boolean): Unit =
-        GraftApp.mergeRib(txn, conf, batchId, table, parsed, policy,
-          if (purge) Some(peerUps) else None)
+        GraftApp.mergeRib(txn, conf, batchId, table, parse(topic, lines(topic)), policy,
+          if (purge) Some(peerUps) else None, local(table, conf.ribBuckets))
 
       // -- the independent pipelines, run concurrently -----------------
       // Each writes its own tables and logs; the reference's per-record
       // priority order survives as the order inside a pipeline.
-      runPipelines(batchId, Seq(
+      runPipelines(spark, batchId, Seq(
         // M5 collectors: latest-wins overwrite
-        "collectors" -> (() => txn.stage("collectors",
-          Ingest.overwriteMerge(cur("collectors", collectors), collectors,
-            Seq("hash_id"), Seq("ts_us")))),
+        "collectors" -> { () =>
+          val l = local("collectors")
+          val updates = collectors(l)
+          txn.stage("collectors", Ingest.overwriteMerge(cur("collectors", updates, l), updates,
+            Seq("hash_id"), Seq("ts_us")))
+        },
         "routers" -> { () =>
           // M4 routers: overwrite merge, then T8 — a collector transition
           // in THIS batch downs routers whose state predates it
-          val routers = parse("router", lines("router"))
+          val l = local("routers")
+          val routers = parse("router", lines("router", l))
           val routersNext = txn.stage("routers",
             Ingest.collectorCascade(
-              Ingest.overwriteMerge(cur("routers", routers), routers,
+              Ingest.overwriteMerge(cur("routers", routers, l), routers,
                 Seq("hash_id"), Seq("ts_us")),
-              collectors))
+              collectors(l)))
           // M3 peers: T6 default naming against the POST-merge routers
           // (the BEFORE INSERT trigger reads the routers table), T7
           // router-up cascade downs EXISTING peer state, then latest-wins
           // overwrite.
+          val lp = local("bgp_peers")
+          val updates = peers(lp)
           txn.stage("bgp_peers",
             Ingest.overwriteMerge(
-              Ingest.routerUpCascade(cur("bgp_peers", peers), routers),
-              Ingest.inheritPeerDefaults(peers, routersNext),
+              Ingest.routerUpCascade(cur("bgp_peers", updates, lp),
+                parse("router", lines("router", lp))),
+              Ingest.inheritPeerDefaults(updates, routersNext),
               Seq("hash_id"), Seq("ts_us")))
         },
         // T4: every peer message appends an event row
         "peer_events" -> (() => StateTables.writeCdcBatch(spark,
-          Ingest.peerEventLog(peers), s"$root/peer_events", Some(batchId))),
+          Ingest.peerEventLog(peers(smallBatch)), s"$root/peer_events", Some(batchId))),
         "base_attrs" -> { () =>
           // M2 base_attrs: content-addressed DO NOTHING (hash_id PK,
           // 1_base.sql:286)
-          val attrs = parse("base_attribute", lines("base_attribute"))
+          val l = local("base_attrs")
+          val attrs = parse("base_attribute", lines("base_attribute", l))
           txn.stage("base_attrs",
-            MergeOps.insertIgnore(cur("base_attrs", attrs), attrs,
+            MergeOps.insertIgnore(cur("base_attrs", attrs, l), attrs,
               Seq("hash_id"), Seq("ts_us", "peer_hash_id")))
         },
-        "ip_rib" -> (() => mergeRib("ip_rib",
-          parse("unicast_prefix", lines("unicast_prefix")), Ingest.ipRibPolicy, purge = true)),
-        "l3vpn_rib" -> (() => mergeRib("l3vpn_rib", parse("l3vpn", lines("l3vpn")),
-          Ingest.l3vpnRibPolicy, purge = true)),
+        "ip_rib" -> (() => mergeRib("ip_rib", "unicast_prefix", Ingest.ipRibPolicy, purge = true)),
+        "l3vpn_rib" -> (() => mergeRib("l3vpn_rib", "l3vpn", Ingest.l3vpnRibPolicy, purge = true)),
         // M10 stat_reports: append-only, batch-keyed (idempotent replay)
         "stat_reports" -> (() => StateTables.writeCdcBatch(spark,
-          parse("bmp_stat", lines("bmp_stat")), s"$root/stat_reports", Some(batchId))),
-        "ls_nodes" -> (() => mergeRib("ls_nodes", parse("ls_node", lines("ls_node")),
-          Ingest.lsNodePolicy, purge = false)),
-        "ls_links" -> (() => mergeRib("ls_links", parse("ls_link", lines("ls_link")),
-          Ingest.lsLinkPolicy, purge = false)),
-        "ls_prefixes" -> (() => mergeRib("ls_prefixes", parse("ls_prefix", lines("ls_prefix")),
-          Ingest.lsPrefixPolicy, purge = false))))
+          parse("bmp_stat", lines("bmp_stat", smallBatch)), s"$root/stat_reports", Some(batchId))),
+        "ls_nodes" -> (() => mergeRib("ls_nodes", "ls_node", Ingest.lsNodePolicy, purge = false)),
+        "ls_links" -> (() => mergeRib("ls_links", "ls_link", Ingest.lsLinkPolicy, purge = false)),
+        "ls_prefixes" -> (() => mergeRib("ls_prefixes", "ls_prefix", Ingest.lsPrefixPolicy,
+          purge = false))))
 
       // -- the ONE commit point ----------------------------------------
       txn.commit(conf.keepVersions)
@@ -233,6 +267,14 @@ object GraftApp {
   /** Name prefix of the threads [[processBatch]] runs its pipelines on. */
   private[graft] val BatchThreadPrefix = "graft-batch-"
 
+  /** The Spark local property naming the pipeline (its first table) that
+    * launched a job: `collectors`, `routers` (routers, then bgp_peers),
+    * `peer_events`, `base_attrs`, `ip_rib`, `l3vpn_rib`, `stat_reports`,
+    * `ls_nodes`, `ls_links` or `ls_prefixes`. Unset on the batch's cache
+    * fill and commit.
+    */
+  val TableProperty = "graft.table"
+
   /** Runs each named pipeline of one micro-batch on its own thread and
     * returns only once every thread has exited; then it rethrows the
     * stream thread's interrupt (query stop) or the first pipeline
@@ -242,12 +284,16 @@ object GraftApp {
     * The threads are created per batch: each inherits the calling
     * thread's Spark local properties (job group, batch id), so query
     * stop cancels their jobs. A long-lived pool would keep the first
-    * batch's properties.
+    * batch's properties. Each thread adds [[TableProperty]], its
+    * pipeline's name, so a listener can attribute every job to a table.
     */
-  private def runPipelines(batchId: Long, pipelines: Seq[(String, () => Unit)]): Unit = {
+  private def runPipelines(spark: SparkSession, batchId: Long,
+                           pipelines: Seq[(String, () => Unit)]): Unit = {
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = pipelines.map { case (name, body) =>
-      val t = new Thread(() => try body() catch { case e: Throwable => failures.add(e); () },
+      val t = new Thread(() =>
+        try { spark.sparkContext.setLocalProperty(TableProperty, name); body() }
+        catch { case e: Throwable => failures.add(e); () },
         s"$BatchThreadPrefix$batchId-$name")
       t.setDaemon(true)
       t.start()
@@ -271,14 +317,17 @@ object GraftApp {
   /** One RIB-scale table's part of batch `batchId`: merge `parsed`
     * into `table` in `conf.ribBuckets` buckets inside `txn`, with the T9
     * purge of `peerUps` (`hash_id`, `ts_us` of peers that came up) and
-    * the batch's CDC rows in `<root>/<table>_log`. The caller commits.
+    * the batch's CDC rows in `<root>/<table>_log`; with `local`, as one
+    * task ([[StateTables.mergesLocally]]). The caller commits.
     */
   private[graft] def mergeRib(txn: ConsistentState.Txn, conf: Conf, batchId: Long,
                               table: String, parsed: DataFrame,
-                              policy: MergeOps.MergePolicy, peerUps: Option[DataFrame]): Unit = {
+                              policy: MergeOps.MergePolicy, peerUps: Option[DataFrame],
+                              local: Boolean = false): Unit = {
     StateTables.mergeChangedBuckets(txn, table,
-      parsed.repartition(policy.keys.map(col): _*), policy, conf.ribBuckets,
-      logPath = Some(s"${conf.root}/${table}_log"), batchId = Some(batchId), peerUps = peerUps)
+      if (local) parsed else parsed.repartition(policy.keys.map(col): _*), policy, conf.ribBuckets,
+      logPath = Some(s"${conf.root}/${table}_log"), batchId = Some(batchId), peerUps = peerUps,
+      local = local)
     ()
   }
 
@@ -669,12 +718,19 @@ object GraftApp {
     * either value is unmeasured. A new checkpoint records the value in
     * its offset log and every restart restores it, so the count a query
     * first starts with holds for the life of its checkpoint.
+    *
+    * The generated-class cache holds the local session's
+    * [[graft.GraftSession.CodegenCacheMaxEntries]]: at Spark's default of
+    * 100, every steady-state batch of a 45 s file-source run on 4 cores
+    * recompiled 186–199 classes; at 5000, batches 3–10 compiled 0–4 and
+    * were visible in 3.2–5.1 s, against 5.4–7.2 s.
     */
   private[graft] def session(): SparkSession = {
     val spark = SparkSession.builder()
       .appName("graft-consumer")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", graft.GraftSession.CodegenCacheMaxEntries)
       .getOrCreate()
     val sc = spark.sparkContext
     if (sc.isLocal && !spark.sessionState.conf.contains("spark.sql.shuffle.partitions"))

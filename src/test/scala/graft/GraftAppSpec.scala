@@ -10,6 +10,7 @@ import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{ConsistentState, GraftApp}
+import graft.BmpLines._
 
 /** Fault-injecting local filesystem (`faulty://` scheme) aimed at one
   * table's snapshot write, in the style of [[CrashingFs]]: while
@@ -65,32 +66,6 @@ class GraftAppSpec extends SparkSpec {
   }
 
   private val ts0 = "2024-01-01 00:00:00.000000"
-  private def collectorLine(hash: String, action: String, ts: String) =
-    s"$hash\t$action\tadmin\t\t1\t$ts"
-  private def routerLine(hash: String, name: String, ip: String, ts: String,
-                         action: String, collector: String) =
-    s"$hash\t$name\t$ip\t$ts\t$action\t\t\t\t\tdescr\t$ip\t$collector"
-  private def peerLine(hash: String, router: String, addr: String, name: String,
-                       bgpId: String, as: Long, action: String, ts: String) =
-    s"$hash\t$router\t0:0\t1\t$addr\t$name\t$bgpId\t$as\t$action\t0\t$ts\t1\t" +
-      "10.0.0.1\t10.0.0.1\t179\t90\t65000\t33001\t90\tcap\tcap\t\t\t\t\t0\t0\ttbl"
-  private def attrLine(hash: String, peer: String, originAs: Long, ts: String) =
-    s"$hash\t$peer\tigp\t65001 $originAs\t$originAs\t10.1.1.1\t0\t100\t0\t\t\t\t\t\t\t2\t1\t$ts"
-  private def prefixLine(hash: String, peer: String, attr: String, prefix: String,
-                         len: Int, ts: String, withdrawn: Boolean) =
-    s"$hash\t$peer\t$attr\t1\t65002\t$prefix\t$len\t$ts\t${if (withdrawn) 1 else 0}\t0\t\t1\t1"
-  private def statLine(peer: String, ts: String) =
-    s"$peer\t$ts\t1\t2\t3\t4\t5\t6\t7\t8\t9"
-  private def l3vpnLine(hash: String, peer: String, attr: String, prefix: String, ts: String) =
-    prefixLine(hash, peer, attr, prefix, 24, ts, withdrawn = false) + "\t1:1\t65000:1"
-  private def lsNodeLine(hash: String, peer: String, ts: String) =
-    s"$hash\t$peer\ta1\t1\t65001\t0\t10.0.0.9\t0.0.0.0\tOSPFv2\t10.0.0.9\t\t\tnode-$hash\t0\tcap\t0\t$ts"
-  private def lsLinkLine(hash: String, peer: String, ts: String) =
-    s"$hash\t$peer\ta1\t1\tn1\tn2\t10.0.0.1\t10.0.0.2\t0\t1\t2\t0\t1000\t1000\t1000\t10\t0\t0\t10\t" +
-      s"\tlink-$hash\t0\t$ts\t\t\t\t\t65001\t65002\t\t"
-  private def lsPrefixLine(hash: String, peer: String, ts: String) =
-    s"$hash\t$peer\ta1\t1\tn1\t0\tIntra\t0\t0\t0\t0.0.0.0\t10\t10.9.0.0\t24\t0\t$ts"
-
   test("GraftApp wires the full topology: stream in, consistent views out") {
     val in   = Files.createTempDirectory("graftapp_in").toString
     val root = Files.createTempDirectory("graftapp_root").toString
@@ -522,11 +497,7 @@ class GraftAppSpec extends SparkSpec {
     Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
       .filter(_.startsWith(GraftApp.BatchThreadPrefix))
 
-  private def tsvBatch(lines: (String, String)*) = {
-    import spark.implicits._
-    lines.toDF("topic", "line")
-      .select(concat(lit(GraftApp.TopicPrefix), col("topic")).as("topic"), col("line"))
-  }
+  private def tsvBatch(lines: (String, String)*) = BmpLines.batch(spark, lines: _*)
 
   /** A batch of every topic, each row stamped `ts`; `n` varies the keys. */
   private def allTopics(n: Int, ts: String) = tsvBatch(
@@ -556,14 +527,53 @@ class GraftAppSpec extends SparkSpec {
   test("a steady-state micro-batch plus registerViews launches no schema-inference job") {
     val conf = GraftApp.Conf(Files.createTempDirectory("graftapp_jobs").toString)
     val (jobs, inferred) = twoBatches(conf)
+    info(s"$jobs jobs")
     assert(inferred === 0, s"$inferred of $jobs jobs inferred a parquet schema")
     // before table versions and logs recorded their schemas, the same
     // batch and registration launched 80 jobs, 31 of them inference jobs
-    // (9 txn.current, 9 Txn.stage read-backs, 13 registerViews reads)
-    assert(jobs <= 80 - 31, s"$jobs jobs")
+    // (9 txn.current, 9 Txn.stage read-backs, 13 registerViews reads);
+    // before small tables merged in one task, 49
+    assert(jobs <= 28, s"$jobs jobs")
     // u2 only: batch 1's peer-up purges p1's older u1 (T9)
     assert(spark.sql("SELECT rib_hash_id FROM v_ip_routes").collect().map(_.getString(0))
       .toSeq === Seq("u2"))
+  }
+
+  test("a steady-state batch: at most 3 jobs per small rib table and the T9 broadcast, one task each") {
+    val conf = GraftApp.Conf(Files.createTempDirectory("graftapp_tables").toString,
+      registerViews = false)
+    GraftApp.processBatch(allTopics(1, "2024-01-01 00:00:01.000000"), 0L, conf)
+    val trace = TableTrace(spark)(
+      GraftApp.processBatch(allTopics(2, "2024-01-01 00:00:02.000000"), 1L, conf))
+    info(trace.toSeq.sortBy(_._1).map { case (t, p) => s"$t ${p.tasksPerJob}" }.mkString(", "))
+    assert(trace.size === 10, trace.keySet)
+    // the fill of the cached merge join, the CDC write and the state
+    // write; ip_rib and l3vpn_rib also broadcast the batch's peer-ups
+    for (t <- Seq("ls_nodes", "ls_links", "ls_prefixes"))
+      assert(trace(t).jobs <= 3, s"$t: ${trace(t).jobs} jobs")
+    for (t <- Seq("ip_rib", "l3vpn_rib"))
+      assert(trace(t).jobs <= 3 + 1, s"$t: ${trace(t).jobs} jobs")
+    trace.foreach { case (t, p) =>
+      assert(p.tasksPerJob.forall(_ == 1), s"$t: tasks per job ${p.tasksPerJob}")
+    }
+  }
+
+  test("a batch with unparsable number cells and a seconds-precision timestamp commits under ANSI") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val root = Files.createTempDirectory("graftapp_ansi").toString
+    GraftApp.processBatch(tsvBatch(
+      // local_port (empty → null when absent) carries "x9"
+      "peer" -> peerLine("p1", "r1", "10.1.1.1", "peer-one", "10.1.1.1", 65001, "up", ts0)
+        .replace("\t179\t", "\tx9\t"),
+      // origin_as (empty → 0) carries "abc"; no micros in the timestamp
+      "unicast_prefix" -> prefixLine("u1", "p1", "a1", "192.0.2.0", 24, "2024-01-01 00:00:02",
+        withdrawn = false).replace("\t65002\t", "\tabc\t")), 0L,
+      GraftApp.Conf(root, registerViews = false))
+    val snap = ConsistentState.readConsistent(spark, root, Seq("ip_rib", "bgp_peers"))
+    val rib = snap("ip_rib").select("hash_id", "origin_as", "ts_us").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rib === Seq(("u1", 0L, 1704067202000000L)))
+    assert(snap("bgp_peers").select("local_port").collect().map(_.get(0)).toSeq === Seq(null))
   }
 
   test("every table version and log records the schema inference returns") {

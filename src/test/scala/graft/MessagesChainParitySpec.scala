@@ -146,10 +146,7 @@ class MessagesChainParitySpec extends SparkSpec {
     (0 until 18).map(k => schema.fieldNames.zipWithIndex.map { case (f, i) => cell(f, k + i) }
       .mkString("\t")) ++ Seq("onlyonecell", "", "a\tb")
 
-  /** Same schema under the session's confs; same rows with ANSI mode
-    * off, where a bad number or timestamp cell reads as null instead of
-    * failing the query (both forms fail alike with it on).
-    */
+  /** Runs `body` with ANSI mode off (the session's default is on). */
   private def ansiOff[A](body: => A): A = {
     val key = "spark.sql.ansi.enabled"
     val before = spark.conf.getOption(key)
@@ -157,12 +154,19 @@ class MessagesChainParitySpec extends SparkSpec {
     try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  /** Same schema and rows under the session's confs (ANSI mode on) and
+    * with ANSI mode off: a bad number or timestamp cell reads as its
+    * fallback either way, so the rows are also the same across modes.
+    */
   private def sameFrames(got: => DataFrame, want: => DataFrame, what: String): Unit = {
+    def rows(d: DataFrame) = d.collect().toSeq.map(_.toString).sorted
     assert(got.schema === want.schema, what)
+    val ansiRows = rows(got)
+    assert(ansiRows === rows(want), what)
     ansiOff {
       assert(got.schema === want.schema, what)
-      def rows(d: DataFrame) = d.collect().toSeq.map(_.toString).sorted
       assert(rows(got) === rows(want), what)
+      assert(rows(got) === ansiRows, what)
     }
   }
 

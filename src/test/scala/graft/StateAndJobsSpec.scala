@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AggJobs, MergeOps, StateTables}
@@ -13,7 +14,11 @@ import graft.operators.MergeOps.MergePolicy
 /** Bucketed state tables (Exchange elision on the snapshot side) and
   * the idempotent stats-job runner.
   */
-class StateAndJobsSpec extends AnyFunSuite {
+class StateAndJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
+  private val BroadcastKey = "spark.sql.autoBroadcastJoinThreshold"
+  // the threshold the shared session had before this suite set it
+  private var broadcastBefore: Option[Option[String]] = None
+
   // getOrCreate() may return another suite's session (builder configs
   // are ignored then) — set session-scoped confs explicitly instead.
   lazy val spark: SparkSession = {
@@ -26,9 +31,15 @@ class StateAndJobsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // force SMJ so the Exchange-elision assertion observes bucketing
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    broadcastBefore = Some(s.conf.getOption(BroadcastKey))
+    s.conf.set(BroadcastKey, "-1")
     s
   }
+
+  // later suites in this JVM share the session: give their broadcasts back
+  override def afterAll(): Unit =
+    try broadcastBefore.foreach(_.fold(spark.conf.unset(BroadcastKey))(spark.conf.set(BroadcastKey, _)))
+    finally super.afterAll()
   import spark.implicits._
 
   val policy = MergePolicy(

@@ -251,11 +251,16 @@ object Messages {
     * ParseTimestamp processors as column transforms. A cell that does not
     * parse yields the fallback (0, null, or the seconds-precision
     * timestamp) under ANSI mode too: the casts and timestamp parses are
-    * the `try_` forms, so one bad cell never fails a micro-batch.
+    * the `try_` forms, so one bad cell never fails a micro-batch. A
+    * number out of its column's range does not parse either (an int
+    * column's 99999999999 reads 0).
     */
   def nullAsEmpty(c: Column): Column = coalesce(c, lit(""))
   def longEmptyAsZero(c: Column): Column =
     coalesce(nullif(trim(c), lit("")).try_cast(LongType), lit(0L))
+  /** [[longEmptyAsZero]] for an int column. */
+  def intEmptyAsZero(c: Column): Column =
+    coalesce(nullif(trim(c), lit("")).try_cast(IntegerType), lit(0))
   /** Numeric cell that is legitimately ABSENT (peer session fields on a
     * down message): empty → NULL, matching the reference's nullable
     * columns — where [[longEmptyAsZero]] is for counters that default 0.
@@ -285,7 +290,6 @@ object Messages {
       .otherwise(split(s, " +"))
   }
 
-  private val intEmptyAsZero: Column => Column = c => longEmptyAsZero(c).cast(IntegerType)
   private def enumCell(domain: Set[String]): Column => Column =
     c => when(c.isin(domain.toSeq: _*), c).otherwise(lit(""))
 
@@ -298,7 +302,7 @@ object Messages {
     withTsUs(parseCoerced(raw, lineCol, unicastPrefixSchema, Map(
       "isIPv4" -> boolCell _,
       "origin_as" -> longEmptyAsZero _,
-      "prefix_len" -> intEmptyAsZero,
+      "prefix_len" -> intEmptyAsZero _,
       "timestamp" -> parseTs _,
       "isWithdrawn" -> boolCell _,
       "path_id" -> longEmptyAsZero _,
@@ -318,7 +322,7 @@ object Messages {
       "ext_community_list" -> strArray _,
       "large_community_list" -> strArray _,
       "cluster_list" -> strArray _,
-      "as_path_count" -> intEmptyAsZero,
+      "as_path_count" -> intEmptyAsZero _,
       "nexthop_isIPv4" -> boolCell _,
       "timestamp" -> parseTs _)))
 
@@ -351,7 +355,7 @@ object Messages {
 
   def collectorFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
     withTsUs(parseCoerced(raw, lineCol, collectorSchema,
-      Map("router_count" -> intEmptyAsZero, "timestamp" -> parseTs _),
+      Map("router_count" -> intEmptyAsZero _, "timestamp" -> parseTs _),
       // action stopped → 'down' (CollectorQuery.java:33-52)
       Seq("state" -> when(col("__p.action") === "stopped", lit("down")).otherwise(lit("up")))))
 
@@ -359,7 +363,7 @@ object Messages {
     withTsUs(parseCoerced(raw, lineCol, l3vpnSchema, Map(
       "isIPv4" -> boolCell _,
       "origin_as" -> longEmptyAsZero _,
-      "prefix_len" -> intEmptyAsZero,
+      "prefix_len" -> intEmptyAsZero _,
       "timestamp" -> parseTs _,
       "isWithdrawn" -> boolCell _,
       "path_id" -> longEmptyAsZero _,
@@ -391,7 +395,7 @@ object Messages {
 
   def lsPrefixFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
     withTsUs(parseCoerced(raw, lineCol, lsPrefixSchema, lsCommon ++ Map(
-      "prefix_len" -> intEmptyAsZero,
+      "prefix_len" -> intEmptyAsZero _,
       "metric" -> longEmptyAsZero _,
       "ospf_route_type" -> enumCell(OspfRouteTypes)),
       Seq("protocol" -> lit(""))))

@@ -24,10 +24,10 @@ import graft.streaming.ConsistentState.BucketCol
   *
   * A small 1-bucket merge runs as one task ([[mergesLocally]]): when the
   * committed version and the micro-batch are both at or under
-  * [[LocalMergeMaxBytes]], every input of the merge is one partition, so
-  * the dedup window, the full-outer merge join and the T9 purge plan
-  * with no exchange, and the CDC write and the one-file state write are
-  * one task each. The plans are the shuffled path's with the exchanges
+  * [[LocalMergeMaxBytes]] (3 MiB), every input of the merge is one
+  * partition, so the dedup window, the full-outer merge join and the T9
+  * purge plan with no exchange, and the CDC write and the one-file state
+  * write are one task each. The plans are the shuffled path's with the exchanges
   * removed; the rows are the same.
   *
   * Single writer per root, like every [[ConsistentState]] txn.
@@ -36,9 +36,20 @@ object StateTables {
 
   /** Byte cap, for both the committed version (parquet bytes as listed)
     * and the micro-batch (the filled cache's bytes), at or under which a
-    * 1-bucket table merges in one task. Measured on 4 cores: a 1-bucket
-    * `ip_rib` merge of a 2k-update batch (half of them new keys) plus a
-    * T9 purge, median of 5 interleaved runs after 2 warm-ups, ms:
+    * 1-bucket table merges in one task.
+    *
+    * The cap is set from the end-to-end `ingest_steady` benchmark, the
+    * one workload that times the one-task merge inside a batch: its
+    * largest table, `ip_rib` (50k keys), holds 2.39–2.57 MB, and its
+    * steady batches are 0.24 MB. There, over 20 interleaved pairs on 4
+    * cores, the one-task path took the median steady batch from 7.65 to
+    * 6.64 s and won 19 pairs. 3 MiB is the next whole MiB above that
+    * table; no workload times a state between 2.6 MB and the cap, and
+    * the benchmark's 6.2 MB bootstrap batch merges shuffled.
+    *
+    * A standalone 1-bucket `ip_rib` merge (a 2k-update batch, half of
+    * them new keys, plus a T9 purge; median of 5 interleaved runs after
+    * 2 warm-ups, 4 cores, ms) does not support a higher cap:
     * {{{
     *   state rows (parquet)   1 merge alone          4 merges at once
     *                          one task   shuffled    one task   shuffled
@@ -46,26 +57,22 @@ object StateTables {
     *   500k  (6.8 MB)           7230       3634        8256       8453
     *   2M   (27.1 MB)          25905      10886       30272      28229
     * }}}
-    * Inside a batch the merge runs beside nine other table pipelines on
-    * the same cores, which the second pair of columns stands for: there
-    * the one-task merge is not slower up to 6.8 MB and is slower at
-    * 27.1 MB, so the cap is 8 MiB, the nearest power of two above the
-    * last size where it is not slower. On otherwise idle cores (the
-    * first pair) the shuffled merge runs on four cores and wins at every
-    * size; a table near the cap whose merge runs alone pays that.
+    * Run alone, the shuffled merge wins at every size and the gap grows
+    * with the state (about 2x at 6.8 MB); the one-task merge wins only
+    * when other merges hold the cores. A batch's largest merge is often
+    * its critical path and runs mostly alone, so a state past a few MB
+    * can pay the first pair of columns.
     */
-  val LocalMergeMaxBytes: Long = 8L << 20
+  val LocalMergeMaxBytes: Long = 3L << 20
 
-  /** Whether `table`'s merge in `txn` runs over single-partition inputs:
-    * it has one bucket, and both `batchBytes` and its committed version
-    * (plan statistics of the read, which carry the listing's file
-    * bytes — no job) are at or under `maxBytes`. A table never
-    * committed counts 0 bytes.
+  /** Whether a 1-bucket merge over the committed state `current` (None
+    * before the table's first commit, which counts 0 bytes) runs over
+    * single-partition inputs: the state's plan statistics, which carry
+    * the listing's file bytes (no job), are at or under `maxBytes`. A
+    * negative `maxBytes` never merges in one task.
     */
-  private[graft] def mergesLocally(txn: ConsistentState.Txn, table: String, numBuckets: Int,
-                                   batchBytes: BigInt, maxBytes: Long): Boolean =
-    numBuckets == 1 && batchBytes <= maxBytes &&
-      txn.current(table).forall(_.queryExecution.analyzed.stats.sizeInBytes <= maxBytes)
+  private[graft] def mergesLocally(current: Option[DataFrame], maxBytes: Long): Boolean =
+    current.fold(BigInt(0))(_.queryExecution.analyzed.stats.sizeInBytes) <= maxBytes
 
   /** The bucket partition function: pmod(hash(keys), numBuckets) —
     * identical on the state and update sides by construction.
@@ -153,10 +160,11 @@ object StateTables {
     * An n-bucket merge that touches no bucket stages nothing, unless the
     * table was never committed (then an empty version publishes it).
     *
-    * With `local` (1 bucket only; see [[mergesLocally]]), the updates,
-    * `peerUps` and the state read are each coalesced to one partition,
-    * so the merge, its CDC write and its state write run as one task
-    * each.
+    * A 1-bucket merge whose committed state is at or under
+    * `localMaxBytes` ([[mergesLocally]]; the default, -1, never) runs in
+    * one task: the updates, `peerUps` and the state read are each
+    * coalesced to one partition, so the merge, its CDC write and its
+    * state write run as one task each. Otherwise the merge shuffles.
     *
     * @return the bucket ids rewritten (size = write amplification in
     *         units of buckets)
@@ -166,13 +174,16 @@ object StateTables {
                           logPath: Option[String] = None,
                           batchId: Option[Long] = None,
                           peerUps: Option[DataFrame] = None,
-                          local: Boolean = false): Seq[Int] = {
+                          localMaxBytes: Long = -1L): Seq[Int] = {
     val recorded = txn.bucketMap(table).map(_.numBuckets).getOrElse(numBuckets)
     require(recorded == numBuckets,
       s"$table was written with numBuckets=$recorded but this merge was called with " +
         s"$numBuckets — merging would duplicate every updated key")
     val bucketed = numBuckets > 1
-    require(!(local && bucketed), s"$table: only a 1-bucket merge runs in one task")
+    // a 1-bucket merge reads the whole committed version, once; its size
+    // decides the one-task path
+    val whole = if (bucketed) None else txn.current(table, Some(Seq(0)))
+    val local = !bucketed && mergesLocally(whole, localMaxBytes)
     def one(df: DataFrame): DataFrame = if (local) df.coalesce(1) else df
     val latest0 = MergeOps.dedupToLatest(one(updates), policy.keys, policy.orderBy)
     // an n-bucket merge reads `latest` twice: touched-bucket collect + merge
@@ -190,8 +201,9 @@ object StateTables {
             .collect().map(_.getInt(0)).toSeq.sorted
         }
       if (touched.isEmpty && txn.version(table).isDefined) return Nil // empty micro-batch: no-op
+      val state = if (bucketed) txn.current(table, Some(touched)) else whole
       val current = MergeOps.evolveState(
-        txn.current(table, Some(touched)).map(one).getOrElse(latest.limit(0)), latest, policy)
+        state.map(one).getOrElse(latest.limit(0)), latest, policy)
       val purged = peerUps.fold(current)(ups =>
         MergeOps.purgeStale(current, "peer_hash_id", "ts_us", one(ups), "hash_id", "ts_us"))
       // cached variant: state write + CDC write both execute below — an

@@ -42,7 +42,7 @@ import graft.views.BmpViews
   * where a batch rewrites only the buckets its updates and T9 purges
   * touch (write ∝ update spread). Either way the batch commits through
   * the one manifest. A 1-bucket table whose committed version and batch
-  * are both at or under [[StateTables.LocalMergeMaxBytes]] (8 MiB) merges
+  * are both at or under [[StateTables.LocalMergeMaxBytes]] (3 MiB) merges
   * in one task with no shuffle; larger ones, and n-bucket tables, merge
   * over `spark.sql.shuffle.partitions` (see [[processBatch]]).
   *
@@ -137,9 +137,9 @@ object GraftApp {
     *
     * A 1-bucket table whose committed version and batch are both at or
     * under [[StateTables.LocalMergeMaxBytes]] merges in one task: its
-    * topic lines and its committed-state read are coalesced to one
-    * partition, so its plans carry no exchange (see
-    * [[StateTables.mergesLocally]]). The append logs take one partition
+    * parsed updates, the frames its cascades join and its
+    * committed-state read are coalesced to one partition, so its plans
+    * carry no exchange (see [[StateTables.mergesLocally]]). The append logs take one partition
     * whenever the batch is under the cap. Other tables keep the shuffled
     * merge.
     */
@@ -159,37 +159,40 @@ object GraftApp {
       // fill the cache in one job before the pipelines start: concurrent
       // first readers would each run their own caching job
       batch.queryExecution.toRdd.count()
-      // the filled cache's bytes, from plan statistics (no job)
+      // the filled cache's bytes, from plan statistics (no job); a batch
+      // over the cap merges every table shuffled
       val batchBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
       val smallBatch = batchBytes <= localMaxBytes
-      def lines(t: String, local: Boolean = false): DataFrame = {
-        val ls = batch.filter(col("topic") === TopicPrefix + t).select(col("line"))
-        if (local) ls.coalesce(1) else ls
-      }
+      val stateMaxBytes = if (smallBatch) localMaxBytes else -1L
+      def lines(t: String): DataFrame =
+        batch.filter(col("topic") === TopicPrefix + t).select(col("line"))
+      def one(local: Boolean)(df: DataFrame): DataFrame = if (local) df.coalesce(1) else df
       val root = conf.root
       val txn  = ConsistentState.begin(spark, root)
 
-      def local(table: String, numBuckets: Int = 1): Boolean =
-        StateTables.mergesLocally(txn, table, numBuckets, batchBytes, localMaxBytes)
-      def cur(table: String, like: DataFrame, local: Boolean): DataFrame = {
-        val c = txn.current(table).getOrElse(like.limit(0))
-        if (local) c.coalesce(1) else c
+      // `table`'s committed state, read once (empty like `like` before
+      // its first commit), and whether its merge runs in one task
+      // (StateTables.mergesLocally); then the state is one partition and
+      // the pipeline passes its other inputs through `one(local)`
+      def current(table: String, like: DataFrame): (DataFrame, Boolean) = {
+        val c = txn.current(table)
+        val local = StateTables.mergesLocally(c, stateMaxBytes)
+        (one(local)(c.getOrElse(like.limit(0))), local)
       }
 
       // the parsed frames several pipelines read; each pipeline
-      // re-parses them from the persisted batch, with its own partitioning
-      def collectors(local: Boolean) = parse("collector", lines("collector", local))
-      def peers(local: Boolean) = parse("peer", lines("peer", local))
+      // re-parses them from the persisted batch
+      val collectors = parse("collector", lines("collector"))
+      val peers = parse("peer", lines("peer"))
       // T9: peers that came up in this batch purge their stale rib rows
-      val peerUps = peers(local = false)
-        .filter(col("state") === "up" && col("ts_us").isNotNull)
+      val peerUps = peers.filter(col("state") === "up" && col("ts_us").isNotNull)
         .select(col("hash_id"), col("ts_us"))
 
-      // a one-task rib merge coalesces its own inputs (mergeChangedBuckets)
+      // a rib merge decides the one-task path and coalesces its own inputs
       def mergeRib(table: String, topic: String, policy: MergeOps.MergePolicy,
                    purge: Boolean): Unit =
         GraftApp.mergeRib(txn, conf, batchId, table, parse(topic, lines(topic)), policy,
-          if (purge) Some(peerUps) else None, local(table, conf.ribBuckets))
+          if (purge) Some(peerUps) else None, stateMaxBytes)
 
       // -- the independent pipelines, run concurrently -----------------
       // Each writes its own tables and logs; the reference's per-record
@@ -197,51 +200,48 @@ object GraftApp {
       runPipelines(spark, batchId, Seq(
         // M5 collectors: latest-wins overwrite
         "collectors" -> { () =>
-          val l = local("collectors")
-          val updates = collectors(l)
-          txn.stage("collectors", Ingest.overwriteMerge(cur("collectors", updates, l), updates,
+          val (state, l) = current("collectors", collectors)
+          txn.stage("collectors", Ingest.overwriteMerge(state, one(l)(collectors),
             Seq("hash_id"), Seq("ts_us")))
         },
         "routers" -> { () =>
           // M4 routers: overwrite merge, then T8 — a collector transition
           // in THIS batch downs routers whose state predates it
-          val l = local("routers")
-          val routers = parse("router", lines("router", l))
+          val routers = parse("router", lines("router"))
+          val (state, l) = current("routers", routers)
           val routersNext = txn.stage("routers",
             Ingest.collectorCascade(
-              Ingest.overwriteMerge(cur("routers", routers, l), routers,
-                Seq("hash_id"), Seq("ts_us")),
-              collectors(l)))
+              Ingest.overwriteMerge(state, one(l)(routers), Seq("hash_id"), Seq("ts_us")),
+              one(l)(collectors)))
           // M3 peers: T6 default naming against the POST-merge routers
           // (the BEFORE INSERT trigger reads the routers table), T7
           // router-up cascade downs EXISTING peer state, then latest-wins
           // overwrite.
-          val lp = local("bgp_peers")
-          val updates = peers(lp)
+          val (peerState, lp) = current("bgp_peers", peers)
           txn.stage("bgp_peers",
             Ingest.overwriteMerge(
-              Ingest.routerUpCascade(cur("bgp_peers", updates, lp),
-                parse("router", lines("router", lp))),
-              Ingest.inheritPeerDefaults(updates, routersNext),
+              Ingest.routerUpCascade(peerState, one(lp)(routers)),
+              Ingest.inheritPeerDefaults(one(lp)(peers), routersNext),
               Seq("hash_id"), Seq("ts_us")))
         },
         // T4: every peer message appends an event row
         "peer_events" -> (() => StateTables.writeCdcBatch(spark,
-          Ingest.peerEventLog(peers(smallBatch)), s"$root/peer_events", Some(batchId))),
+          Ingest.peerEventLog(one(smallBatch)(peers)), s"$root/peer_events", Some(batchId))),
         "base_attrs" -> { () =>
           // M2 base_attrs: content-addressed DO NOTHING (hash_id PK,
           // 1_base.sql:286)
-          val l = local("base_attrs")
-          val attrs = parse("base_attribute", lines("base_attribute", l))
+          val attrs = parse("base_attribute", lines("base_attribute"))
+          val (state, l) = current("base_attrs", attrs)
           txn.stage("base_attrs",
-            MergeOps.insertIgnore(cur("base_attrs", attrs, l), attrs,
+            MergeOps.insertIgnore(state, one(l)(attrs),
               Seq("hash_id"), Seq("ts_us", "peer_hash_id")))
         },
         "ip_rib" -> (() => mergeRib("ip_rib", "unicast_prefix", Ingest.ipRibPolicy, purge = true)),
         "l3vpn_rib" -> (() => mergeRib("l3vpn_rib", "l3vpn", Ingest.l3vpnRibPolicy, purge = true)),
         // M10 stat_reports: append-only, batch-keyed (idempotent replay)
         "stat_reports" -> (() => StateTables.writeCdcBatch(spark,
-          parse("bmp_stat", lines("bmp_stat", smallBatch)), s"$root/stat_reports", Some(batchId))),
+          one(smallBatch)(parse("bmp_stat", lines("bmp_stat"))), s"$root/stat_reports",
+          Some(batchId))),
         "ls_nodes" -> (() => mergeRib("ls_nodes", "ls_node", Ingest.lsNodePolicy, purge = false)),
         "ls_links" -> (() => mergeRib("ls_links", "ls_link", Ingest.lsLinkPolicy, purge = false)),
         "ls_prefixes" -> (() => mergeRib("ls_prefixes", "ls_prefix", Ingest.lsPrefixPolicy,
@@ -317,17 +317,17 @@ object GraftApp {
   /** One RIB-scale table's part of batch `batchId`: merge `parsed`
     * into `table` in `conf.ribBuckets` buckets inside `txn`, with the T9
     * purge of `peerUps` (`hash_id`, `ts_us` of peers that came up) and
-    * the batch's CDC rows in `<root>/<table>_log`; with `local`, as one
-    * task ([[StateTables.mergesLocally]]). The caller commits.
+    * the batch's CDC rows in `<root>/<table>_log`; a 1-bucket table whose
+    * state is at or under `localMaxBytes` merges in one task
+    * ([[StateTables.mergeChangedBuckets]]). The caller commits.
     */
   private[graft] def mergeRib(txn: ConsistentState.Txn, conf: Conf, batchId: Long,
                               table: String, parsed: DataFrame,
                               policy: MergeOps.MergePolicy, peerUps: Option[DataFrame],
-                              local: Boolean = false): Unit = {
-    StateTables.mergeChangedBuckets(txn, table,
-      if (local) parsed else parsed.repartition(policy.keys.map(col): _*), policy, conf.ribBuckets,
+                              localMaxBytes: Long = -1L): Unit = {
+    StateTables.mergeChangedBuckets(txn, table, parsed, policy, conf.ribBuckets,
       logPath = Some(s"${conf.root}/${table}_log"), batchId = Some(batchId), peerUps = peerUps,
-      local = local)
+      localMaxBytes = localMaxBytes)
     ()
   }
 

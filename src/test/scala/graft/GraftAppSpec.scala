@@ -562,18 +562,25 @@ class GraftAppSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
     val root = Files.createTempDirectory("graftapp_ansi").toString
     GraftApp.processBatch(tsvBatch(
+      // router_count (an int, empty → 0) carries a number past int range
+      "collector" -> collectorLine("c1", "started", ts0).replace("\t\t1\t", "\t\t99999999999\t"),
       // local_port (empty → null when absent) carries "x9"
       "peer" -> peerLine("p1", "r1", "10.1.1.1", "peer-one", "10.1.1.1", 65001, "up", ts0)
         .replace("\t179\t", "\tx9\t"),
+      // as_path_count (an int) carries a number past int range
+      "base_attribute" -> attrLine("a1", "p1", 65002, ts0).replace("\t2\t1\t", "\t99999999999\t1\t"),
       // origin_as (empty → 0) carries "abc"; no micros in the timestamp
       "unicast_prefix" -> prefixLine("u1", "p1", "a1", "192.0.2.0", 24, "2024-01-01 00:00:02",
         withdrawn = false).replace("\t65002\t", "\tabc\t")), 0L,
       GraftApp.Conf(root, registerViews = false))
-    val snap = ConsistentState.readConsistent(spark, root, Seq("ip_rib", "bgp_peers"))
+    val snap = ConsistentState.readConsistent(spark, root,
+      Seq("ip_rib", "bgp_peers", "collectors", "base_attrs"))
     val rib = snap("ip_rib").select("hash_id", "origin_as", "ts_us").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rib === Seq(("u1", 0L, 1704067202000000L)))
     assert(snap("bgp_peers").select("local_port").collect().map(_.get(0)).toSeq === Seq(null))
+    assert(snap("collectors").select("router_count").collect().map(_.getInt(0)).toSeq === Seq(0))
+    assert(snap("base_attrs").select("as_path_count").collect().map(_.getInt(0)).toSeq === Seq(0))
   }
 
   test("every table version and log records the schema inference returns") {

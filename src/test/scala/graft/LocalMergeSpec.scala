@@ -197,15 +197,26 @@ class LocalMergeSpec extends SparkSpec {
   test("the cap compares both the committed version and the batch") {
     val root = Files.createTempDirectory("local_cap").toString
     val conf = GraftApp.Conf(root, registerViews = false)
-    GraftApp.processBatch(randomBatches(31L).head, 0L, conf, Local)
+    val Seq(b0, b1) = randomBatches(31L)
+    GraftApp.processBatch(b0, 0L, conf, Local)
     val txn = ConsistentState.begin(spark, root)
-    val ribBytes = txn.current("ip_rib").get.queryExecution.analyzed.stats.sizeInBytes.toLong
+    def bytes(t: String) = txn.current(t).get.queryExecution.analyzed.stats.sizeInBytes.toLong
+    val ribBytes = bytes("ip_rib")
     assert(ribBytes > 0)
-    assert(StateTables.mergesLocally(txn, "ip_rib", 1, 0, ribBytes))
-    assert(!StateTables.mergesLocally(txn, "ip_rib", 1, 0, ribBytes - 1))
-    assert(!StateTables.mergesLocally(txn, "ip_rib", 1, ribBytes + 1, ribBytes))
-    assert(!StateTables.mergesLocally(txn, "ip_rib", 8, 0, Long.MaxValue))
-    // a table never committed counts 0 bytes
-    assert(StateTables.mergesLocally(txn, "no_such_table", 1, 0, 0))
+    assert(StateTables.mergesLocally(txn.current("ip_rib"), ribBytes))
+    assert(!StateTables.mergesLocally(txn.current("ip_rib"), ribBytes - 1))
+    // a table never committed counts 0 bytes; a negative cap never merges locally
+    assert(StateTables.mergesLocally(None, 0))
+    assert(!StateTables.mergesLocally(None, -1))
+    // a batch over the cap merges shuffled though every state is under it
+    val batch = b1.persist()
+    try {
+      batch.count()
+      val cap = batch.queryExecution.optimizedPlan.stats.sizeInBytes.toLong - 1
+      val tables = Seq("collectors", "base_attrs", "ip_rib", "l3vpn_rib", "ls_nodes", "ls_prefixes")
+      assert(tables.forall(bytes(_) <= cap), tables.map(t => t -> bytes(t)) -> cap)
+      val trace = TableTrace(spark)(GraftApp.processBatch(batch, 1L, conf, cap))
+      tables.foreach(t => assert(trace(t).shuffles, s"$t planned no shuffle exchange"))
+    } finally batch.unpersist()
   }
 }

@@ -8,9 +8,10 @@ import graft.model.Messages
 import graft.model.Messages._
 
 /** The topic parsers, each one `from_csv` projection plus one select of
-  * coercions, against the `withColumn` chain they replaced (kept below
-  * verbatim): same schema — column order, types, nullability — and the
-  * same rows, over edge-case lines.
+  * coercions, against the `withColumn` chain they replaced (kept below,
+  * over the same cell coercions, `Messages.longEmptyAsZero` and the
+  * rest): same schema — column order, types, nullability — and the same
+  * rows, over edge-case lines.
   */
 class MessagesChainParitySpec extends SparkSpec {
   import spark.implicits._
@@ -27,7 +28,7 @@ class MessagesChainParitySpec extends SparkSpec {
       parseTsv(raw, lineCol, unicastPrefixSchema)
         .withColumn("isIPv4", boolCell(col("isIPv4")))
         .withColumn("origin_as", longEmptyAsZero(col("origin_as")))
-        .withColumn("prefix_len", longEmptyAsZero(col("prefix_len")).cast(IntegerType))
+        .withColumn("prefix_len", intEmptyAsZero(col("prefix_len")))
         .withColumn("timestamp", parseTs(col("timestamp")))
         .withColumn("ts_us", unix_micros(col("timestamp")))
         .withColumn("isWithdrawn", boolCell(col("isWithdrawn")))
@@ -47,7 +48,7 @@ class MessagesChainParitySpec extends SparkSpec {
         .withColumn("ext_community_list", strArray(col("ext_community_list")))
         .withColumn("large_community_list", strArray(col("large_community_list")))
         .withColumn("cluster_list", strArray(col("cluster_list")))
-        .withColumn("as_path_count", longEmptyAsZero(col("as_path_count")).cast(IntegerType))
+        .withColumn("as_path_count", intEmptyAsZero(col("as_path_count")))
         .withColumn("nexthop_isIPv4", boolCell(col("nexthop_isIPv4")))
         .withColumn("timestamp", parseTs(col("timestamp")))
         .withColumn("ts_us", unix_micros(col("timestamp")))
@@ -77,14 +78,14 @@ class MessagesChainParitySpec extends SparkSpec {
     def collectorFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
       parseTsv(raw, lineCol, collectorSchema)
         .withColumn("state", when(col("action") === "stopped", lit("down")).otherwise(lit("up")))
-        .withColumn("router_count", longEmptyAsZero(col("router_count")).cast(IntegerType))
+        .withColumn("router_count", intEmptyAsZero(col("router_count")))
         .withColumn("timestamp", parseTs(col("timestamp")))
         .withColumn("ts_us", unix_micros(col("timestamp")))
     def l3vpnFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
       parseTsv(raw, lineCol, l3vpnSchema)
         .withColumn("isIPv4", boolCell(col("isIPv4")))
         .withColumn("origin_as", longEmptyAsZero(col("origin_as")))
-        .withColumn("prefix_len", longEmptyAsZero(col("prefix_len")).cast(IntegerType))
+        .withColumn("prefix_len", intEmptyAsZero(col("prefix_len")))
         .withColumn("timestamp", parseTs(col("timestamp")))
         .withColumn("ts_us", unix_micros(col("timestamp")))
         .withColumn("isWithdrawn", boolCell(col("isWithdrawn")))
@@ -112,7 +113,7 @@ class MessagesChainParitySpec extends SparkSpec {
         .withColumn("remote_asn", longEmptyAsZero(col("remote_asn")))
     def lsPrefixFromTsv(raw: DataFrame, lineCol: String = "line"): DataFrame =
       lsCommon(parseTsv(raw, lineCol, lsPrefixSchema).withColumn("protocol", lit("")))
-        .withColumn("prefix_len", longEmptyAsZero(col("prefix_len")).cast(IntegerType))
+        .withColumn("prefix_len", intEmptyAsZero(col("prefix_len")))
         .withColumn("metric", longEmptyAsZero(col("metric")))
         .withColumn("ospf_route_type",
           when(col("ospf_route_type").isin(OspfRouteTypes.toSeq: _*),
@@ -128,18 +129,19 @@ class MessagesChainParitySpec extends SparkSpec {
 
   // ---- edge-case lines ------------------------------------------------
   /** Line k of a schema: cells cycle through empty, padded and bad
-    * numbers, both timestamp formats and a bad one, prefix_len beyond
-    * 128, unknown LS protocols and OSPF route types, and arrays.
+    * numbers, numbers past int range, both timestamp formats and a bad
+    * one, prefix_len beyond 128 and past int range, unknown LS protocols
+    * and OSPF route types, and arrays.
     */
   private def cell(field: String, k: Int): String = {
     def pick(xs: String*) = xs(k % xs.size)
     field match {
       case "timestamp" => pick("2024-01-01 00:00:01.123456", "2024-01-01 00:00:02", "garbage", "")
-      case "prefix_len" => pick("24", "129", "", " 128 ", "200")
+      case "prefix_len" => pick("24", "129", "", " 128 ", "200", "99999999999")
       case "protocol" => pick("OSPFv2", "BOGUS", "", "IS-IS_L1", "ospfv2")
       case "ospf_route_type" => pick("Intra", "Weird", "", "Ext-2")
       case "action" => pick("up", "first", "term", "stopped", "down", "init", "started")
-      case _ => pick("", "7", " 12 ", "1 2  3", "true", "t", "abc", "0", "1")
+      case _ => pick("", "7", " 12 ", "1 2  3", "true", "t", "abc", "0", "1", "99999999999")
     }
   }
   private def lines(schema: StructType): Seq[String] =
@@ -199,6 +201,26 @@ class MessagesChainParitySpec extends SparkSpec {
       assert(Messages.lsNodeFromTsv(lines(lsNodeSchema).toDF("line"))
         .filter(col("protocol") === "OSPFv2").count() > 0)
     }
+  }
+
+  test("an int cell past int range reads 0 and a long one keeps its value, ANSI on and off") {
+    val line = collectorSchema.fieldNames.map {
+      case "router_count" => "99999999999"
+      case "timestamp" => "2024-01-01 00:00:01.000000"
+      case _ => "x"
+    }.mkString("\t")
+    val prefix = unicastPrefixSchema.fieldNames.map {
+      case "prefix_len" => "4294967320" // 2^32 + 24: wraps to 24 under a plain cast
+      case "origin_as" => "99999999999"
+      case "timestamp" => "2024-01-01 00:00:01.000000"
+      case _ => "1"
+    }.mkString("\t")
+    def read(): (Int, Seq[(Int, Long)]) = (
+      Messages.collectorFromTsv(Seq(line).toDF("line")).select("router_count").head.getInt(0),
+      Messages.unicastPrefixFromTsv(Seq(prefix).toDF("line")).select("prefix_len", "origin_as")
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq)
+    assert(read() === ((0, Seq((0, 99999999999L)))))
+    assert(ansiOff(read()) === ((0, Seq((0, 99999999999L)))))
   }
 
   test("bmpStatFromTsv as Queries uses it (an extra key column) equals the chain") {
